@@ -21,4 +21,10 @@ computes, not HOW), re-expressed Spark-first:
 
 __version__ = "0.1.0"
 
+from deidcm_spark import _zipimport
+
+# every task's start-up invalidation in a Python worker that has imported
+# this package skips the eager zip directory re-reads (see _zipimport)
+_zipimport.install()
+
 from deidcm_spark.schema import SPAN_SCHEMA, DOCUMENTS_SCHEMA  # noqa: F401

@@ -594,8 +594,11 @@ def _packbits_decode(data: bytes, expected_len: int | None = None) -> bytes:
     PS3.5 G.3.1 pads odd-length segments "with zero" — real writers
     (pydicom included) append 0x00, which is NOT a noop control byte, so
     decoding must stop once ``expected_len`` output bytes exist rather
-    than interpret the pad as a 1-byte literal header.  Without an
-    expected length, a single trailing 0x00 is still accepted as pad."""
+    than interpret the pad as a 1-byte literal header.  What is left then
+    must be nothing, that single 0x00 pad, or noop bytes (this module's
+    encoder pads with 0x80); anything else would decode past the plane and
+    raises.  Without an expected length, a single trailing 0x00 is still
+    accepted as pad."""
     out = bytearray()
     i, n = 0, len(data)
     while i < n and (expected_len is None or len(out) < expected_len):
@@ -616,6 +619,10 @@ def _packbits_decode(data: bytes, expected_len: int | None = None) -> bytes:
                 raise ValueError("RLE replicate run missing its byte")
             out.extend(bytes([data[i]]) * (257 - b))
             i += 1
+    rest = data[i:]
+    if rest and rest != b"\x00" and rest.strip(b"\x80"):
+        raise ValueError(
+            f"RLE segment has {len(rest)} bytes past its {expected_len}-byte plane")
     return bytes(out)
 
 

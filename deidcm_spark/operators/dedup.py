@@ -401,10 +401,8 @@ def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     with_bits = rows.groupBy("doc_id").agg(*bit_sums)
     sim = None
     for j in range(bits):
-        # shiftleft, not a Python (1 << j) literal: at bits=64 the j=63
-        # term (2^63) does not fit a signed long literal; the shifted
-        # form sets the sign bit instead, which is fine — band extraction
-        # masks after the shift and hamming works on the bit pattern
+        # bits <= 32, so every term fits a long with the sign bit clear;
+        # shiftleft builds it in the long domain without a per-bit literal
         term = F.shiftleft(
             F.when(F.col(f"b{j}") > 0, F.lit(1).cast("long")).otherwise(
                 F.lit(0).cast("long")

@@ -326,7 +326,7 @@ def pil_image_mode(bits: int, samples: int, has_window: bool) -> str:
         return "L"
     if bits == 8 and samples == 3:
         return "RGB"
-    if bits == 16:
+    if 8 < bits <= 16:  # 2-byte samples: BitsStored 12 rides BitsAllocated 16
         return "I;16"
     raise TypeError(
         "Don't know PIL mode for %d BitsAllocated and %d SamplesPerPixel"
@@ -361,7 +361,7 @@ def decode_frame(
     has_window = window is not None and level is not None
     mode = pil_image_mode(bits, samples, has_window)
     if has_window:
-        raw_mode = "I;16" if bits == 16 else ("RGB" if samples == 3 else "L")
+        raw_mode = "I;16" if bits > 8 else ("RGB" if samples == 3 else "L")
         src = frame_from_buffer(raw_mode, raw, width, height)
         out = lut_window_level(src, window, level)
         if out.ndim == 3:
@@ -470,10 +470,10 @@ def transform_media(
                         "height": arr.shape[0],
                         "channels": 1 if arr.ndim == 2 else arr.shape[2],
                         # derive from the ACTUAL dtype: normalize=False
-                        # leaves 16-bit payloads as uint16, and a
-                        # hard-coded bits=8 would make decode_payload
-                        # misread the buffer (2x element count)
-                        "bits": 16 if arr.dtype.itemsize == 2 else 8,
+                        # leaves >8-bit payloads as uint16 (keep their
+                        # stored depth, e.g. 12), and a hard-coded bits=8
+                        # would make decode_payload misread the buffer
+                        "bits": int(bits) if arr.dtype.itemsize == 2 else 8,
                         "pixels": arr.tobytes(),
                     }
                 )
@@ -483,8 +483,10 @@ def transform_media(
 
 
 def decode_payload(row: dict | pd.Series) -> np.ndarray:
-    """binary column + typed metadata → ndarray (S8 analogue, dicom2png.py:15-51)."""
-    dtype = np.uint16 if row["bits"] == 16 else np.uint8
+    """binary column + typed metadata → ndarray (S8 analogue, dicom2png.py:15-51).
+    Repo-wide payload convention: ``bits > 8`` → 2-byte samples (12-bit
+    JPEG-LL frames ride in uint16 storage, as in ``png.render_png``)."""
+    dtype = np.uint16 if row["bits"] > 8 else np.uint8
     arr = np.frombuffer(row["pixels"], dtype=dtype)
     shape = (row["height"], row["width"]) if row["channels"] == 1 else (
         row["height"], row["width"], row["channels"])

@@ -43,12 +43,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-RULES_SCHEMA = (
-    "host string, agent string, rule string, pattern string, "
-    "pattern_len int, regex string"
-)
-SITEMAPS_SCHEMA = "host string, sitemap string"
-
 _DIRECTIVE = re.compile(r"^\s*([A-Za-z-]+)\s*:\s*(.*?)\s*$")
 
 

@@ -199,6 +199,25 @@ def test_packbits_decode_zero_padded_segment():
         _packbits_decode(b"\x05ab\x00")
 
 
+def test_packbits_decode_accepts_only_pad_after_expected_len():
+    """Once the expected plane length is decoded, what is left may be
+    nothing, the single G.3.1 0x00 pad, or noop bytes (the encoder's 0x80
+    filler) — never data that would decode past the plane."""
+    data = b"\x02\x10\x20\x30"  # 3-byte literal
+    assert _packbits_decode(data, 3) == b"\x10\x20\x30"
+    assert _packbits_decode(data + b"\x00", 3) == b"\x10\x20\x30"
+    assert _packbits_decode(data + b"\x80", 3) == b"\x10\x20\x30"
+    for extra in (b"\x00\x00", b"\x01\x40\x50", b"\xff\x07", b"\x00\x41"):
+        with pytest.raises(ValueError, match="past its 3-byte plane"):
+            _packbits_decode(data + extra, 3)
+    # a mismatched-dimension stream surfaces at the frame level too
+    seg = data + b"\x01\x40\x50"
+    frame = struct.pack("<16I", 1, 64, *([0] * 14)) + seg + b"\x00"
+    with pytest.raises(ValueError, match="past its 3-byte plane"):
+        _rle_decode_frame(frame, 3)
+    assert _rle_decode_frame(frame, 5) == b"\x10\x20\x30\x40\x50"
+
+
 def test_frame_with_zero_padded_segments_decodes():
     pixels = bytes([9, 8, 7, 6, 5])
     # two literal runs totaling 7 encoded bytes (odd) + the G.3.1 zero pad

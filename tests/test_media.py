@@ -12,6 +12,7 @@ from deidcm_spark.operators.media import (
     redaction_plan,
 )
 from deidcm_spark.oracle import redact_pixels_oracle
+from deidcm_spark.schema import MEDIA_PAYLOADS_SCHEMA, OCR_BOXES_SCHEMA
 
 SEED = 5
 N_DOCS = 120
@@ -129,18 +130,53 @@ def test_no_boxes_identity(spark):
 
 def test_pil_image_mode_dispatch_table():
     """M6: get_PIL_image's mode table (deid_mammogram.py:108-125) —
-    (8,1)→L, (8,3)→RGB, (16,*)→I;16, window present→L, unknown→TypeError."""
+    (8,1)→L, (8,3)→RGB, (16,*)→I;16, window present→L, unknown→TypeError.
+    Payload bits 9-16 are 2-byte samples (BitsStored 12 rides
+    BitsAllocated 16), so they take the reference's 16-bit row."""
     from deidcm_spark.operators.media import pil_image_mode
 
     assert pil_image_mode(8, 1, False) == "L"
     assert pil_image_mode(8, 3, False) == "RGB"
     assert pil_image_mode(16, 1, False) == "I;16"
     assert pil_image_mode(16, 3, False) == "I;16"
+    assert pil_image_mode(12, 1, False) == "I;16"
     assert pil_image_mode(12, 1, True) == "L"  # LUT output is always 8-bit L
     import pytest as _pytest
 
-    with _pytest.raises(TypeError, match="Don't know PIL mode"):
-        pil_image_mode(12, 1, False)
+    for bits, samples in ((8, 2), (32, 1), (4, 1)):
+        with _pytest.raises(TypeError, match="Don't know PIL mode"):
+            pil_image_mode(bits, samples, False)
+
+
+def test_redact_media_12bit_payload(spark):
+    """bits=12 payloads (BitsStored 12 in 2-byte samples, as parse_part10
+    emits for 12-bit JPEG-LL) decode as uint16 and redact in place, the
+    stored depth kept: uint8 would read twice the elements and fail the
+    reshape."""
+    import pandas as pd
+
+    w, h = 24, 16
+    vals = (np.arange(w * h, dtype=np.uint16) * 37 % 4096).reshape(h, w)
+    row = {"media_ref": "m/12bit", "width": w, "height": h,
+           "channels": 1, "bits": 12, "pixels": vals.tobytes()}
+    got = decode_payload(row)
+    assert got.dtype == np.uint16 and np.array_equal(got, vals)
+    from deidcm_spark.operators.media import decode_frame, lut_window_level
+
+    assert np.array_equal(decode_frame(vals.tobytes(), w, h, bits=12), vals)
+    lut = decode_frame(vals.tobytes(), w, h, bits=12, window=2000, level=1500)
+    assert np.array_equal(lut, lut_window_level(vals, 2000, 1500).astype(np.uint8))
+
+    box = {"media_ref": "m/12bit", "box_idx": 0, "x1": 3, "y1": 2,
+           "x2": 9, "y2": 6, "word": "SMITH", "confidence": 0.9}
+    payloads = spark.createDataFrame(pd.DataFrame([row]), MEDIA_PAYLOADS_SCHEMA)
+    boxes = spark.createDataFrame(pd.DataFrame([box]), OCR_BOXES_SCHEMA)
+    (out,) = redact_media(payloads, boxes, margin=1).collect()
+    assert out["bits"] == 12
+    red = decode_payload(out.asDict())
+    expected = redact_array(vals, [box], margin=1)
+    assert red.dtype == np.uint16 and np.array_equal(red, expected)
+    assert (red[1:8, 2:11] == 0).all() and red.sum() < vals.sum()
 
 
 def test_decode_frame_modes_and_window():
