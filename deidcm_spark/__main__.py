@@ -190,6 +190,7 @@ def cmd_semdedup(args) -> dict:
     spark = _spark("deidcm_semdedup", args.shuffle_partitions)
     from deidcm_spark.operators.semdedup import semdedup
     from deidcm_spark.operators.similarity import ivf_centroids
+    from deidcm_spark.schema import local_frame
 
     emb = spark.read.parquet(args.input).select("vec_id", "embedding")
     if args.codebook:
@@ -197,7 +198,8 @@ def cmd_semdedup(args) -> dict:
         cents = [list(r["centroid"]) for r in rows]
     else:
         cents = ivf_centroids(emb, n_centroids=args.centroids)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cluster int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(args.output + "/codebook")
@@ -302,6 +304,7 @@ def cmd_bpe(args) -> dict:
     drop under the SAME tokenizer)."""
     spark = _spark("deidcm_bpe", args.shuffle_partitions)
     from deidcm_spark.operators.bpe import bpe_token_count, train_bpe
+    from deidcm_spark.schema import local_frame
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
     if args.merges:
@@ -311,7 +314,8 @@ def cmd_bpe(args) -> dict:
         ref = (spark.read.parquet(args.reference).select("doc_id", "text")
                if args.reference else docs)
         merges = train_bpe(ref, n_merges=args.n_merges)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     ).coalesce(1).write.mode("overwrite").parquet(args.output + "/merges")
@@ -439,6 +443,7 @@ def cmd_sketch(args) -> dict:
     cardinality estimate, CMS answers --query items from <output>/est."""
     spark = _spark("deidcm_sketch", args.shuffle_partitions)
     from deidcm_spark.operators import sketch as sk
+    from deidcm_spark.schema import local_frame
 
     import os
 
@@ -474,8 +479,8 @@ def cmd_sketch(args) -> dict:
         built.write.mode("overwrite").parquet(args.output)
         summary["counters"] = spark.read.parquet(args.output).count()
         if args.query:
-            items = spark.createDataFrame(
-                [(q,) for q in args.query], f"{args.col} string"
+            items = local_frame(
+                spark, [(q,) for q in args.query], f"{args.col} string"
             )
             got = sk.cms_query(
                 spark.read.parquet(args.output), items, args.col,
@@ -635,6 +640,7 @@ def cmd_pq(args) -> dict:
     land in <output>/coarse, and searches probe --nprobe lists."""
     spark = _spark("deidcm_pq", args.shuffle_partitions)
     from deidcm_spark.operators import pq as pqop
+    from deidcm_spark.schema import local_frame
 
     emb = spark.read.parquet(args.input)
     coarse = None
@@ -643,7 +649,8 @@ def cmd_pq(args) -> dict:
             emb, nlist=args.nlist, m=args.m, ksub=args.ksub,
             lloyd_iters=args.iters, normalize=args.normalize,
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, c) for i, c in enumerate(coarse)],
             "list_id int, centroid array<double>",
         ).write.mode("overwrite").parquet(args.output + "/coarse")
@@ -659,8 +666,8 @@ def cmd_pq(args) -> dict:
         for s in range(len(books))
         for c in range(len(books[s]))
     ]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
+    local_frame(
+        spark, rows, "sub int, code int, centroid array<double>"
     ).write.mode("overwrite").parquet(args.output + "/codebook")
     enc.write.mode("overwrite").parquet(args.output + "/codes")
     codes = spark.read.parquet(args.output + "/codes")

@@ -17,18 +17,34 @@ lineage append would ride one transaction, see SURVEY.md §4):
    appended only after the bucket's data is on disk.
 
 Resume = anti-join of the bucket domain against committed lineage: only
-missing buckets are recomputed.  Bucket metrics are aggregated from the
-WRITTEN output (column-pruned parquet read of the counter columns), never by
-re-running the UDF stage.
+missing buckets are recomputed.
+
+The deid job's bucket counters come from the write job itself: the Arrow
+kernel already computes every document's counters, so each output batch is
+tallied per bucket in the worker (``pyarrow`` ``group_by``) and summed on the
+driver through an accumulator.  Step 1 is therefore ONE data-writing Spark
+action, and step 2 appends a driver-local table — nothing under ``data/`` is
+read back, nothing is recomputed.  The counters are exactly-once because the
+kernel runs in the write job's result stage (see :func:`run_deid_job`).  The
+extraction job still aggregates its counters from the WRITTEN output: its
+Python stage never sees ``bucket``.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.accumulators import AccumulatorParam, _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from deidcm_spark.operators.deidentify import deidentify_attributes
+from deidcm_spark.schema import LINEAGE_SCHEMA, local_frame
+
+# per-bucket counters of a deid lineage row, in LINEAGE_SCHEMA order
+COUNTERS = ("n_docs", "n_spans_in", "n_spans_out", "n_removed", "n_erased",
+            "n_pseudonymized", "n_kept")
 
 
 def _lineage_path(out_dir: str) -> str:
@@ -72,6 +88,43 @@ def committed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return _read_parquet_or_none(spark, _lineage_path(out_dir))
+
+
+class _CounterSums(AccumulatorParam):
+    """Accumulator of ``{bucket: [counter, ...]}`` (COUNTERS order), merged
+    by element-wise sum."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for bucket, counts in other.items():
+            prev = acc.get(bucket)
+            acc[bucket] = counts if prev is None else [a + b for a, b in zip(prev, counts)]
+        return acc
+
+
+def _bucket_counts(batch) -> dict:
+    """COUNTERS of one deid kernel output batch, per bucket.  n_spans_in
+    counts the input's TEXT spans (one action each); n_spans_out counts
+    every output span, media and marker included."""
+    rm, er, ps, kp = (batch.column(c) for c in COUNTERS[3:])
+    table = pa.table({
+        "bucket": batch.column("bucket"),
+        "n_spans_in": pc.add(pc.add(rm, er), pc.add(ps, kp)),
+        "n_spans_out": pc.list_value_length(batch.column("spans")),
+        "n_removed": rm, "n_erased": er, "n_pseudonymized": ps, "n_kept": kp,
+    })
+    sums = table.group_by("bucket").aggregate(
+        [("bucket", "count")] + [(c, "sum") for c in COUNTERS[1:]]
+    ).to_pydict()
+    return {
+        b: list(counts)
+        for b, *counts in zip(
+            sums["bucket"], sums["bucket_count"],
+            *(sums[f"{c}_sum"] for c in COUNTERS[1:]),
+        )
+    }
 
 
 def bucket_expr(salt: str, n_buckets: int):
@@ -144,6 +197,15 @@ def run_deid_job(
     is skipped, and the plan is scan → filter → mapInArrow → sink.  At
     32 local cores that shuffle is the measured kernel-time bottleneck
     (BENCH/BASELINE.md); on a real cluster it is the network-heavy stage.
+
+    An attempt is one data-writing Spark action plus one single-file append
+    of a driver-local lineage table.  The lineage counters are tallied per
+    bucket on the kernel's output batches and summed through an accumulator
+    — not read back from ``data/``.  They are exactly-once because the
+    kernel runs in the write job's RESULT stage: Spark applies a result
+    task's accumulator update only when it succeeds, and only once per
+    partition (failed, retried and speculative duplicates are dropped).
+    Pending buckets with no documents commit all-zero rows.
     """
     done = committed_buckets(spark, out_dir, run_id)
     pending = sorted(set(range(n_buckets)) - done)
@@ -187,50 +249,47 @@ def run_deid_job(
     todo = bucketed.filter(F.col("bucket").isin(pending))
     if not input_bucketed:
         # salted repartition happens here: one shuffle, partitioned by bucket
-        # so the dynamic-overwrite write aligns with processing partitions
-        todo = todo.repartition(len(pending), "bucket")
-    result = deidentify_attributes(
-        todo, org_root, salt, with_metrics=True,
-        date_mode=date_mode, date_offset=date_offset,
-    )
+        # so the dynamic-overwrite write aligns with processing partitions.
+        # No more partitions than cores: hashing N buckets into N partitions
+        # leaves some empty, and an empty Python task still costs ~0.1 s
+        n_parts = min(len(pending), spark.sparkContext.defaultParallelism)
+        todo = todo.repartition(n_parts, "bucket")
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    tally = spark.sparkContext.accumulator({}, _CounterSums())
+    try:
+        # exactly-once: the kernel (and with it every tally.add) runs in the
+        # write job's result stage — after the bucket exchange, or straight
+        # off the bucketed scan — where Spark applies each partition's
+        # accumulator update once, from its one successful attempt.  Never
+        # move the kernel into a shuffle-map stage: those tasks re-run on a
+        # fetch failure and their updates would count twice.
+        result = deidentify_attributes(
+            todo, org_root, salt, with_metrics=True,
+            date_mode=date_mode, date_offset=date_offset,
+            observe=lambda batch: tally.add(_bucket_counts(batch)),
+        )
+        (
+            result.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(_data_path(out_dir))
+        )
+        counts = tally.value
+    finally:
+        # the driver registry keeps every accumulator ever made; this one is
+        # done once its job has ended (later task results are not merged)
+        _accumulatorRegistry.pop(tally.aid, None)
+
+    # every pending bucket commits, an EMPTY one as zeros (otherwise a
+    # doc-less bucket would be "pending" forever on resume)
+    zeros = [0] * len(COUNTERS)
+    rows = [(run_id, b, *counts.get(b, zeros), "committed") for b in pending]
     (
-        result.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(_data_path(out_dir))
+        local_frame(spark, rows, LINEAGE_SCHEMA)
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(_lineage_path(out_dir))
     )
-
-    # lineage metrics from the WRITTEN data (column-pruned scan, no recompute)
-    written = spark.read.parquet(_data_path(out_dir)).filter(
-        F.col("bucket").isin(pending)
-    )
-    # right-join against the full pending list so EMPTY buckets also commit
-    # (otherwise a doc-less bucket would be "pending" forever on resume)
-    pending_df = spark.createDataFrame([(b,) for b in pending], "bucket: int")
-    lineage_rows = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").cast("int").alias("n_docs"),
-            F.sum(F.col("n_removed") + F.col("n_erased") + F.col("n_pseudonymized") + F.col("n_kept"))
-            .cast("int")
-            .alias("n_spans_in"),
-            F.sum(F.size("spans")).cast("int").alias("n_spans_out"),
-            F.sum("n_removed").cast("int").alias("n_removed"),
-            F.sum("n_erased").cast("int").alias("n_erased"),
-            F.sum("n_pseudonymized").cast("int").alias("n_pseudonymized"),
-            F.sum("n_kept").cast("int").alias("n_kept"),
-        )
-        .join(pending_df, "bucket", "right")
-        .na.fill(0)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("committed"))
-        .select(
-            "run_id", "bucket", "n_docs", "n_spans_in", "n_spans_out",
-            "n_removed", "n_erased", "n_pseudonymized", "n_kept", "status",
-        )
-    )
-    lineage_rows.write.mode("append").parquet(_lineage_path(out_dir))
     summary["processed"] = len(pending)
 
     # completion reconciliation: once every bucket is committed, the
@@ -312,13 +371,17 @@ def run_extract_job(
         F.pmod(F.xxhash64("doc_id", F.lit(salt)), F.lit(n_buckets)).cast("int"),
     )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    result.write.mode("overwrite").partitionBy("bucket").parquet(_data_path(out_dir))
+    (
+        result.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(_data_path(out_dir))
+    )
 
     written = spark.read.parquet(_data_path(out_dir)).filter(
         F.col("bucket").isin(pending)
     )
-    pending_df = spark.createDataFrame([(b,) for b in pending], "bucket: int")
+    pending_df = local_frame(spark, [(b,) for b in pending], "bucket: int")
     lineage_rows = (
         written.groupBy("bucket")
         .agg(

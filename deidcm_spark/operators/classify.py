@@ -53,6 +53,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.sampling import _bucket_expr, _gram_expr, _H32
+from deidcm_spark.schema import local_frame
 
 
 def nb_train(
@@ -104,7 +105,8 @@ def nb_train(
     n_neg = neg.count()
 
     weights = (
-        pos.sparkSession.createDataFrame(
+        local_frame(
+            pos.sparkSession,
             [(b, pc.get(b), qc.get(b)) for b in sorted(set(pc) | set(qc))],
             "bucket bigint, n_pos bigint, n_neg bigint",
         )
@@ -144,7 +146,8 @@ def save_model(weights: DataFrame, meta: dict, path: str) -> None:
     training is associative (bucket counts re-aggregate), so shard models
     can also be rebuilt from merged count tables at any time."""
     weights.write.mode("overwrite").parquet(f"{path}/weights")
-    weights.sparkSession.createDataFrame(
+    local_frame(
+        weights.sparkSession,
         [(float(meta["bias"]), float(meta["w_unseen"]), int(meta["n_pos"]),
           int(meta["n_neg"]), int(meta["n_buckets"]), int(meta["ngram"]),
           str(meta["hash_impl"]))],

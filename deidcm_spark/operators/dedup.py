@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.textops import NORM_FP, SHINGLES, TOKENS
+from deidcm_spark.schema import local_frame
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -742,8 +743,8 @@ def embedding_neardup_pairs(
         emb.filter(F.col("embedding").isNotNull()).select("embedding").head()
     )
     if head is None:  # empty corpus → empty pair table, not a crash
-        return emb.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
+        return local_frame(
+            emb.sparkSession, [], "id_a long, id_b long, cosine double"
         )
     dim = len(head["embedding"])
     bits = [hyperplane_sign_expr("embedding", p, dim) for p in range(n_planes)]

@@ -203,6 +203,7 @@ def deidentify_attributes(
     date_mode: str = "first_day_year",
     date_offset: int = 100000,
     impl: str = "arrow",
+    observe=None,
 ) -> DataFrame:
     """Spark-native analogue of the reference's ``deidentify_attributes``
     (deid_mammogram.py:270-312): documents in, de-identified documents out.
@@ -215,6 +216,10 @@ def deidentify_attributes(
     (operators/deidentify_arrow.py — no per-span Python objects);
     ``impl='pandas'`` runs the original scalar pandas UDF (kept as the
     equality cross-check and readability reference).
+
+    ``observe`` (arrow only) is called in the worker on every kernel output
+    batch — ``(doc_id, spans, *passthrough, n_removed, n_erased,
+    n_pseudonymized, n_kept)`` — before the final projection.
     """
     if num_partitions:
         df = df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(salt)))
@@ -237,7 +242,8 @@ def deidentify_attributes(
                 StructField("n_kept", IntegerType(), False),
             ]
         )
-        fn = make_deidentify_arrow_fn(org_root, salt, date_mode, date_offset)
+        fn = make_deidentify_arrow_fn(org_root, salt, date_mode, date_offset,
+                                      observe)
         result = df.mapInArrow(fn, out_schema)
         cols = ["doc_id", "spans", *passthrough]
         if with_metrics:
@@ -246,6 +252,8 @@ def deidentify_attributes(
 
     if impl != "pandas":
         raise ValueError(f"unknown impl {impl!r}")
+    if observe is not None:
+        raise ValueError("observe needs impl='arrow'")
     udf = make_deidentify_udf(org_root, salt, date_mode, date_offset)
     result = df.withColumn("_deid", udf(F.col("doc_id"), F.col("spans")))
     # preserve any extra caller columns (e.g. a bucket id) — no self-join needed

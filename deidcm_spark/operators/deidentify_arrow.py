@@ -322,11 +322,16 @@ def deidentify_record_batch(
 
 def make_deidentify_arrow_fn(org_root: str, salt: str,
                              date_mode: str = "first_day_year",
-                             date_offset: int = 100000):
+                             date_offset: int = 100000, observe=None):
+    """``observe``, if given, sees every output batch in the worker before
+    it is yielded (lineage tallies its bucket counters this way)."""
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield deidentify_record_batch(
+            out = deidentify_record_batch(
                 batch, org_root, salt, date_mode, date_offset
             )
+            if observe is not None:
+                observe(out)
+            yield out
 
     return run

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.dedup import _release_local_checkpoint
+from deidcm_spark.schema import local_frame
 
 # scheme matching is case-insensitive (RFC 3986 §3.1: "HTTP://x" is the
 # same resource) — the scoped (?i:) group behaves identically in
@@ -383,8 +384,8 @@ def domain_filter(
     if mode not in ("remove", "flag"):
         raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
     if not isinstance(blocked, DataFrame):
-        blocked = df.sparkSession.createDataFrame(
-            [(d,) for d in blocked], "domain string"
+        blocked = local_frame(
+            df.sparkSession, [(d,) for d in blocked], "domain string"
         )
     bl = blocked.select(F.lower(F.trim("domain")).alias("_dom")).distinct()
     hosts = canonicalize_url(df, url_col).select("doc_id", "host")

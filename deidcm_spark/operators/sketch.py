@@ -52,6 +52,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from deidcm_spark.schema import local_frame
+
 HLL_HASH_BITS = 60  # 15 md5 hex digits — the repo-wide portable integer
 
 
@@ -316,9 +318,10 @@ def heavy_hitters(
     # pruning them first shrinks every broadcast side
     if sketch is None:
         built = cms_build(grams, "gram", width, depth, hash_impl=hash_impl)
-        hot = df.sparkSession.createDataFrame(
+        hot = local_frame(
+            df.sparkSession,
             built.filter(F.col("cnt") >= min_count).collect(),
-            schema="row_idx int, col_idx int, cnt bigint",
+            "row_idx int, col_idx int, cnt bigint",
         )
     else:
         hot = sketch.filter(F.col("cnt") >= min_count)

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from deidcm_spark.schema import local_frame
+
 TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
 
 # whitespace-normalized exact-dedup fingerprint — ONE definition (Spark
@@ -591,7 +593,7 @@ def _prefix_tokens(
         offsets.append((blk, acc))
         acc += t
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, "_blk: long, _off: long")
+    off_df = local_frame(spark, offsets, "_blk: long, _off: long")
 
     from pyspark.sql import Window
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from deidcm_spark.operators.deidentify import deidentify_attributes
-from deidcm_spark.schema import DOCUMENTS_SCHEMA
+from deidcm_spark.schema import DOCUMENTS_SCHEMA, local_frame
 
 
 def _idempotent_write(out: DataFrame, batch_id: int, out_dir: str) -> None:
@@ -429,7 +429,7 @@ def _bloom_ingest_batch(
         cond = getattr(e, "getCondition", e.getErrorClass)()
         if cond != "PATH_NOT_FOUND":
             raise
-        prior = spark.createDataFrame([], "word_idx bigint, bits bigint")
+        prior = local_frame(spark, [], "word_idx bigint, bits bigint")
 
     batch_df = batch_df.persist()
     try:

@@ -202,3 +202,223 @@ def test_lineage_read_fallback_only_on_path_not_found(spark, tmp_path):
     (bad / "_lineage").mkdir(parents=True)
     with pytest.raises(Exception, match="(?i)schema|parquet|infer"):
         committed_buckets(spark, str(bad), "r")
+
+
+# ---------------------------------------------------------------------------
+# the one-pass commit: counters tallied by the write job itself
+# ---------------------------------------------------------------------------
+
+def _lineage_vs_data(out, run_id, n_buckets):
+    """(lineage counters, the same counters re-aggregated from the parquet
+    files under data/) per bucket, every bucket of range(n_buckets)."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from deidcm_spark.lineage import COUNTERS
+
+    lin = pq.read_table(os.path.join(out, "_lineage")).to_pylist()
+    got = {r["bucket"]: tuple(r[c] for c in COUNTERS)
+           for r in lin if r["run_id"] == run_id}
+    assert len(got) == sum(r["run_id"] == run_id for r in lin)  # one row each
+
+    want = {b: (0,) * len(COUNTERS) for b in range(n_buckets)}
+    data_dir = os.path.join(out, "data")
+    for part in os.listdir(data_dir):
+        if not part.startswith("bucket="):
+            continue
+        t = pq.read_table(os.path.join(data_dir, part))
+        rm, er, ps, kp = (pc.sum(t[c]).as_py() or 0 for c in COUNTERS[3:])
+        want[int(part.split("=")[1])] = (
+            t.num_rows, rm + er + ps + kp,
+            pc.sum(pc.list_value_length(t["spans"])).as_py() or 0,
+            rm, er, ps, kp,
+        )
+    return got, want
+
+
+@pytest.mark.parametrize("case", ["shuffled", "bucketed", "resumed", "empty_bucket"])
+def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, case):
+    """Every counter of every committed bucket equals a re-aggregation of
+    the parquet written under data/ — shuffled, pre-bucketed, after a
+    crash + resume, and for a pending bucket holding no document."""
+    from deidcm_spark.lineage import bucket_expr, prepare_bucketed_corpus
+
+    out = str(tmp_path / case)
+    docs = _docs(spark, 120)
+    if case == "shuffled":
+        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    elif case == "bucketed":
+        prepare_bucketed_corpus(docs, "bt_counters_corpus", SALT, N_BUCKETS)
+        s = run_deid_job(spark, spark.table("bt_counters_corpus"), out, ORG_ROOT,
+                         SALT, N_BUCKETS, "r1", input_bucketed=True)
+        assert s["reconciled_docs"] == 120
+    elif case == "resumed":
+        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
+                     max_buckets_this_attempt=3)
+        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    else:
+        docs = docs.filter(bucket_expr(SALT, N_BUCKETS) != 3)  # bucket 3 empty
+        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    got, want = _lineage_vs_data(out, "r1", N_BUCKETS)
+    assert got == want
+    assert sum(v[0] for v in got.values()) == docs.count()
+    if case == "empty_bucket":
+        assert got[3] == (0,) * 7
+
+
+def test_lineage_is_one_file_per_attempt(spark, tmp_path):
+    import glob
+
+    out = str(tmp_path / "files")
+    docs = _docs(spark, 60)
+    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
+                 max_buckets_this_attempt=5)
+    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    assert len(glob.glob(f"{out}/_lineage/*.parquet")) == 2
+    schema = read_lineage(spark, out).schema
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+        ("run_id", "string"), ("bucket", "int"), ("n_docs", "int"),
+        ("n_spans_in", "int"), ("n_spans_out", "int"), ("n_removed", "int"),
+        ("n_erased", "int"), ("n_pseudonymized", "int"), ("n_kept", "int"),
+        ("status", "string"),
+    ]
+
+
+def test_deid_commit_reads_nothing_back_and_pickles_no_frame(spark, tmp_path, monkeypatch):
+    """The commit takes its counters from the write job: run_deid_job reads
+    no file under data/ and builds no Python-pickled frame (a list-based
+    createDataFrame parallelizes through Python workers)."""
+    import os
+
+    from pyspark import SparkContext
+
+    out = str(tmp_path / "oneshot")
+    docs = _docs(spark, 80)
+    data_dir = os.path.join(out, "data")
+    reads, parallelized = [], []
+    reader = type(spark.read)
+    for name in ("parquet", "load"):
+        real = getattr(reader, name)
+        monkeypatch.setattr(
+            reader, name,
+            lambda self, *paths, _real=real, **kw: reads.extend(map(str, paths))
+            or _real(self, *paths, **kw),
+        )
+    real_par = SparkContext.parallelize
+    monkeypatch.setattr(
+        SparkContext, "parallelize",
+        lambda self, *a, **kw: parallelized.append(a) or real_par(self, *a, **kw),
+    )
+    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
+                 max_buckets_this_attempt=3)
+    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    monkeypatch.undo()
+    assert reads, "the lineage log is still read for the resume anti-join"
+    assert not [p for p in reads if p.startswith(data_dir)], reads
+    assert parallelized == []
+    got, want = _lineage_vs_data(out, "r1", N_BUCKETS)
+    assert got == want
+
+
+def test_jobs_leave_the_session_overwrite_mode_alone(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: after both
+    bucket-commit jobs a later partitioned overwrite in the caller's
+    session still replaces the whole table."""
+    from deidcm_spark.lineage import run_extract_job
+    from deidcm_spark.schema import local_frame
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        run_deid_job(spark, _docs(spark, 40), str(tmp_path / "d"), ORG_ROOT,
+                     SALT, N_BUCKETS, "r1")
+        raw = local_frame(
+            spark,
+            [(i, f"<html><body><p>Paragraph {i} of a short page.</p></body></html>",
+              "en", "web") for i in range(40)],
+            "doc_id long, text string, lang string, source string",
+        )
+        run_extract_job(spark, raw, str(tmp_path / "e"), SALT, n_buckets=N_BUCKETS)
+        assert spark.conf.get(key) == "STATIC"
+        t = str(tmp_path / "t")
+        spark.range(4).withColumn("p", F.col("id") % 2).write.partitionBy("p").parquet(t)
+        spark.range(1).withColumn("p", F.lit(0)).write.mode("overwrite") \
+            .partitionBy("p").parquet(t)
+        assert spark.read.parquet(t).count() == 1
+    finally:
+        spark.conf.set(key, before)
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+
+from pyspark import TaskContext
+
+from deidcm_spark import corpus, lineage
+from deidcm_spark.session import get_spark
+
+out, marker = sys.argv[1], sys.argv[2]
+spark = get_spark(app_name="lineage_retry", master="local[2,2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("OFF")
+real = lineage.deidentify_attributes
+
+
+def flaky(df, *args, **kwargs):
+    # the kernel (and its tally) runs first; a later stage of the SAME task
+    # then fails once, so the failed attempt has already tallied its batches
+    out_df = real(df, *args, **kwargs)
+
+    def fail_once(batches):
+        held = list(batches)
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open(marker, "w").close()
+            raise RuntimeError("injected task failure after the kernel ran")
+        yield from held
+
+    return out_df.mapInArrow(fail_once, out_df.schema)
+
+
+lineage.deidentify_attributes = flaky
+docs = corpus.synth_documents(spark, 200, seed=21, media_rate=0.1, skew=0.05)
+lineage.run_deid_job(spark, docs, out, "9.9.9.9.9", "retry_salt", 8, "r1")
+direct = real(docs, "9.9.9.9.9", "retry_salt", with_metrics=True).selectExpr(
+    "count(*)", "sum(n_removed + n_erased + n_pseudonymized + n_kept)",
+    "sum(size(spans))", "sum(n_removed)", "sum(n_erased)",
+    "sum(n_pseudonymized)", "sum(n_kept)",
+).collect()[0]
+print(json.dumps([int(v) for v in direct]))
+spark.stop()
+"""
+
+
+def test_retried_task_does_not_double_count(tmp_path):
+    """A task that fails once AFTER the kernel tallied its batches is
+    retried; the failed attempt's accumulator update is dropped, so the
+    lineage totals equal the input exactly (fresh interpreter, local[2,2]:
+    two cores, one retry allowed)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from deidcm_spark.lineage import COUNTERS
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out, marker = str(tmp_path / "retry"), str(tmp_path / "failed_once")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, out, marker],
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "PYTHONPATH": root},
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert os.path.exists(marker), "the injected failure never fired"
+    want = json.loads(proc.stdout.strip().splitlines()[-1])
+    got, from_data = _lineage_vs_data(out, "r1", 8)
+    assert got == from_data
+    totals = [sum(v[i] for v in got.values()) for i in range(len(COUNTERS))]
+    assert totals == want
+    assert totals[0] == 200
