@@ -894,12 +894,18 @@ def cmd_qualitygate(args) -> dict:
     signal plus keep/reasons; reports the drop-mass per rule so curation
     can see WHY documents were rejected."""
     spark = _spark("deidcm_qualitygate", args.shuffle_partitions)
+    from pyspark.sql import Observation, functions as SF
+
     from deidcm_spark.operators.textops import quality_gate
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    quality_gate(docs).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
+    gate = quality_gate(docs)
+    # docs/kept ride the gate write: no counting pass over the output
+    seen = Observation()
+    gate.observe(
+        seen, SF.count(SF.lit(1)).alias("docs"), SF.count_if("keep").alias("kept")
+    ).write.mode("overwrite").parquet(args.output)
+    out = spark.read.schema(gate.schema).parquet(args.output)
 
     by_rule = {
         r["reason"]: r["n"]
@@ -907,8 +913,8 @@ def cmd_qualitygate(args) -> dict:
         .groupBy("reason").count().withColumnRenamed("count", "n").collect()
     }
     return {
-        "docs": out.count(),
-        "kept": out.filter("keep").count(),
+        "docs": seen.get["docs"],
+        "kept": seen.get["kept"],
         "dropped_by_rule": dict(sorted(by_rule.items())),
     }
 

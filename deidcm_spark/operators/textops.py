@@ -283,30 +283,78 @@ def quality_gate(df: DataFrame, overrides: dict | None = None) -> DataFrame:
     (unknown keys raise — a typo'd threshold silently gating nothing is
     the failure mode to fear).  Plan shape: scan → project, zero
     exchanges — the filter costs one pass at any corpus size.
+
+    Do not select rows with a ``Filter`` on a derived column
+    (``.filter("keep")``): Catalyst pushes the predicate below the
+    layered projections and re-inlines the whole signal tree into it —
+    38 tokenizer ``split(`` calls per row instead of 1, every interpreted
+    higher-order function re-run per call.  :func:`quality_gate_survivors`
+    returns the kept rows in a form the optimizer cannot push down.
     """
+    sig = _gate_signals(df)
+    return sig.withColumn("reasons", _gate_reasons(overrides)).withColumn(
+        "keep", F.size("reasons") == 0
+    )
+
+
+def quality_gate_survivors(
+    df: DataFrame, overrides: dict | None = None
+) -> DataFrame:
+    """The ``(doc_id, text)`` rows :func:`quality_gate` keeps, in one scan
+    with the tokenizer evaluated once per row.
+
+    ``keep`` is applied through a generator —
+    ``inline(CASE WHEN keep THEN array(struct(doc_id, text)) ELSE
+    array() END)`` — which Catalyst cannot push below the layered
+    projections (a ``Filter`` on ``keep`` gets inlined into the scan; see
+    quality_gate), and no self-join is needed to get the text back.
+    ``text`` is the input's own value (a NULL text is gated as empty but
+    never rewritten), and a NULL ``doc_id`` is dropped, as a ``doc_id``
+    semi-join against the gate would.  ``doc_id`` is taken to be a key:
+    each row is gated on its own text.
+    """
+    sig = _gate_signals(df.withColumn("_raw", F.col("text")), carry=("_raw",))
+    keep = (F.size(_gate_reasons(overrides)) == 0) & F.col("doc_id").isNotNull()
+    row = F.struct(F.col("doc_id"), F.col("_raw").alias("text"))
+    return sig.select(
+        F.inline(F.when(keep, F.array(row)).otherwise(F.array()))
+    )
+
+
+def _gate_signals(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """``doc_id``, the ``carry`` columns and every gate signal, computed
+    over the layered token/gram base."""
+    # NULL text gates exactly like empty text (rejected: too_few_tokens).
+    # Without the coalesce EVERY signal is NULL under ANSI, every rule
+    # comparison is NULL, reasons compacts to [] and the empty document
+    # sails through with keep=true.  Mirrored in _quality_gate_sql.
+    df = df.withColumn("text", F.coalesce("text", F.lit("")))
+    return df.select(
+        "doc_id", *carry, "text", F.expr(TOKENS).alias("_tok")
+    ).select(
+        "doc_id",
+        *carry,
+        "text",
+        "_tok",
+        *_gram_cols("_tok"),
+    ).select(
+        "doc_id",
+        *carry,
+        *_token_cols(tok="_tok"),
+        *_quality_cols(with_tokens=False, tok="_tok"),
+        *_flag_cols(tok="_tok"),
+        *_gopher_cols(),
+    )
+
+
+def _gate_reasons(overrides: dict | None) -> Column:
+    """The violated rule names over the :func:`_gate_signals` columns."""
     gates = dict(DEFAULT_GATES)
     if overrides:
         unknown = set(overrides) - set(gates)
         if unknown:
             raise ValueError(f"unknown gate(s): {sorted(unknown)}")
         gates.update(overrides)
-    # NULL text gates exactly like empty text (rejected: too_few_tokens).
-    # Without the coalesce EVERY signal is NULL under ANSI, every rule
-    # comparison is NULL, reasons compacts to [] and the empty document
-    # sails through with keep=true.  Mirrored in _quality_gate_sql.
-    df = df.withColumn("text", F.coalesce("text", F.lit("")))
-    sig = _tokenized(df).select(
-        "doc_id",
-        "text",
-        "_tok",
-        *_gram_cols("_tok"),
-    ).select(
-        "doc_id",
-        *_token_cols(tok="_tok"),
-        *_quality_cols(with_tokens=False, tok="_tok"),
-        *_flag_cols(tok="_tok"),
-        *_gopher_cols(),
-    )
     rules = [
         ("too_few_tokens", F.col("n_tokens") < gates["min_tokens"]),
         ("too_many_tokens", F.col("n_tokens") > gates["max_tokens"]),
@@ -320,11 +368,8 @@ def quality_gate(df: DataFrame, overrides: dict | None = None) -> DataFrame:
         ("dup3gram_heavy", F.col("dup3_frac") > gates["max_dup3_frac"]),
         ("url_heavy", F.col("n_urls") > gates["max_urls"]),
     ]
-    reasons = F.array_compact(
+    return F.array_compact(
         F.array(*[F.when(cond, F.lit(name)) for name, cond in rules])
-    )
-    return sig.withColumn("reasons", reasons).withColumn(
-        "keep", F.size("reasons") == 0
     )
 
 
@@ -458,6 +503,10 @@ def stratified_sample(
     return df.filter(F.expr(SPLIT_HASH) < thr)
 
 
+# default bound on the driver-side block→offset table of the packers
+MAX_PACK_BLOCKS = 100_000
+
+
 def pack_shards_block_size(df: DataFrame, max_blocks: int) -> int:
     """The auto block size :func:`pack_shards` uses when none is given:
     derived from the OBSERVED doc_id range so the driver-side block→offset
@@ -466,9 +515,17 @@ def pack_shards_block_size(df: DataFrame, max_blocks: int) -> int:
     function so tests can observe the actual choice (r3 review finding 5:
     the previous bound test recomputed the formula instead of observing
     the implementation)."""
+    lo, hi = df.agg(F.min("doc_id"), F.max("doc_id")).first()
+    return pack_block_size(lo, hi, max_blocks)
+
+
+def pack_block_size(lo: int | None, hi: int | None, max_blocks: int) -> int:
+    """``ceil((hi - lo + 1) / max_blocks)``, at least 1, for the doc_id
+    range ``[lo, hi]`` (``None`` bounds: an empty input).  Callers that
+    already know the range — e.g. observed on the write that produced the
+    input — pass the result as ``block_size`` and skip the range scan."""
     import math
 
-    lo, hi = df.agg(F.min("doc_id"), F.max("doc_id")).first()
     span = int(hi) - int(lo) + 1 if lo is not None else 1
     return max(1, math.ceil(span / max_blocks))
 
@@ -477,7 +534,7 @@ def pack_shards(
     df: DataFrame,
     capacity_tokens: int = 4096,
     block_size: int | None = None,
-    max_blocks: int = 100_000,
+    max_blocks: int = MAX_PACK_BLOCKS,
     token_col: str | None = None,
 ) -> DataFrame:
     """Token-aware contiguous shard packing (training-data sharding):
@@ -616,7 +673,7 @@ def pack_sequences(
     df: DataFrame,
     seq_len: int = 2048,
     block_size: int | None = None,
-    max_blocks: int = 100_000,
+    max_blocks: int = MAX_PACK_BLOCKS,
     token_col: str | None = None,
     order: str = "id",
     seed: int = 0,

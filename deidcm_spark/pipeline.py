@@ -97,11 +97,22 @@ def curate(
     resumable, and keeps any one job's lineage shallow (the same reason
     lineage.run_deid_job commits per bucket).  Returns the stage-by-stage
     document accounting (the drop-mass ledger a dataset card needs).
+
+    Each barrier costs exactly one Spark job: the ledger is observed on
+    the stage writes themselves (a ``pyspark.sql.Observation`` per write —
+    row counts, the deduped doc_id range that sizes the packing blocks,
+    and ``max(seq_id) + 1`` for the dense sequence ids), never counted
+    from the read-back; each read-back passes the schema it already knows
+    (no inference job); and the gate keeps rows with
+    :func:`textops.quality_gate_survivors` (one tokenizer pass, no
+    self-join).  Besides the stage writes the only action is the
+    block-totals collect of the packing prefix sum.
     """
     from pyspark.sql import functions as F
 
     from deidcm_spark.operators import dedup, spandedup, textops
 
+    n_rows = F.count(F.lit(1))
     base = docs.select("doc_id", "text")
 
     norm = textops.normalize_text(base, nfc=nfc)
@@ -109,20 +120,12 @@ def curate(
         from deidcm_spark.operators.scrub import scrub_pii
 
         norm = scrub_pii(norm)  # row-local: fuses into the same write
-    norm.write.mode("overwrite").parquet(f"{out_dir}/normalized")
-    norm = spark.read.parquet(f"{out_dir}/normalized")
-    # normalize/scrub are row-preserving, so the input count is free from
-    # the materialized parquet's footers — counting `base` directly would
-    # be one extra full pass over the raw corpus
-    n_in = norm.count()
+    norm, seen = _write_stage(spark, norm, f"{out_dir}/normalized", n=n_rows)
+    n_in = seen["n"]
 
-    gate = textops.quality_gate(norm, overrides=gate_overrides)
-    kept = norm.join(
-        gate.filter("keep").select("doc_id"), "doc_id", "left_semi"
-    )
-    kept.write.mode("overwrite").parquet(f"{out_dir}/gated")
-    kept = spark.read.parquet(f"{out_dir}/gated")
-    n_gated = kept.count()
+    kept = textops.quality_gate_survivors(norm, overrides=gate_overrides)
+    kept, seen = _write_stage(spark, kept, f"{out_dir}/gated", n=n_rows)
+    n_gated = seen["n"]
 
     n_classified = None
     if classifier_positive is not None:
@@ -133,28 +136,39 @@ def curate(
             alpha=classifier_alpha, hash_impl=hash_impl,
         ).select("doc_id")
         kept = kept.join(chosen, "doc_id", "left_semi")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/classified")
-        kept = spark.read.parquet(f"{out_dir}/classified")
-        n_classified = kept.count()
+        kept, seen = _write_stage(
+            spark, kept, f"{out_dir}/classified", n=n_rows
+        )
+        n_classified = seen["n"]
 
     ld = spandedup.line_dedup(
         kept, min_line_chars=min_line_chars, hash_impl=hash_impl
     ).select("doc_id", "text")
-    ld.write.mode("overwrite").parquet(f"{out_dir}/line_deduped")
-    ld = spark.read.parquet(f"{out_dir}/line_deduped")
+    ld, _ = _write_stage(spark, ld, f"{out_dir}/line_deduped")
 
     winners = dedup.dedup_exact(ld).select(
         F.col("keep_doc_id").alias("doc_id")
     )
     final = ld.join(winners, "doc_id", "left_semi")
-    final.write.mode("overwrite").parquet(f"{out_dir}/deduped")
-    final = spark.read.parquet(f"{out_dir}/deduped")
-    n_final = final.count()
+    final, seen = _write_stage(
+        spark, final, f"{out_dir}/deduped",
+        n=n_rows, lo=F.min("doc_id"), hi=F.max("doc_id"),
+    )
+    n_final = seen["n"]
 
-    packed = textops.pack_sequences(final, seq_len=seq_len)
-    packed.write.mode("overwrite").parquet(f"{out_dir}/sequences")
-    packed = spark.read.parquet(f"{out_dir}/sequences")
-    n_seq = int(packed.agg(F.countDistinct("seq_id")).first()[0])
+    block_size = textops.pack_block_size(
+        seen["lo"], seen["hi"], textops.MAX_PACK_BLOCKS
+    )
+    packed = textops.pack_sequences(
+        final, seq_len=seq_len, block_size=block_size
+    )
+    # the packed stream is contiguous from token 0, so seq ids are dense
+    # from 0: the sequence count is max(seq_id) + 1 (0 without pieces)
+    _, seen = _write_stage(
+        spark, packed, f"{out_dir}/sequences",
+        n=F.coalesce(F.max("seq_id") + 1, F.lit(0)),
+    )
+    n_seq = int(seen["n"])
 
     out = {
         "docs_in": n_in,
@@ -166,3 +180,21 @@ def curate(
     if n_classified is not None:
         out["docs_after_classifier"] = n_classified
     return out
+
+
+def _write_stage(
+    spark, df: DataFrame, path: str, **observe
+) -> tuple[DataFrame, dict]:
+    """Write ``df`` to ``path`` as parquet in ONE Spark job and read it
+    back.  ``observe`` maps names to aggregate Columns evaluated on the
+    rows as the write job passes them (``Observation``: no extra pass);
+    their values come back as a dict.  The read-back is given ``df``'s
+    schema, so it runs no schema-inference job."""
+    from pyspark.sql import Observation
+
+    if observe:
+        obs = Observation()
+        df = df.observe(obs, *(c.alias(k) for k, c in observe.items()))
+    df.write.mode("overwrite").parquet(path)
+    back = spark.read.schema(df.schema).parquet(path)
+    return back, obs.get if observe else {}
