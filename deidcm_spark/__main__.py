@@ -92,6 +92,15 @@ def _spark(app: str, shuffle_partitions: int):
     return get_spark(app_name=app, shuffle_partitions=shuffle_partitions)
 
 
+def _write_counted(spark, df, path: str) -> int:
+    """Write ``df`` to ``path``; its row count is observed on the write."""
+    from pyspark.sql import functions as F
+
+    from deidcm_spark.pipeline import write_stage
+
+    return write_stage(spark, df, path, n=F.count(F.lit(1)))[1]["n"]
+
+
 def cmd_deid(args) -> dict:
     spark = _spark("deidcm_deid", args.shuffle_partitions)
     docs = spark.read.parquet(args.input)
@@ -111,8 +120,7 @@ def cmd_deid(args) -> dict:
         num_partitions=args.shuffle_partitions, with_metrics=True,
         date_mode=args.date_mode, date_offset=args.date_offset,
     )
-    out.write.mode("overwrite").parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+    return {"docs": _write_counted(spark, out, args.output)}
 
 
 def cmd_extract(args) -> dict:
@@ -128,8 +136,7 @@ def cmd_extract(args) -> dict:
     from deidcm_spark.operators import extract
 
     out = extract.extract_main_content(extract.with_html(docs))
-    out.write.mode("overwrite").parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+    return {"docs": _write_counted(spark, out, args.output)}
 
 
 def cmd_scrub(args) -> dict:
@@ -142,8 +149,7 @@ def cmd_scrub(args) -> dict:
     out = scrub.scrub_documents(docs, args.org_root, names)
     if args.pii:
         out = scrub.scrub_pii(out)
-    out.write.mode("overwrite").parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+    return {"docs": _write_counted(spark, out, args.output)}
 
 
 def cmd_pipeline(args) -> dict:
@@ -156,8 +162,7 @@ def cmd_pipeline(args) -> dict:
     out = pipeline.scrub_extract(
         spark.read.parquet(args.input), args.org_root, names
     )
-    out.write.mode("overwrite").parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+    return {"docs": _write_counted(spark, out, args.output)}
 
 
 def cmd_dedup(args) -> dict:
@@ -223,10 +228,8 @@ def cmd_dsir(args) -> dict:
 
     raw = spark.read.parquet(args.input).select("doc_id", "text")
     tgt = spark.read.parquet(args.target).select("doc_id", "text")
-    importance_sample(
-        raw, tgt, args.k, n_buckets=args.buckets
-    ).write.mode("overwrite").parquet(args.output)
-    return {"selected": spark.read.parquet(args.output).count(), "k": args.k}
+    selected = importance_sample(raw, tgt, args.k, n_buckets=args.buckets)
+    return {"selected": _write_counted(spark, selected, args.output), "k": args.k}
 
 
 def cmd_qualityfilter(args) -> dict:
@@ -476,15 +479,18 @@ def cmd_sketch(args) -> dict:
             built = sk.cms_merge(
                 [spark.read.parquet(args.merge_with), built]
             )
-        built.write.mode("overwrite").parquet(args.output)
-        summary["counters"] = spark.read.parquet(args.output).count()
+        from pyspark.sql import functions as F
+
+        from deidcm_spark.pipeline import write_stage
+
+        back, seen = write_stage(spark, built, args.output, n=F.count(F.lit(1)))
+        summary["counters"] = seen["n"]
         if args.query:
             items = local_frame(
                 spark, [(q,) for q in args.query], f"{args.col} string"
             )
             got = sk.cms_query(
-                spark.read.parquet(args.output), items, args.col,
-                args.width, args.depth, args.hash,
+                back, items, args.col, args.width, args.depth, args.hash,
             )
             summary["est"] = {
                 r["value"]: r["est"] for r in got.collect()
@@ -894,18 +900,17 @@ def cmd_qualitygate(args) -> dict:
     signal plus keep/reasons; reports the drop-mass per rule so curation
     can see WHY documents were rejected."""
     spark = _spark("deidcm_qualitygate", args.shuffle_partitions)
-    from pyspark.sql import Observation, functions as SF
+    from pyspark.sql import functions as SF
 
     from deidcm_spark.operators.textops import quality_gate
+    from deidcm_spark.pipeline import write_stage
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    gate = quality_gate(docs)
     # docs/kept ride the gate write: no counting pass over the output
-    seen = Observation()
-    gate.observe(
-        seen, SF.count(SF.lit(1)).alias("docs"), SF.count_if("keep").alias("kept")
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.schema(gate.schema).parquet(args.output)
+    out, seen = write_stage(
+        spark, quality_gate(docs), args.output,
+        docs=SF.count(SF.lit(1)), kept=SF.count_if("keep"),
+    )
 
     by_rule = {
         r["reason"]: r["n"]
@@ -913,8 +918,8 @@ def cmd_qualitygate(args) -> dict:
         .groupBy("reason").count().withColumnRenamed("count", "n").collect()
     }
     return {
-        "docs": seen.get["docs"],
-        "kept": seen.get["kept"],
+        "docs": seen["docs"],
+        "kept": seen["kept"],
         "dropped_by_rule": dict(sorted(by_rule.items())),
     }
 
@@ -952,8 +957,7 @@ def cmd_textstats(args) -> dict:
     from deidcm_spark.operators import textops
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    textops.text_stats(docs).write.mode("overwrite").parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+    return {"docs": _write_counted(spark, textops.text_stats(docs), args.output)}
 
 
 def cmd_ingest(args) -> dict:
@@ -972,7 +976,7 @@ def cmd_ingest(args) -> dict:
         # Part-10 parse of every file runs once, not once per write
         parsed.persist()
         try:
-            documents_view(parsed).write.mode("overwrite").parquet(args.output)
+            n_docs = _write_counted(spark, documents_view(parsed), args.output)
             payloads_view(parsed).write.mode("overwrite").parquet(
                 f"{args.output.rstrip('/')}_media")
         finally:
@@ -980,10 +984,10 @@ def cmd_ingest(args) -> dict:
     else:
         from deidcm_spark.ingest import documents_to_spans
 
-        documents_to_spans(spark.read.parquet(args.input)).write.mode(
-            "overwrite"
-        ).parquet(args.output)
-    return {"docs": spark.read.parquet(args.output).count()}
+        n_docs = _write_counted(
+            spark, documents_to_spans(spark.read.parquet(args.input)), args.output
+        )
+    return {"docs": n_docs}
 
 
 def cmd_export(args) -> dict:

@@ -19,15 +19,15 @@ lineage append would ride one transaction, see SURVEY.md §4):
 Resume = anti-join of the bucket domain against committed lineage: only
 missing buckets are recomputed.
 
-The deid job's bucket counters come from the write job itself: the Arrow
-kernel already computes every document's counters, so each output batch is
-tallied per bucket in the worker (``pyarrow`` ``group_by``) and summed on the
-driver through an accumulator.  Step 1 is therefore ONE data-writing Spark
-action, and step 2 appends a driver-local table — nothing under ``data/`` is
-read back, nothing is recomputed.  The counters are exactly-once because the
-kernel runs in the write job's result stage (see :func:`run_deid_job`).  The
-extraction job still aggregates its counters from the WRITTEN output: its
-Python stage never sees ``bucket``.
+Both jobs (:func:`run_deid_job`, :func:`run_extract_job`) run this protocol
+through :func:`_commit_buckets` and supply only their kernel and its
+per-batch tally.  The bucket counters come from the write job itself: the
+kernel carries ``bucket`` through, each output batch is tallied per bucket
+in the worker and the tallies are summed on the driver through an
+accumulator.  Step 1 is therefore ONE data-writing Spark action, and step 2
+appends a driver-local table — nothing under ``data/`` is read back,
+nothing is recomputed.  The counters are exactly-once because the kernel
+runs in the write job's result stage.
 """
 
 from __future__ import annotations
@@ -40,7 +40,11 @@ from pyspark.accumulators import AccumulatorParam, _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from deidcm_spark.operators.deidentify import deidentify_attributes
-from deidcm_spark.schema import LINEAGE_SCHEMA, local_frame
+from deidcm_spark.schema import (
+    EXTRACT_LINEAGE_SCHEMA,
+    LINEAGE_SCHEMA,
+    local_frame,
+)
 
 # per-bucket counters of a deid lineage row, in LINEAGE_SCHEMA order
 COUNTERS = ("n_docs", "n_spans_in", "n_spans_out", "n_removed", "n_erased",
@@ -91,8 +95,8 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 class _CounterSums(AccumulatorParam):
-    """Accumulator of ``{bucket: [counter, ...]}`` (COUNTERS order), merged
-    by element-wise sum."""
+    """Accumulator of ``{bucket: [counter, ...]}`` (the lineage schema's
+    counter order), merged by element-wise sum."""
 
     def zero(self, value):
         return {}
@@ -125,6 +129,17 @@ def _bucket_counts(batch) -> dict:
             *(sums[f"{c}_sum"] for c in COUNTERS[1:]),
         )
     }
+
+
+def _extract_counts(pdf) -> dict:
+    """EXTRACT_LINEAGE_SCHEMA counters (n_docs, n_spans_out, n_text_spans,
+    n_media_spans) of one extractor output batch (pandas), per bucket."""
+    acc: dict = {}
+    for bucket, spans in zip(pdf["bucket"], pdf["spans"]):
+        kinds = [s["kind"] for s in spans]
+        doc = [1, len(kinds), kinds.count("text"), kinds.count("media")]
+        _CounterSums().addInPlace(acc, {int(bucket): doc})
+    return acc
 
 
 def bucket_expr(salt: str, n_buckets: int):
@@ -163,12 +178,84 @@ def prepare_bucketed_raw_corpus(
     so the stored bucket matches what ``run_extract_job`` recomputes, and
     ``run_extract_job(..., input_bucketed=True)`` runs the zero-exchange
     plan: scan → html → mapInPandas → sink."""
-    from deidcm_spark.sources import write_bucketed
+    prepare_bucketed_corpus(
+        raw_documents.withColumn("doc_id", F.col("doc_id").cast("string")),
+        table, salt, n_buckets,
+    )
 
-    with_bucket = raw_documents.withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    ).withColumn("bucket", bucket_expr(salt, n_buckets))
-    write_bucketed(with_bucket, table, "bucket", n_buckets)
+
+def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
+                    max_buckets_this_attempt, input_bucketed, kernel, tally,
+                    schema) -> tuple[dict, bool]:
+    """One attempt of the bucket-commit protocol; returns the summary dict
+    and whether this attempt committed the last pending bucket.
+
+    ``bucketed`` carries the job's ``bucket`` column.  ``kernel(todo,
+    observe)`` turns the pending rows into the output frame, still carrying
+    ``bucket``, and calls ``observe`` in the worker on every output batch;
+    ``tally(batch)`` maps one such batch to ``{bucket: [counter, ...]}`` in
+    the order of ``schema``'s counter columns (between ``bucket`` and
+    ``status``).
+
+    An attempt is one data-writing Spark action plus one single-file append
+    of a driver-local lineage table.  The counters are summed through an
+    accumulator — not read back from ``data/`` — and are exactly-once
+    because the kernel runs in the write job's RESULT stage: Spark applies
+    a result task's accumulator update only when it succeeds, and only once
+    per partition (failed, retried and speculative duplicates are dropped).
+    Pending buckets with no documents commit all-zero rows.
+    """
+    done = committed_buckets(spark, out_dir, run_id)
+    pending = sorted(set(range(n_buckets)) - done)
+    n_pending = len(pending)
+    if max_buckets_this_attempt is not None:
+        pending = pending[:max_buckets_this_attempt]
+    summary = {"run_id": run_id, "committed_before": len(done), "processed": 0}
+    if not pending:
+        return summary, False
+
+    todo = bucketed.filter(F.col("bucket").isin(pending))
+    if not input_bucketed:
+        # salted repartition happens here: one shuffle, partitioned by bucket
+        # so the dynamic-overwrite write aligns with processing partitions.
+        # No more partitions than cores: hashing N buckets into N partitions
+        # leaves some empty, and an empty Python task still costs ~0.1 s
+        n_parts = min(len(pending), spark.sparkContext.defaultParallelism)
+        todo = todo.repartition(n_parts, "bucket")
+
+    acc = spark.sparkContext.accumulator({}, _CounterSums())
+    try:
+        # exactly-once: the kernel (and with it every acc.add) runs in the
+        # write job's result stage — after the bucket exchange, or straight
+        # off the bucketed scan — where Spark applies each partition's
+        # accumulator update once, from its one successful attempt.  Never
+        # move the kernel into a shuffle-map stage: those tasks re-run on a
+        # fetch failure and their updates would count twice.
+        result = kernel(todo, lambda batch: acc.add(tally(batch)))
+        (
+            result.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(_data_path(out_dir))
+        )
+        counts = acc.value
+    finally:
+        # the driver registry keeps every accumulator ever made; this one is
+        # done once its job has ended (later task results are not merged)
+        _accumulatorRegistry.pop(acc.aid, None)
+
+    # every pending bucket commits, an EMPTY one as zeros (otherwise a
+    # doc-less bucket would be "pending" forever on resume)
+    zeros = [0] * (len(schema.fields) - 3)
+    rows = [(run_id, b, *counts.get(b, zeros), "committed") for b in pending]
+    (
+        local_frame(spark, rows, schema)
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(_lineage_path(out_dir))
+    )
+    summary["processed"] = len(pending)
+    return summary, len(pending) == n_pending
 
 
 def run_deid_job(
@@ -199,104 +286,58 @@ def run_deid_job(
     (BENCH/BASELINE.md); on a real cluster it is the network-heavy stage.
 
     An attempt is one data-writing Spark action plus one single-file append
-    of a driver-local lineage table.  The lineage counters are tallied per
-    bucket on the kernel's output batches and summed through an accumulator
-    — not read back from ``data/``.  They are exactly-once because the
-    kernel runs in the write job's RESULT stage: Spark applies a result
-    task's accumulator update only when it succeeds, and only once per
-    partition (failed, retried and speculative duplicates are dropped).
-    Pending buckets with no documents commit all-zero rows.
+    of a driver-local lineage table (:func:`_commit_buckets`); the counters
+    are tallied per bucket on the Arrow kernel's output batches.
     """
-    done = committed_buckets(spark, out_dir, run_id)
-    pending = sorted(set(range(n_buckets)) - done)
-    if max_buckets_this_attempt is not None:
-        pending = pending[:max_buckets_this_attempt]
-    summary = {"run_id": run_id, "committed_before": len(done), "processed": 0}
-    if not pending:
-        return summary
-
-    if input_bucketed:
-        if "bucket" not in documents.columns:
-            raise ValueError(
-                "input_bucketed=True requires a stored 'bucket' column "
-                "(prepare_bucketed_corpus writes one); refusing to silently "
-                "run the unclustered plan"
-            )
-        bucketed = documents
-        # the stored bucket column must be THIS job's bucket function —
-        # a different salt/n_buckets would silently mark out-of-range
-        # buckets "complete" on resume.  Two-level defense: a cheap 1k-row
-        # probe fails fast on a wholesale mismatch here, and after the LAST
-        # bucket commits the lineage totals are reconciled against the
-        # source count (below) — which catches even a partially
-        # mis-bucketed corpus (e.g. two prepares unioned) with one
-        # metadata-cheap count instead of a full-corpus validation scan
-        # per attempt.
-        probe = (
-            documents.limit(1000)
-            .withColumn("_b2", bucket_expr(salt, n_buckets))
-            .filter(F.col("bucket") != F.col("_b2"))
-            .count()
+    if input_bucketed and "bucket" not in documents.columns:
+        raise ValueError(
+            "input_bucketed=True requires a stored 'bucket' column "
+            "(prepare_bucketed_corpus writes one); refusing to silently "
+            "run the unclustered plan"
         )
-        if probe:
-            raise ValueError(
-                f"input_bucketed=True but the stored bucket column does not "
-                f"match pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
-                f"re-run prepare_bucketed_corpus with this job's salt/n_buckets"
-            )
-    else:
-        bucketed = documents.withColumn("bucket", bucket_expr(salt, n_buckets))
-    todo = bucketed.filter(F.col("bucket").isin(pending))
-    if not input_bucketed:
-        # salted repartition happens here: one shuffle, partitioned by bucket
-        # so the dynamic-overwrite write aligns with processing partitions.
-        # No more partitions than cores: hashing N buckets into N partitions
-        # leaves some empty, and an empty Python task still costs ~0.1 s
-        n_parts = min(len(pending), spark.sparkContext.defaultParallelism)
-        todo = todo.repartition(n_parts, "bucket")
-
-    tally = spark.sparkContext.accumulator({}, _CounterSums())
-    try:
-        # exactly-once: the kernel (and with it every tally.add) runs in the
-        # write job's result stage — after the bucket exchange, or straight
-        # off the bucketed scan — where Spark applies each partition's
-        # accumulator update once, from its one successful attempt.  Never
-        # move the kernel into a shuffle-map stage: those tasks re-run on a
-        # fetch failure and their updates would count twice.
-        result = deidentify_attributes(
-            todo, org_root, salt, with_metrics=True,
-            date_mode=date_mode, date_offset=date_offset,
-            observe=lambda batch: tally.add(_bucket_counts(batch)),
-        )
-        (
-            result.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(_data_path(out_dir))
-        )
-        counts = tally.value
-    finally:
-        # the driver registry keeps every accumulator ever made; this one is
-        # done once its job has ended (later task results are not merged)
-        _accumulatorRegistry.pop(tally.aid, None)
-
-    # every pending bucket commits, an EMPTY one as zeros (otherwise a
-    # doc-less bucket would be "pending" forever on resume)
-    zeros = [0] * len(COUNTERS)
-    rows = [(run_id, b, *counts.get(b, zeros), "committed") for b in pending]
-    (
-        local_frame(spark, rows, LINEAGE_SCHEMA)
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(_lineage_path(out_dir))
+    bucketed = (
+        documents if input_bucketed
+        else documents.withColumn("bucket", bucket_expr(salt, n_buckets))
     )
-    summary["processed"] = len(pending)
+
+    def kernel(todo: DataFrame, observe) -> DataFrame:
+        if input_bucketed:
+            # the stored bucket column must be THIS job's bucket function —
+            # a different salt/n_buckets would silently mark out-of-range
+            # buckets "complete" on resume.  Two-level defense: a cheap
+            # 1k-row probe fails fast on a wholesale mismatch here, and
+            # after the LAST bucket commits the lineage totals are
+            # reconciled against the source count (below) — which catches
+            # even a partially mis-bucketed corpus (e.g. two prepares
+            # unioned) with one metadata-cheap count instead of a
+            # full-corpus validation scan per attempt.
+            probe = (
+                documents.limit(1000)
+                .withColumn("_b2", bucket_expr(salt, n_buckets))
+                .filter(F.col("bucket") != F.col("_b2"))
+                .count()
+            )
+            if probe:
+                raise ValueError(
+                    f"input_bucketed=True but the stored bucket column does not "
+                    f"match pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
+                    f"re-run prepare_bucketed_corpus with this job's salt/n_buckets"
+                )
+        return deidentify_attributes(
+            todo, org_root, salt, with_metrics=True,
+            date_mode=date_mode, date_offset=date_offset, observe=observe,
+        )
+
+    summary, finished = _commit_buckets(
+        spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
+        input_bucketed, kernel, _bucket_counts, LINEAGE_SCHEMA,
+    )
 
     # completion reconciliation: once every bucket is committed, the
     # lineage doc total must equal the source count (a metadata-cheap
     # parquet count) — catches rows whose stored bucket fell outside
     # range(n_buckets) and was therefore never selected by any attempt
-    if input_bucketed and set(range(n_buckets)) <= (done | set(pending)):
+    if input_bucketed and finished:
         committed_docs = (
             spark.read.parquet(_lineage_path(out_dir))
             .filter((F.col("run_id") == run_id) & (F.col("status") == "committed"))
@@ -329,10 +370,11 @@ def run_extract_job(
     input_bucketed: bool = False,
 ) -> dict:
     """Resumable main-content extraction (north_rule lane) under the same
-    bucket-commit protocol as ``run_deid_job``: salted hash buckets, dynamic
-    partition overwrite (idempotent bucket rewrite), lineage row appended
-    only after the bucket's data is on disk, metrics aggregated from the
-    WRITTEN output.  ``raw_documents`` = (doc_id, text, lang, source).
+    bucket-commit protocol as :func:`run_deid_job` (:func:`_commit_buckets`):
+    one data write plus one single-file lineage append per attempt, with
+    the EXTRACT_LINEAGE_SCHEMA counters tallied per bucket on the
+    extractor's output batches.  ``raw_documents`` = (doc_id, text, lang,
+    source).
 
     ``input_bucketed=True`` — same contract as ``run_deid_job``: the input
     is stored clustered on this job's bucket function (string-cast doc_id),
@@ -340,67 +382,25 @@ def run_extract_job(
     """
     from deidcm_spark.operators import extract
 
-    done = committed_buckets(spark, out_dir, run_id)
-    pending = sorted(set(range(n_buckets)) - done)
-    if max_buckets_this_attempt is not None:
-        pending = pending[:max_buckets_this_attempt]
-    summary = {"run_id": run_id, "committed_before": len(done), "processed": 0}
-    if not pending:
-        return summary
-
     # cast doc_id to string FIRST: the extractor emits string doc_ids, and
-    # the write-side bucket recomputation below hashes that string.  A
-    # STORED bucket column is never trusted here — it may have been hashed
-    # from the pre-cast value (long doc_id), and a filter/write mismatch
-    # would scatter rows across partitions and lose data on a resumed
-    # dynamic overwrite.  Recomputing keeps filter ≡ write unconditionally;
-    # input_bucketed then only skips the repartition (zero-exchange still
-    # holds when the corpus was prepared from string-cast ids).
+    # the bucket is hashed from that string.  A STORED bucket column is
+    # never trusted here — it may have been hashed from the pre-cast value
+    # (long doc_id).  Recomputing keeps the filtered and the written bucket
+    # equal unconditionally; input_bucketed then only skips the repartition
+    # (zero-exchange still holds when the corpus was prepared from
+    # string-cast ids).
     bucketed = raw_documents.withColumn(
         "doc_id", F.col("doc_id").cast("string")
     ).withColumn("bucket", bucket_expr(salt, n_buckets))
-    todo = bucketed.filter(F.col("bucket").isin(pending))
-    if not input_bucketed:
-        todo = todo.repartition(len(pending), "bucket")
-    html = todo.select("doc_id", "bucket", F.expr(extract.html_expr("spark")).alias("html"))
-    # mapInPandas consumes all columns; re-attach bucket afterwards is not
-    # needed — extract preserves only (doc_id, spans), so compute the bucket
-    # again from doc_id (pure function of doc_id+salt, no join)
-    result = extract.extract_main_content(html).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("doc_id", F.lit(salt)), F.lit(n_buckets)).cast("int"),
-    )
 
-    (
-        result.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(_data_path(out_dir))
-    )
+    def kernel(todo: DataFrame, observe) -> DataFrame:
+        html = todo.select(
+            "doc_id", "bucket", F.expr(extract.html_expr("spark")).alias("html")
+        )
+        return extract.extract_main_content(html, observe=observe)
 
-    written = spark.read.parquet(_data_path(out_dir)).filter(
-        F.col("bucket").isin(pending)
+    summary, _ = _commit_buckets(
+        spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
+        input_bucketed, kernel, _extract_counts, EXTRACT_LINEAGE_SCHEMA,
     )
-    pending_df = local_frame(spark, [(b,) for b in pending], "bucket: int")
-    lineage_rows = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").cast("int").alias("n_docs"),
-            F.sum(F.size("spans")).cast("int").alias("n_spans_out"),
-            F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "text")))
-            .cast("int").alias("n_text_spans"),
-            F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "media")))
-            .cast("int").alias("n_media_spans"),
-        )
-        .join(pending_df, "bucket", "right")
-        .na.fill(0)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("committed"))
-        .select(
-            "run_id", "bucket", "n_docs", "n_spans_out",
-            "n_text_spans", "n_media_spans", "status",
-        )
-    )
-    lineage_rows.write.mode("append").parquet(_lineage_path(out_dir))
-    summary["processed"] = len(pending)
     return summary

@@ -45,6 +45,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from deidcm_spark.schema import DOCUMENTS_SCHEMA
 
@@ -386,18 +387,22 @@ def extract_spans_from_html(
 
 
 def extract_main_content(
-    df: DataFrame, html_col: str = "html", mode: str = "default"
+    df: DataFrame, html_col: str = "html", mode: str = "default",
+    observe=None,
 ) -> DataFrame:
-    """(doc_id, html) -> (doc_id, spans) interleaved main-content spans.
+    """(doc_id, html, *passthrough) -> (doc_id, spans, *passthrough)
+    interleaved main-content spans; columns other than doc_id and
+    ``html_col`` (e.g. a bucket id) pass through unchanged.
 
     Arrow-batched ``mapInPandas`` — one narrow stage, no shuffle; the
     tokenizer is pure CPU per document so the stage scales linearly with
     partitions (the scaling-efficiency evidence for this lane rides the
     same harness as the deid stage).  ``mode`` selects the block
     classifier ('default' boilerpipe-style gates, 'justext' adds the
-    stopword-density signal)."""
-    fields = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    assert fields == ["doc_id", "spans"]
+    stopword-density signal).  ``observe``, if given, is called in the
+    worker on every output batch (a pandas frame) before it is yielded."""
+    passthrough = [c for c in df.columns if c not in ("doc_id", html_col)]
+    schema = StructType(DOCUMENTS_SCHEMA.fields + [df.schema[c] for c in passthrough])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -408,11 +413,15 @@ def extract_main_content(
                 ]
                 for h in pdf[html_col]
             ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype(str), "spans": spans}
+            out = pd.DataFrame(
+                {"doc_id": pdf["doc_id"].astype(str), "spans": spans,
+                 **{c: pdf[c] for c in passthrough}}
             )
+            if observe is not None:
+                observe(out)
+            yield out
 
-    return df.mapInPandas(run, DOCUMENTS_SCHEMA)
+    return df.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -114,22 +114,30 @@ def remap_uids_in_text(text: str, org_root: str) -> str:
     return _UID_PAT.sub(lambda m: gen_dicom_uid("", m.group(0), org_root), text)
 
 
+def _uid_remapper(org_root: str):
+    """A ``re.sub`` callback mapping each matched UID to its pseudonym,
+    memoized: the corpus-wide UID universe is far smaller than its
+    mentions.  Make one per task — the memo lives as long as the callback."""
+    memo: dict[str, str] = {}
+
+    def remap(m: re.Match) -> str:
+        uid = m.group(0)
+        hit = memo.get(uid)
+        if hit is None:
+            hit = memo[uid] = gen_dicom_uid("", uid, org_root)
+        return hit
+
+    return remap
+
+
 def scrub_uids(df: DataFrame, org_root: str, text_col: str = "text") -> DataFrame:
     """Arrow-batched UID remap pass (sha256→30-decimal-digit is not
-    SQL-expressible).  A per-batch memo dict makes repeated UIDs a hash
-    hit — the corpus-wide UID universe is far smaller than its mentions."""
+    SQL-expressible).  A per-task memo (:func:`_uid_remapper`) makes
+    repeated UIDs a hash hit."""
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, str] = {}
-
-        def remap(m: re.Match) -> str:
-            uid = m.group(0)
-            hit = memo.get(uid)
-            if hit is None:
-                hit = memo[uid] = gen_dicom_uid("", uid, org_root)
-            return hit
-
+        remap = _uid_remapper(org_root)
         for pdf in batches:
             pdf[text_col] = [
                 _UID_PAT.sub(remap, t) if t else t for t in pdf[text_col]
@@ -270,20 +278,12 @@ def scrub_spans_full(
     like a bare date would otherwise be chewed by the date rule — same
     ordering as scrub_documents; a remapped 30-digit arc can never match
     the 8-digit \\b-bounded date pattern), then the SQL chain via in-row
-    ``transform()``.  Media spans and order untouched; same memo-per-batch
+    ``transform()``.  Media spans and order untouched; same per-task memo
     as scrub_uids so repeated UIDs hash once."""
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, str] = {}
-
-        def remap(m: re.Match) -> str:
-            uid = m.group(0)
-            hit = memo.get(uid)
-            if hit is None:
-                hit = memo[uid] = gen_dicom_uid("", uid, org_root)
-            return hit
-
+        remap = _uid_remapper(org_root)
         for pdf in batches:
             pdf["spans"] = [
                 [

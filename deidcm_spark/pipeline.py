@@ -120,11 +120,11 @@ def curate(
         from deidcm_spark.operators.scrub import scrub_pii
 
         norm = scrub_pii(norm)  # row-local: fuses into the same write
-    norm, seen = _write_stage(spark, norm, f"{out_dir}/normalized", n=n_rows)
+    norm, seen = write_stage(spark, norm, f"{out_dir}/normalized", n=n_rows)
     n_in = seen["n"]
 
     kept = textops.quality_gate_survivors(norm, overrides=gate_overrides)
-    kept, seen = _write_stage(spark, kept, f"{out_dir}/gated", n=n_rows)
+    kept, seen = write_stage(spark, kept, f"{out_dir}/gated", n=n_rows)
     n_gated = seen["n"]
 
     n_classified = None
@@ -136,7 +136,7 @@ def curate(
             alpha=classifier_alpha, hash_impl=hash_impl,
         ).select("doc_id")
         kept = kept.join(chosen, "doc_id", "left_semi")
-        kept, seen = _write_stage(
+        kept, seen = write_stage(
             spark, kept, f"{out_dir}/classified", n=n_rows
         )
         n_classified = seen["n"]
@@ -144,13 +144,13 @@ def curate(
     ld = spandedup.line_dedup(
         kept, min_line_chars=min_line_chars, hash_impl=hash_impl
     ).select("doc_id", "text")
-    ld, _ = _write_stage(spark, ld, f"{out_dir}/line_deduped")
+    ld, _ = write_stage(spark, ld, f"{out_dir}/line_deduped")
 
     winners = dedup.dedup_exact(ld).select(
         F.col("keep_doc_id").alias("doc_id")
     )
     final = ld.join(winners, "doc_id", "left_semi")
-    final, seen = _write_stage(
+    final, seen = write_stage(
         spark, final, f"{out_dir}/deduped",
         n=n_rows, lo=F.min("doc_id"), hi=F.max("doc_id"),
     )
@@ -164,7 +164,7 @@ def curate(
     )
     # the packed stream is contiguous from token 0, so seq ids are dense
     # from 0: the sequence count is max(seq_id) + 1 (0 without pieces)
-    _, seen = _write_stage(
+    _, seen = write_stage(
         spark, packed, f"{out_dir}/sequences",
         n=F.coalesce(F.max("seq_id") + 1, F.lit(0)),
     )
@@ -182,7 +182,7 @@ def curate(
     return out
 
 
-def _write_stage(
+def write_stage(
     spark, df: DataFrame, path: str, **observe
 ) -> tuple[DataFrame, dict]:
     """Write ``df`` to ``path`` as parquet in ONE Spark job and read it

@@ -104,6 +104,18 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
+EXTRACT_LINEAGE_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType(), False),
+        StructField("bucket", IntegerType(), False),
+        StructField("n_docs", IntegerType(), False),
+        StructField("n_spans_out", IntegerType(), False),
+        StructField("n_text_spans", IntegerType(), False),
+        StructField("n_media_spans", IntegerType(), False),
+        StructField("status", StringType(), False),
+    ]
+)
+
 
 def local_frame(spark, rows, schema):
     """A small driver-side table as a DataFrame that plans as a LocalRelation.

@@ -43,6 +43,21 @@ def _idempotent_write(out: DataFrame, batch_id: int, out_dir: str) -> None:
     )
 
 
+def _start(stream: DataFrame, process_batch, checkpoint_dir: str,
+           available_now: bool, query_name: str | None = None):
+    """Start ``stream`` through ``foreachBatch(process_batch)`` under
+    ``checkpoint_dir``: ``available_now=True`` drains what is there and
+    stops, ``False`` runs continuously."""
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_deidentify(
     spark: SparkSession,
     in_dir: str,
@@ -67,15 +82,7 @@ def stream_deidentify(
         out = deidentify_attributes(batch_df, org_root, salt, with_metrics=True)
         _idempotent_write(out, batch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-    else:
-        query = writer.start()
-    return query
+    return _start(stream, process_batch, checkpoint_dir, available_now)
 
 
 def stream_extract(
@@ -102,13 +109,7 @@ def stream_extract(
         out = extract.extract_main_content(extract.with_html(batch_df))
         _idempotent_write(out, batch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now)
 
 
 def sessionize_events(
@@ -349,14 +350,7 @@ def stream_rollup(
             batch_id, out_dir,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now, queryName)
 
 
 def read_rollup(
@@ -496,13 +490,7 @@ def stream_bloom_ingest(
             n_bits, n_hashes, hash_impl,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now)
 
 
 def read_bloom_log(spark: SparkSession, filter_dir: str) -> DataFrame:
@@ -664,13 +652,7 @@ def stream_neardup_ingest(
             threshold, max_band_size, hash_impl,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now)
 
 
 def read_lsh_log(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -765,13 +747,7 @@ def stream_warc_ingest(
         else:
             _idempotent_write(docs, batch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now)
 
 
 def stream_cdf(
@@ -809,14 +785,7 @@ def stream_cdf(
             batch_id, out_dir,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now, queryName)
 
 
 def read_cdf(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -880,10 +849,4 @@ def stream_quality_ingest(
         ).select("doc_id", "prob", "pareto_draw")
         _idempotent_write(batch_df.join(kept, "doc_id"), batch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now)

@@ -205,10 +205,47 @@ def test_lineage_read_fallback_only_on_path_not_found(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# the one-pass commit: counters tallied by the write job itself
+# the one-pass commit: counters tallied by the write job itself, for both
+# bucket-commit jobs
 # ---------------------------------------------------------------------------
 
-def _lineage_vs_data(out, run_id, n_buckets):
+JOBS = ("deid", "extract")
+
+
+def _raw(spark, n=120):
+    """Raw (doc_id, text, lang, source) pages of varying length, built
+    JVM-side: the shortest extract to their image span alone."""
+    return spark.range(n).selectExpr(
+        "id AS doc_id",
+        "repeat(concat('Sentence ', id, ' of a plain page. '), "
+        "cast(id % 6 AS int)) AS text",
+        "'en' AS lang", "'web' AS source",
+    )
+
+
+def _inputs(spark, job, n):
+    return _docs(spark, n) if job == "deid" else _raw(spark, n)
+
+
+def _run(spark, job, docs, out, **kw):
+    from deidcm_spark.lineage import run_extract_job
+
+    if job == "deid":
+        return run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1", **kw)
+    return run_extract_job(spark, docs, out, SALT, N_BUCKETS, "r1", **kw)
+
+
+def _counters(job):
+    """The job's lineage counter columns, in lineage schema order."""
+    from deidcm_spark.lineage import COUNTERS
+    from deidcm_spark.schema import EXTRACT_LINEAGE_SCHEMA
+
+    if job == "deid":
+        return COUNTERS
+    return tuple(f.name for f in EXTRACT_LINEAGE_SCHEMA.fields[2:-1])
+
+
+def _lineage_vs_data(out, run_id, n_buckets, job="deid"):
     """(lineage counters, the same counters re-aggregated from the parquet
     files under data/) per bucket, every bucket of range(n_buckets)."""
     import os
@@ -216,86 +253,123 @@ def _lineage_vs_data(out, run_id, n_buckets):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from deidcm_spark.lineage import COUNTERS
-
+    counters = _counters(job)
     lin = pq.read_table(os.path.join(out, "_lineage")).to_pylist()
-    got = {r["bucket"]: tuple(r[c] for c in COUNTERS)
+    got = {r["bucket"]: tuple(r[c] for c in counters)
            for r in lin if r["run_id"] == run_id}
     assert len(got) == sum(r["run_id"] == run_id for r in lin)  # one row each
 
-    want = {b: (0,) * len(COUNTERS) for b in range(n_buckets)}
+    want = {b: (0,) * len(counters) for b in range(n_buckets)}
     data_dir = os.path.join(out, "data")
     for part in os.listdir(data_dir):
         if not part.startswith("bucket="):
             continue
         t = pq.read_table(os.path.join(data_dir, part))
-        rm, er, ps, kp = (pc.sum(t[c]).as_py() or 0 for c in COUNTERS[3:])
-        want[int(part.split("=")[1])] = (
-            t.num_rows, rm + er + ps + kp,
-            pc.sum(pc.list_value_length(t["spans"])).as_py() or 0,
-            rm, er, ps, kp,
-        )
+        n_spans = pc.sum(pc.list_value_length(t["spans"])).as_py() or 0
+        if job == "deid":
+            rm, er, ps, kp = (pc.sum(t[c]).as_py() or 0 for c in counters[3:])
+            row = (t.num_rows, rm + er + ps + kp, n_spans, rm, er, ps, kp)
+        else:
+            kinds = pc.struct_field(pc.list_flatten(t["spans"]), "kind")
+            row = (t.num_rows, n_spans,
+                   pc.sum(pc.equal(kinds, "text")).as_py() or 0,
+                   pc.sum(pc.equal(kinds, "media")).as_py() or 0)
+        want[int(part.split("=")[1])] = row
     return got, want
 
 
-@pytest.mark.parametrize("case", ["shuffled", "bucketed", "resumed", "empty_bucket"])
-def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, case):
+@pytest.mark.parametrize(
+    "job,case",
+    [pytest.param("deid", c, id=c) for c in
+     ("shuffled", "bucketed", "resumed", "empty_bucket")]
+    + [pytest.param("extract", c, id=f"extract-{c}") for c in
+       ("shuffled", "bucketed", "resumed", "empty_bucket")],
+)
+def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, job, case):
     """Every counter of every committed bucket equals a re-aggregation of
     the parquet written under data/ — shuffled, pre-bucketed, after a
-    crash + resume, and for a pending bucket holding no document."""
-    from deidcm_spark.lineage import bucket_expr, prepare_bucketed_corpus
+    crash + resume, and for a pending bucket holding no document; for the
+    deid and the extraction job."""
+    from deidcm_spark.lineage import (
+        bucket_expr,
+        prepare_bucketed_corpus,
+        prepare_bucketed_raw_corpus,
+    )
 
     out = str(tmp_path / case)
-    docs = _docs(spark, 120)
+    docs = _inputs(spark, job, 120)
     if case == "shuffled":
-        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+        _run(spark, job, docs, out)
     elif case == "bucketed":
-        prepare_bucketed_corpus(docs, "bt_counters_corpus", SALT, N_BUCKETS)
-        s = run_deid_job(spark, spark.table("bt_counters_corpus"), out, ORG_ROOT,
-                         SALT, N_BUCKETS, "r1", input_bucketed=True)
-        assert s["reconciled_docs"] == 120
+        prepare = prepare_bucketed_corpus if job == "deid" else prepare_bucketed_raw_corpus
+        prepare(docs, f"bt_counters_{job}", SALT, N_BUCKETS)
+        s = _run(spark, job, spark.table(f"bt_counters_{job}"), out,
+                 input_bucketed=True)
+        if job == "deid":
+            assert s["reconciled_docs"] == 120
     elif case == "resumed":
-        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
-                     max_buckets_this_attempt=3)
-        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+        _run(spark, job, docs, out, max_buckets_this_attempt=3)
+        _run(spark, job, docs, out)
     else:
+        # the extraction job buckets the string-cast doc_id
+        docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
         docs = docs.filter(bucket_expr(SALT, N_BUCKETS) != 3)  # bucket 3 empty
-        run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
-    got, want = _lineage_vs_data(out, "r1", N_BUCKETS)
+        _run(spark, job, docs, out)
+    got, want = _lineage_vs_data(out, "r1", N_BUCKETS, job)
     assert got == want
     assert sum(v[0] for v in got.values()) == docs.count()
     if case == "empty_bucket":
-        assert got[3] == (0,) * 7
+        assert got[3] == (0,) * len(_counters(job))
+    if job == "extract":
+        # the pages give both text and media spans to count
+        assert sum(v[2] for v in got.values()) > 0
+        assert sum(v[3] for v in got.values()) == docs.count()
 
 
-def test_lineage_is_one_file_per_attempt(spark, tmp_path):
+@pytest.mark.parametrize("job", JOBS)
+def test_lineage_is_one_file_per_attempt(spark, tmp_path, job):
     import glob
 
+    import pyarrow.parquet as pq
+
     out = str(tmp_path / "files")
-    docs = _docs(spark, 60)
-    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
-                 max_buckets_this_attempt=5)
-    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
-    assert len(glob.glob(f"{out}/_lineage/*.parquet")) == 2
+    docs = _inputs(spark, job, 60)
+    _run(spark, job, docs, out, max_buckets_this_attempt=5)
+    _run(spark, job, docs, out)
+    files = glob.glob(f"{out}/_lineage/*.parquet")
+    assert len(files) == 2
     schema = read_lineage(spark, out).schema
-    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
-        ("run_id", "string"), ("bucket", "int"), ("n_docs", "int"),
-        ("n_spans_in", "int"), ("n_spans_out", "int"), ("n_removed", "int"),
-        ("n_erased", "int"), ("n_pseudonymized", "int"), ("n_kept", "int"),
-        ("status", "string"),
-    ]
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == {
+        "deid": [
+            ("run_id", "string"), ("bucket", "int"), ("n_docs", "int"),
+            ("n_spans_in", "int"), ("n_spans_out", "int"), ("n_removed", "int"),
+            ("n_erased", "int"), ("n_pseudonymized", "int"), ("n_kept", "int"),
+            ("status", "string"),
+        ],
+        "extract": [
+            ("run_id", "string"), ("bucket", "int"), ("n_docs", "int"),
+            ("n_spans_out", "int"), ("n_text_spans", "int"),
+            ("n_media_spans", "int"), ("status", "string"),
+        ],
+    }[job]
+    # int32 / string columns, every one non-null in the files themselves
+    for f in files:
+        assert not any(field.nullable for field in pq.read_schema(f))
 
 
-def test_deid_commit_reads_nothing_back_and_pickles_no_frame(spark, tmp_path, monkeypatch):
-    """The commit takes its counters from the write job: run_deid_job reads
-    no file under data/ and builds no Python-pickled frame (a list-based
-    createDataFrame parallelizes through Python workers)."""
+@pytest.mark.parametrize("job", JOBS)
+def test_deid_commit_reads_nothing_back_and_pickles_no_frame(
+    spark, tmp_path, monkeypatch, job
+):
+    """The commit takes its counters from the write job: neither bucket
+    job reads a file under data/ nor builds a Python-pickled frame (a
+    list-based createDataFrame parallelizes through Python workers)."""
     import os
 
     from pyspark import SparkContext
 
     out = str(tmp_path / "oneshot")
-    docs = _docs(spark, 80)
+    docs = _inputs(spark, job, 80)
     data_dir = os.path.join(out, "data")
     reads, parallelized = [], []
     reader = type(spark.read)
@@ -311,15 +385,39 @@ def test_deid_commit_reads_nothing_back_and_pickles_no_frame(spark, tmp_path, mo
         SparkContext, "parallelize",
         lambda self, *a, **kw: parallelized.append(a) or real_par(self, *a, **kw),
     )
-    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1",
-                 max_buckets_this_attempt=3)
-    run_deid_job(spark, docs, out, ORG_ROOT, SALT, N_BUCKETS, "r1")
+    _run(spark, job, docs, out, max_buckets_this_attempt=3)
+    _run(spark, job, docs, out)
     monkeypatch.undo()
     assert reads, "the lineage log is still read for the resume anti-join"
     assert not [p for p in reads if p.startswith(data_dir)], reads
     assert parallelized == []
-    got, want = _lineage_vs_data(out, "r1", N_BUCKETS)
+    got, want = _lineage_vs_data(out, "r1", N_BUCKETS, job)
     assert got == want
+
+
+def test_extract_shuffled_path_tasks_capped_at_parallelism(spark, tmp_path):
+    """16 pending buckets on the shuffled path repartition into
+    min(16, defaultParallelism) partitions: no stage of the attempt — the
+    extraction stage included — runs more tasks than there are cores, so
+    no Python task sits empty."""
+    from deidcm_spark.lineage import run_extract_job
+
+    sc = spark.sparkContext
+    group = "extract_task_cap"
+    sc.setJobGroup(group, "extract shuffled-path task cap")
+    try:
+        s = run_extract_job(spark, _raw(spark, 200), str(tmp_path / "cap"),
+                            SALT, n_buckets=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s["processed"] == 16
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+    assert tasks, "the attempt ran no job"
+    assert max(tasks) <= sc.defaultParallelism < 16, tasks
 
 
 def test_jobs_leave_the_session_overwrite_mode_alone(spark, tmp_path):
@@ -358,44 +456,64 @@ import json, os, sys
 from pyspark import TaskContext
 
 from deidcm_spark import corpus, lineage
+from deidcm_spark.operators import extract
 from deidcm_spark.session import get_spark
 
-out, marker = sys.argv[1], sys.argv[2]
+out, marker, job = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark(app_name="lineage_retry", master="local[2,2]", shuffle_partitions=4)
 spark.sparkContext.setLogLevel("OFF")
-real = lineage.deidentify_attributes
 
 
-def flaky(df, *args, **kwargs):
-    # the kernel (and its tally) runs first; a later stage of the SAME task
-    # then fails once, so the failed attempt has already tallied its batches
-    out_df = real(df, *args, **kwargs)
+def flaky(real):
+    def kernel(df, *args, **kwargs):
+        # the kernel (and its tally) runs first; a later stage of the SAME
+        # task then fails once, so the failed attempt has already tallied
+        # its batches
+        out_df = real(df, *args, **kwargs)
 
-    def fail_once(batches):
-        held = list(batches)
-        ctx = TaskContext.get()
-        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-            open(marker, "w").close()
-            raise RuntimeError("injected task failure after the kernel ran")
-        yield from held
+        def fail_once(batches):
+            held = list(batches)
+            ctx = TaskContext.get()
+            if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+                open(marker, "w").close()
+                raise RuntimeError("injected task failure after the kernel ran")
+            yield from held
 
-    return out_df.mapInArrow(fail_once, out_df.schema)
+        return out_df.mapInArrow(fail_once, out_df.schema)
+
+    return kernel
 
 
-lineage.deidentify_attributes = flaky
-docs = corpus.synth_documents(spark, 200, seed=21, media_rate=0.1, skew=0.05)
-lineage.run_deid_job(spark, docs, out, "9.9.9.9.9", "retry_salt", 8, "r1")
-direct = real(docs, "9.9.9.9.9", "retry_salt", with_metrics=True).selectExpr(
-    "count(*)", "sum(n_removed + n_erased + n_pseudonymized + n_kept)",
-    "sum(size(spans))", "sum(n_removed)", "sum(n_erased)",
-    "sum(n_pseudonymized)", "sum(n_kept)",
-).collect()[0]
-print(json.dumps([int(v) for v in direct]))
+if job == "deid":
+    real = lineage.deidentify_attributes
+    lineage.deidentify_attributes = flaky(real)
+    docs = corpus.synth_documents(spark, 200, seed=21, media_rate=0.1, skew=0.05)
+    lineage.run_deid_job(spark, docs, out, "9.9.9.9.9", "retry_salt", 8, "r1")
+    direct = real(docs, "9.9.9.9.9", "retry_salt", with_metrics=True).selectExpr(
+        "count(*)", "sum(n_removed + n_erased + n_pseudonymized + n_kept)",
+        "sum(size(spans))", "sum(n_removed)", "sum(n_erased)",
+        "sum(n_pseudonymized)", "sum(n_kept)",
+    )
+else:
+    real = extract.extract_main_content
+    extract.extract_main_content = flaky(real)
+    docs = spark.range(200).selectExpr(
+        "id AS doc_id", "repeat('A sentence of a plain page. ', cast(id % 6 AS int)) AS text",
+        "'en' AS lang", "'web' AS source",
+    )
+    lineage.run_extract_job(spark, docs, out, "retry_salt", 8, "r1")
+    direct = real(extract.with_html(docs)).selectExpr(
+        "count(*)", "sum(size(spans))",
+        "sum(size(filter(spans, s -> s.kind = 'text')))",
+        "sum(size(filter(spans, s -> s.kind = 'media')))",
+    )
+print(json.dumps([int(v) for v in direct.collect()[0]]))
 spark.stop()
 """
 
 
-def test_retried_task_does_not_double_count(tmp_path):
+@pytest.mark.parametrize("job", JOBS)
+def test_retried_task_does_not_double_count(tmp_path, job):
     """A task that fails once AFTER the kernel tallied its batches is
     retried; the failed attempt's accumulator update is dropped, so the
     lineage totals equal the input exactly (fresh interpreter, local[2,2]:
@@ -405,20 +523,18 @@ def test_retried_task_does_not_double_count(tmp_path):
     import subprocess
     import sys
 
-    from deidcm_spark.lineage import COUNTERS
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out, marker = str(tmp_path / "retry"), str(tmp_path / "failed_once")
     proc = subprocess.run(
-        [sys.executable, "-c", _RETRY_SCRIPT, out, marker],
+        [sys.executable, "-c", _RETRY_SCRIPT, out, marker, job],
         capture_output=True, text=True, timeout=600,
         env={**os.environ, "PYTHONPATH": root},
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert os.path.exists(marker), "the injected failure never fired"
     want = json.loads(proc.stdout.strip().splitlines()[-1])
-    got, from_data = _lineage_vs_data(out, "r1", 8)
+    got, from_data = _lineage_vs_data(out, "r1", 8, job)
     assert got == from_data
-    totals = [sum(v[i] for v in got.values()) for i in range(len(COUNTERS))]
+    totals = [sum(v[i] for v in got.values()) for i in range(len(_counters(job)))]
     assert totals == want
     assert totals[0] == 200
