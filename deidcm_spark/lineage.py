@@ -77,17 +77,22 @@ def _read_parquet_or_none(spark: SparkSession, path: str):
         return None
 
 
-def committed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+def _committed_rows(spark: SparkSession, out_dir: str, run_id: str) -> list[tuple]:
+    """``(bucket, n_docs)`` of EVERY committed lineage row of ``run_id``,
+    duplicates included (one row per bucket per committing attempt)."""
     lineage = _read_parquet_or_none(spark, _lineage_path(out_dir))
     if lineage is None:
-        return set()
-    rows = (
-        lineage.filter((F.col("run_id") == run_id) & (F.col("status") == "committed"))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    return {r["bucket"] for r in rows}
+        return []
+    return [
+        (r["bucket"], r["n_docs"])
+        for r in lineage.filter(
+            (F.col("run_id") == run_id) & (F.col("status") == "committed")
+        ).select("bucket", "n_docs").collect()
+    ]
+
+
+def committed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+    return {b for b, _ in _committed_rows(spark, out_dir, run_id)}
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -186,9 +191,10 @@ def prepare_bucketed_raw_corpus(
 
 def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
                     max_buckets_this_attempt, input_bucketed, kernel, tally,
-                    schema) -> tuple[dict, bool]:
+                    schema) -> tuple[dict, int | None]:
     """One attempt of the bucket-commit protocol; returns the summary dict
-    and whether this attempt committed the last pending bucket.
+    and, if this attempt committed the last pending bucket, the run's
+    committed document total (else None).
 
     ``bucketed`` carries the job's ``bucket`` column.  ``kernel(todo,
     observe)`` turns the pending rows into the output frame, still carrying
@@ -204,15 +210,20 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
     a result task's accumulator update only when it succeeds, and only once
     per partition (failed, retried and speculative duplicates are dropped).
     Pending buckets with no documents commit all-zero rows.
+
+    The document total sums every committed row of the run — the rows read
+    at attempt start plus this attempt's — without deduplicating buckets,
+    so a bucket committed twice shows up as a surplus.
     """
-    done = committed_buckets(spark, out_dir, run_id)
+    prior = _committed_rows(spark, out_dir, run_id)
+    done = {b for b, _ in prior}
     pending = sorted(set(range(n_buckets)) - done)
     n_pending = len(pending)
     if max_buckets_this_attempt is not None:
         pending = pending[:max_buckets_this_attempt]
     summary = {"run_id": run_id, "committed_before": len(done), "processed": 0}
     if not pending:
-        return summary, False
+        return summary, None
 
     todo = bucketed.filter(F.col("bucket").isin(pending))
     if not input_bucketed:
@@ -255,7 +266,10 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
         .parquet(_lineage_path(out_dir))
     )
     summary["processed"] = len(pending)
-    return summary, len(pending) == n_pending
+    if len(pending) < n_pending:
+        return summary, None
+    # n_docs is the first counter of both lineage schemas
+    return summary, sum(n for _, n in prior) + sum(r[2] for r in rows)
 
 
 def run_deid_job(
@@ -328,22 +342,17 @@ def run_deid_job(
             date_mode=date_mode, date_offset=date_offset, observe=observe,
         )
 
-    summary, finished = _commit_buckets(
+    summary, committed_docs = _commit_buckets(
         spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
         input_bucketed, kernel, _bucket_counts, LINEAGE_SCHEMA,
     )
 
     # completion reconciliation: once every bucket is committed, the
-    # lineage doc total must equal the source count (a metadata-cheap
-    # parquet count) — catches rows whose stored bucket fell outside
-    # range(n_buckets) and was therefore never selected by any attempt
-    if input_bucketed and finished:
-        committed_docs = (
-            spark.read.parquet(_lineage_path(out_dir))
-            .filter((F.col("run_id") == run_id) & (F.col("status") == "committed"))
-            .agg(F.sum("n_docs"))
-            .collect()[0][0]
-        ) or 0
+    # lineage doc total (known on the driver: earlier attempts' rows plus
+    # this attempt's) must equal the source count (a metadata-cheap parquet
+    # count) — catches rows whose stored bucket fell outside range(n_buckets)
+    # and was therefore never selected by any attempt
+    if input_bucketed and committed_docs is not None:
         src_docs = documents.count()
         if committed_docs != src_docs:
             raise ValueError(

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
+from itertools import groupby
 
 import pandas as pd
 
@@ -223,8 +224,11 @@ BLOCK_TAGS = frozenset(
 )
 CHROME_TAGS = frozenset("nav header footer aside".split())  # DOM heuristic
 _SKIP_CONTENT = frozenset(("script", "style"))
+# one grouped findall per page: (closing slash, tag name, attribute text,
+# comment or <!...> declaration, text run) — exactly one of tag/comment/text
+# is non-empty per token
 _TOKEN_RE = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9]*)[^>]*>|<!--.*?-->|<![^>]*>|[^<]+", re.S
+    r"<(/?)([a-zA-Z][a-zA-Z0-9]*)([^>]*)>|(<!--.*?-->|<![^>]*>)|([^<]+)", re.S
 )
 _SRC_RE = re.compile(r'src="([^"]*)"')
 _WS_RE = re.compile(r"\s+")
@@ -240,14 +244,36 @@ def _decode_entities(s: str) -> str:
     return s
 
 
+def _block_items(parts: list) -> list[tuple[str, str]]:
+    """A block's items from its DOM-order parts (text ``str`` pieces and
+    1-tuple ``(src,)`` <img> markers): each maximal text run between
+    images becomes one whitespace-collapsed ``('text', ...)`` item, dropped
+    when blank, and each image a ``('media', src)`` item."""
+    items: list[tuple[str, str]] = []
+    for is_text, group in groupby(parts, key=lambda p: type(p) is str):
+        if is_text:
+            txt = _WS_RE.sub(" ", "".join(group)).strip()
+            if txt:
+                items.append(("text", txt))
+        else:
+            items.extend(("media", src) for (src,) in group)
+    return items
+
+
 def _segment_blocks(html: str) -> list[dict]:
     """One pass over the tag stream.  A *block* closes when a block-level
     tag opens or closes; each block records its text, anchor-char count,
     heading-ness, chrome-container depth, and any <img> items interleaved
-    at their exact position (kind switches inside the block)."""
+    at their exact position (kind switches inside the block).
+
+    A block accumulates one ``parts`` list: text pieces and <br>/<hr>
+    spaces as ``str``, images as ``(src,)`` markers.  The block text is
+    the whitespace-collapsed join of the ``str`` parts; the items split
+    the same parts at the images.  A <br> space that opens a text run
+    cannot show in an item, because items are stripped."""
     blocks: list[dict] = []
-    cur_parts: list[str] = []
-    cur_items: list[tuple[str, str]] = []  # ('text', txt) | ('media', src)
+    parts: list = []
+    has_media = False
     link_chars = 0
     anchor_depth = 0
     chrome_depth = 0
@@ -255,14 +281,14 @@ def _segment_blocks(html: str) -> list[dict]:
     cur_tag = "body"
 
     def flush() -> None:
-        nonlocal cur_parts, cur_items, link_chars
-        txt = _WS_RE.sub(" ", "".join(cur_parts)).strip()
-        if txt or any(k == "media" for k, _ in cur_items):
-            items = [
-                ("text", _WS_RE.sub(" ", t).strip()) if k == "text" else (k, t)
-                for k, t in cur_items
-            ]
-            items = [it for it in items if it[0] == "media" or it[1]]
+        nonlocal parts, has_media, link_chars
+        if has_media:
+            txt = _WS_RE.sub(" ", "".join(p for p in parts if type(p) is str)).strip()
+            items = _block_items(parts)
+        else:
+            txt = _WS_RE.sub(" ", "".join(parts)).strip()
+            items = [("text", txt)]
+        if txt or has_media:
             blocks.append(
                 {
                     "tag": cur_tag,
@@ -272,56 +298,43 @@ def _segment_blocks(html: str) -> list[dict]:
                     "chrome": chrome_depth > 0,
                 }
             )
-        cur_parts, cur_items, link_chars = [], [], 0
+        parts, has_media, link_chars = [], False, 0
 
-    for m in _TOKEN_RE.finditer(html):
-        closing, tag = m.group(1), m.group(2)
-        if tag is None:  # text node or comment
-            tok = m.group(0)
-            if tok.startswith("<!") or skip_tag:
-                continue
-            txt = _decode_entities(tok)
-            cur_parts.append(txt)
-            if cur_items and cur_items[-1][0] == "text":
-                cur_items[-1] = ("text", cur_items[-1][1] + txt)
-            else:
-                cur_items.append(("text", txt))
-            if anchor_depth > 0:
-                link_chars += len(txt.strip())
+    for closing, tag, attrs, _comment, text in _TOKEN_RE.findall(html):
+        if text:
+            if skip_tag is None:
+                if "&" in text:
+                    text = _decode_entities(text)
+                parts.append(text)
+                if anchor_depth:
+                    link_chars += len(text.strip())
+            continue
+        if not tag:  # comment or <!...> declaration
             continue
         tag = tag.lower()
-        if skip_tag:
+        if skip_tag is not None:
             if closing and tag == skip_tag:
                 skip_tag = None
-            continue
-        if tag in _SKIP_CONTENT:
+        elif tag == "a":
             if not closing:
-                skip_tag = tag
-            continue
-        if tag == "img":
-            src = _SRC_RE.search(m.group(0))
-            cur_items.append(("media", src.group(1) if src else ""))
-            continue
-        if tag in ("br", "hr"):
-            # line breaks separate words, they must not glue "a<br>b" -> "ab"
-            cur_parts.append(" ")
-            if cur_items and cur_items[-1][0] == "text":
-                cur_items[-1] = ("text", cur_items[-1][1] + " ")
-            continue
-        if tag == "a":
-            anchor_depth += 0 if closing else 1
-            if closing and anchor_depth > 0:
+                anchor_depth += 1
+            elif anchor_depth:
                 anchor_depth -= 1
-            continue
-        if tag in BLOCK_TAGS or tag in CHROME_TAGS:
+        elif tag in BLOCK_TAGS or tag in CHROME_TAGS:
             flush()
             if tag in CHROME_TAGS:
-                chrome_depth += -1 if closing else 1
-                chrome_depth = max(chrome_depth, 0)
+                chrome_depth = max(chrome_depth + (-1 if closing else 1), 0)
+            cur_tag = "body" if closing else tag
+        elif tag in _SKIP_CONTENT:
             if not closing:
-                cur_tag = tag
-            else:
-                cur_tag = "body"
+                skip_tag = tag
+        elif tag == "img":
+            src = _SRC_RE.search(attrs)
+            parts.append((src.group(1) if src else "",))
+            has_media = True
+        elif tag == "br" or tag == "hr":
+            # line breaks separate words, they must not glue "a<br>b" -> "ab"
+            parts.append(" ")
     flush()
     return blocks
 

@@ -25,6 +25,19 @@ All but the UID stage are pure ``regexp_replace`` chains — whole-stage
 codegen, byte-identical DuckDB oracle (two-dialect spec like
 operators/extract.py).  The UID stage needs sha256→decimal (not
 SQL-expressible) and runs as one Arrow-batched ``mapInPandas`` pass.
+
+**E-mail guard (Spark dialect only).**  Java's regex engine retries the
+e-mail local-part class at every word start and fails at the missing
+``@``, on every document; most documents hold no ``@``.  So the Spark
+chain runs the e-mail step as ``CASE WHEN instr(<input>, '@') > 0 THEN
+<e-mail step> ELSE <chain so far> END``.  The guard is exact: every e-mail
+match consumes an ``@``, and the date and time steps before it neither add
+nor remove one (their patterns and replacements hold only digits, ``-``,
+``/`` and ``:``), so testing the input column equals testing the step's
+own input; NULL text takes the ELSE branch and stays NULL.  Only one
+branch runs per row, so the pre-e-mail chain, written in both, is
+evaluated once.  The DuckDB dialect stays unguarded: the oracles built
+from it check the guard instead of checking themselves.
 """
 
 from __future__ import annotations
@@ -71,12 +84,18 @@ def _pat_sql(pat: str, dialect: str) -> str:
 
 def scrub_text_expr(col: str, names: list[str], dialect: str = "spark") -> str:
     """The SQL-expressible scrub chain (dates, times, emails, name
-    dictionary) as one nested regexp_replace expression."""
+    dictionary) as one nested regexp_replace expression; on Spark the
+    e-mail step sits under the ``@`` guard (module docstring)."""
     g = ", 'g'" if dialect == "duckdb" else ""
     e = col
     for pat, spark_rep, duck_rep in _SQL_STEPS:
         rep = spark_rep if dialect == "spark" else duck_rep
-        e = f"regexp_replace({e}, '{_pat_sql(pat, dialect)}', '{rep}'{g})"
+        step = f"regexp_replace({e}, '{_pat_sql(pat, dialect)}', '{rep}'{g})"
+        if pat == EMAIL_RE and dialect == "spark":
+            # one CASE level: the chain so far is written twice but
+            # evaluated once per row
+            step = f"CASE WHEN instr({col}, '@') > 0 THEN {step} ELSE {e} END"
+        e = step
     # drop empty/blank names BEFORE building the alternation: '(x|)' has a
     # zero-width branch that matches at every word boundary and injects
     # [NAME] between every token of every document (a trailing comma in

@@ -5,14 +5,18 @@ engine's own kernel)."""
 
 import math
 import re
+import string
 
 import duckdb
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
 from deidcm_spark.operators import extract
+
+import extract_reference
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -349,3 +353,89 @@ def test_extract_null_html_yields_zero_spans(spark):
     got = {r["doc_id"]: r["spans"] for r in extract_main_content(df).collect()}
     assert got["1"] == []
     assert len(got) == 2
+
+
+# ---------------------------------------------------------------------------
+# segmenter rewrite vs the frozen reference (tests/extract_reference.py)
+# ---------------------------------------------------------------------------
+
+# every tag family the segmenter dispatches on, in upper, lower and mixed
+# case, plus tags it ignores
+_TAG_NAMES = [
+    c for name in ("p", "div", "h1", "h3", "li", "td", "article", "section",
+                   "nav", "header", "footer", "aside", "a", "script", "style",
+                   "img", "br", "hr", "span", "b", "x9", "h7")
+    for c in (name, name.upper(), name[0].upper() + name[1:])
+]
+_ATTRS = st.sampled_from([
+    "", " ", ' src="media/1.png"', " SRC=\"up.png\"", ' alt="x" src=""',
+    ' src="a.png" src="b.png"', ' src=noquote.png', ' href="/x"',
+    ' class="c" data-src="d.png"', " /", ' title="a<b"', "\n\tsrc=\"nl.png\"",
+])
+_WORD = st.text(alphabet="abcXYZ019 .,;:!?'\"\t\n\u00a0\u2003#-/=", max_size=12)
+_ENTITY = st.sampled_from(
+    [ent for ent, _ in extract._ENTITIES] + ["&", "&amp", "&#39", "&&amp;;"]
+)
+
+
+@st.composite
+def _tag(draw):
+    name = draw(st.sampled_from(_TAG_NAMES))
+    closing = draw(st.sampled_from(["", "/"]))
+    return f"<{closing}{name}{draw(_ATTRS)}>"
+
+
+_PIECE = st.one_of(
+    _tag(), _tag(), _tag(), _WORD, _WORD, _ENTITY,
+    st.sampled_from([
+        "<", ">", "< p>", "</>", "<>", "<1>", "<!DOCTYPE html>", "<!doctype>",
+        "<!>", "<!-- c -->", "<!-- a <p> b > c -->", "<!-- </script> -->",
+        "<!-- unclosed", "<!--->", "<br/>", "<img/>", '<img src="s.png"/>',
+        "<script><p>hidden words</p></script>", "<style>a > b {}</style>",
+        "<SCRIPT>x<a>y</a></Script>",
+        "<nav><header><p>nested chrome text</p></header>",
+    ]),
+)
+_SOUP = st.one_of(
+    st.lists(_PIECE, max_size=40).map("".join),
+    st.text(alphabet=string.ascii_letters + " <>/=\"'&;#!-\n\t", max_size=200),
+)
+
+
+@given(_SOUP)
+@settings(max_examples=600, deadline=None, derandomize=True)
+def test_segmenter_matches_frozen_reference(html):
+    """The rewritten segmenter agrees with the frozen pre-rewrite copy on
+    random tag soup: the same blocks (text, items, link chars, chrome,
+    tag) and the same spans in both classifier modes."""
+    assert extract._segment_blocks(html) == extract_reference.segment_blocks(html)
+    for mode in ("default", "justext"):
+        assert extract.extract_spans_from_html(html, mode) == \
+            extract_reference.extract_spans_from_html(html, mode)
+
+
+def test_segmenter_reference_edges():
+    """Hand-picked edges the strategy may draw rarely, each against the
+    frozen reference."""
+    cases = [
+        "<",
+        "a < b <p>after a lone angle bracket in text</p>",
+        "<!-- <p>not a block</p> --><p>real <!-- x > y --> block words</p>",
+        "<!DOCTYPE html><HTML><BODY><P>upper case tags here</P></BODY></HTML>",
+        "<Nav><p>chrome</p><NAV><p>deeper</p></nav><p>still chrome</p></Nav>"
+        "<p>out of chrome words</p>",
+        "<header><p>unclosed chrome with words",
+        "<script><p>x</p><style>y</style></script><p>after the script tag</p>",
+        "<style><!-- s --></STYLE><p>after the style block</p>",
+        "<p>" + " ".join(ent for ent, _ in extract._ENTITIES) + " words</p>",
+        '<p>a <img src="m/1.png"> b <IMG alt="no src"> c <img src=""></p>',
+        "<p><img src='single.png'><br>after image<hr></p>",
+        "<p><br><img src=\"x.png\"><br></p><p>a<br>b<hr>c d e</p>",
+        '<p><a href="/">link words here</a> and more plain words</p>',
+        "</a></a><p>closing anchors first then words</p>",
+    ]
+    for html in cases:
+        assert extract._segment_blocks(html) == extract_reference.segment_blocks(html), html
+        for mode in ("default", "justext"):
+            assert extract.extract_spans_from_html(html, mode) == \
+                extract_reference.extract_spans_from_html(html, mode), html

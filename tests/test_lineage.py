@@ -538,3 +538,60 @@ def test_retried_task_does_not_double_count(tmp_path, job):
     totals = [sum(v[i] for v in got.values()) for i in range(len(_counters(job)))]
     assert totals == want
     assert totals[0] == 200
+
+
+def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypatch):
+    """A first input_bucketed attempt reconciles against the doc total the
+    driver already holds (earlier attempts' lineage rows + this attempt's
+    accumulator): the lineage log is read once, at attempt start, and the
+    attempt runs at most 6 Spark jobs — the stored-bucket probe, the data
+    write, the lineage append and the source count (9 with a read-back)."""
+    from deidcm_spark.lineage import prepare_bucketed_corpus
+
+    prepare_bucketed_corpus(_docs(spark, 200), "bt_jobs_corpus", SALT, N_BUCKETS)
+    out = str(tmp_path / "jobs")
+    reads = []
+    reader = type(spark.read)
+    real = reader.parquet
+    monkeypatch.setattr(
+        reader, "parquet",
+        lambda self, *paths, **kw: reads.extend(map(str, paths)) or real(self, *paths, **kw),
+    )
+    sc = spark.sparkContext
+    group = "bucketed_first_attempt"
+    sc.setJobGroup(group, "first input_bucketed attempt")
+    try:
+        s = run_deid_job(spark, spark.table("bt_jobs_corpus"), out, ORG_ROOT, SALT,
+                         n_buckets=N_BUCKETS, input_bucketed=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
+    assert s["processed"] == N_BUCKETS and s["reconciled_docs"] == 200
+    assert [p for p in reads if "_lineage" in p] == [f"{out}/_lineage"]
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 6, n_jobs
+
+
+def test_bucketed_reconciliation_counts_duplicate_committed_rows(spark, tmp_path):
+    """The driver-side total sums every committed row of the run: a bucket
+    committed twice (e.g. an attempt restarted over an unreadable log)
+    inflates the total and fails the reconciliation instead of being
+    deduplicated away."""
+    import pyarrow.parquet as pq
+
+    from deidcm_spark.lineage import prepare_bucketed_corpus
+    from deidcm_spark.schema import LINEAGE_SCHEMA, local_frame
+
+    prepare_bucketed_corpus(_docs(spark, 100), "bt_dup_corpus", SALT, N_BUCKETS)
+    bucketed = spark.table("bt_dup_corpus")
+    out = str(tmp_path / "dup")
+    run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
+                 input_bucketed=True, max_buckets_this_attempt=3)
+    rows = pq.read_table(f"{out}/_lineage").to_pylist()
+    dup = max(rows, key=lambda r: r["n_docs"])
+    assert dup["n_docs"] > 0
+    local_frame(spark, [tuple(dup[f.name] for f in LINEAGE_SCHEMA.fields)],
+                LINEAGE_SCHEMA).write.mode("append").parquet(f"{out}/_lineage")
+    with pytest.raises(ValueError, match=f"committed {100 + dup['n_docs']} documents"):
+        run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
+                     input_bucketed=True)

@@ -307,3 +307,81 @@ def test_blank_names_never_build_zero_width_alternation(spark):
     # all-blank name list = no name step at all
     out2 = scrub.scrub_text(df, names=["", " "]).collect()[0]["text"]
     assert out2 == "bob went home with alice today"
+
+
+# ---------------------------------------------------------------------------
+# the Spark-only email guard: CASE WHEN instr(text, '@') > 0 — checked
+# against the unguarded DuckDB chain
+# ---------------------------------------------------------------------------
+
+GUARD_CASES = [
+    "plain words 2021-07-19 at 14:31:07 no at sign",
+    "@",
+    "@x.org opens the text",
+    "@ opens the text, bob@y.org follows",
+    "the text closes with bob@",
+    "2021-07-19@x.org",
+    "19/07/2021@x.org and 20210719@y.org",
+    "Dupont alice.smith@site.fr wrote",
+    "dupont@hospital.org and martin@x",
+    "a@b@c",
+    None,
+]
+
+
+def _duck_chain(texts, names):
+    duck = duckdb.connect()
+    duck.register("docs", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+    expr = scrub.scrub_text_expr("text", names, dialect="duckdb")
+    return dict(duck.execute(f"SELECT doc_id, {expr} FROM docs").fetchall())
+
+
+@pytest.mark.parametrize("names", [[], NAMES], ids=["no_names", "names"])
+def test_email_guard_matches_unguarded_duckdb(spark, names):
+    """scrub_text and scrub_spans (whose chain runs on ``s.text`` inside
+    transform()) equal the unguarded DuckDB chain on every guard edge:
+    no '@', a lone '@', '@' first and last, a date glued to '@', names
+    next to e-mails, a double '@' and NULL text."""
+    want = _duck_chain(GUARD_CASES, names)
+    assert want[5] == "[EMAIL]@x.org" and want[len(GUARD_CASES) - 1] is None
+
+    df = spark.createDataFrame(
+        list(enumerate(GUARD_CASES)), "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["text"] for r in scrub.scrub_text(df, names).collect()}
+    assert got == want
+
+    spans = spark.createDataFrame(
+        [("d", [{"kind": "text", "text": t, "media_ref": "", "offset": i}
+                for i, t in enumerate(GUARD_CASES)]
+          + [{"kind": "media", "text": "", "media_ref": "a@b.png",
+              "offset": len(GUARD_CASES)}])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    out = scrub.scrub_spans(spans, names).collect()[0]["spans"]
+    assert {s["offset"]: s["text"] for s in out[:-1]} == want
+    assert tuple(out[-1]) == ("media", "", "a@b.png", len(GUARD_CASES))
+
+
+def test_email_guard_plan_shape(spark):
+    """The Spark chain holds exactly one instr() guard and writes the
+    pre-email chain at most twice (one CASE level, never a nesting that
+    doubles per step) — in the expression and in the optimized plan; the
+    DuckDB chain is unguarded."""
+    first_step = scrub._pat_sql(scrub.DATE_ISO_RE, "spark")
+    expr = scrub.scrub_text_expr("text", NAMES)
+    assert expr.count("instr(") == 1
+    assert expr.count(first_step) == 2
+    duck = scrub.scrub_text_expr("text", NAMES, dialect="duckdb")
+    assert "instr(" not in duck and "CASE" not in duck
+    assert duck.count(scrub.DATE_ISO_RE) == 1
+
+    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    for frame in (scrub.scrub_text(df, NAMES),
+                  scrub.scrub_spans(df.selectExpr(
+                      "array(named_struct('kind', 'text', 'text', text, "
+                      "'media_ref', '', 'offset', 0)) AS spans"), NAMES)):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("instr(") == 1, plan
+        assert plan.count("$1-01-01") <= 2, plan
