@@ -85,6 +85,15 @@ import argparse
 import json
 import sys
 
+from pyspark.sql import Observation, functions as F
+
+from deidcm_spark.pipeline import write_stage
+
+# Every command writes through pipeline.write_stage: one write job, the
+# summary fields observed as aggregates on that write, and a read-back
+# given the written schema (no schema-inference job).  tests/
+# test_cli_write_stage.py rejects any other `.write` in this module.
+
 
 def _spark(app: str, shuffle_partitions: int):
     from deidcm_spark.session import get_spark
@@ -92,13 +101,18 @@ def _spark(app: str, shuffle_partitions: int):
     return get_spark(app_name=app, shuffle_partitions=shuffle_partitions)
 
 
+def _rows():
+    return F.count(F.lit(1))
+
+
+def _total(col: str):
+    """``sum(col)``, 0 (not NULL) over no rows."""
+    return F.coalesce(F.sum(col), F.lit(0))
+
+
 def _write_counted(spark, df, path: str) -> int:
     """Write ``df`` to ``path``; its row count is observed on the write."""
-    from pyspark.sql import functions as F
-
-    from deidcm_spark.pipeline import write_stage
-
-    return write_stage(spark, df, path, n=F.count(F.lit(1)))[1]["n"]
+    return write_stage(spark, df, path, n=_rows())[1]["n"]
 
 
 def cmd_deid(args) -> dict:
@@ -174,17 +188,16 @@ def cmd_dedup(args) -> dict:
     from deidcm_spark.operators import dedup
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    pairs = dedup.ngram_jaccard_pairs(docs, threshold=args.threshold)
-    pairs.write.mode("overwrite").parquet(args.output + "/pairs")
-    pairs_back = spark.read.parquet(args.output + "/pairs")
-    keep = dedup.dedup_decisions_from_pairs(docs, pairs_back)
-    keep.write.mode("overwrite").parquet(args.output + "/decisions")
-    dec = spark.read.parquet(args.output + "/decisions")
-    return {
-        "docs": dec.count(),
-        "dropped": dec.filter("keep = 0").count(),
-        "pairs": pairs_back.count(),
-    }
+    pairs, seen = write_stage(
+        spark, dedup.ngram_jaccard_pairs(docs, threshold=args.threshold),
+        args.output + "/pairs", pairs=_rows(),
+    )
+    _, dec = write_stage(
+        spark, dedup.dedup_decisions_from_pairs(docs, pairs),
+        args.output + "/decisions",
+        docs=_rows(), dropped=F.count_if(F.col("keep") == 0),
+    )
+    return {**dec, **seen}
 
 
 def cmd_semdedup(args) -> dict:
@@ -203,20 +216,17 @@ def cmd_semdedup(args) -> dict:
         cents = [list(r["centroid"]) for r in rows]
     else:
         cents = ivf_centroids(emb, n_centroids=args.centroids)
-    local_frame(
+    write_stage(spark, local_frame(
         spark,
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(args.output + "/codebook")
-    semdedup(emb, threshold=args.threshold, centroids=cents).write.mode(
-        "overwrite"
-    ).parquet(args.output + "/decisions")
-    dec = spark.read.parquet(args.output + "/decisions")
-    return {
-        "vectors": dec.count(),
-        "dropped": dec.filter("action = 'DROP'").count(),
-        "clusters": len(cents),
-    }
+    ).coalesce(1), args.output + "/codebook")
+    _, seen = write_stage(
+        spark, semdedup(emb, threshold=args.threshold, centroids=cents),
+        args.output + "/decisions",
+        vectors=_rows(), dropped=F.count_if(F.col("action") == "DROP"),
+    )
+    return {**seen, "clusters": len(cents)}
 
 
 def cmd_dsir(args) -> dict:
@@ -254,12 +264,14 @@ def cmd_qualityfilter(args) -> dict:
     weights, meta = nb_train(pos, neg, n_buckets=args.buckets)
     if args.save_model:
         save_model(weights, meta, args.save_model)
-    pareto_select(
-        nb_score(docs, weights, meta, normalize=args.normalize),
+    # the scoring plan reads docs once: its count rides the same write
+    n_in = Observation()
+    _, seen = write_stage(spark, pareto_select(
+        nb_score(docs.observe(n_in, _rows().alias("docs")), weights, meta,
+                 normalize=args.normalize),
         alpha=args.alpha,
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    res = {"docs": docs.count(), "kept": out.count(), "alpha": args.alpha}
+    ), args.output, kept=_rows())
+    res = {**n_in.get, **seen, "alpha": args.alpha}
     if args.save_model:
         res["model"] = args.save_model
     return res
@@ -271,18 +283,21 @@ def cmd_balance(args) -> dict:
     proportional | temperature)."""
     spark = _spark("deidcm_balance", args.shuffle_partitions)
     from deidcm_spark.operators.balance import cluster_balanced_sample
+    from deidcm_spark.operators.dedup import release_caches
 
     emb = spark.read.parquet(args.input).select("vec_id", "embedding")
-    cluster_balanced_sample(
+    picked = cluster_balanced_sample(
         emb, args.k, n_centroids=args.centroids, policy=args.policy,
         alpha=args.alpha, n_salts=args.salts,
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
-
-    clusters = out.agg(SF.countDistinct("cluster")).first()[0]
-    return {"selected": out.count(), "clusters": int(clusters),
-            "policy": args.policy}
+    )
+    # DISTINCT cannot be observed, but the set of cluster ids is at most
+    # --centroids long: observe it whole and take its size
+    _, seen = write_stage(
+        spark, picked, args.output,
+        selected=_rows(), clusters=F.size(F.collect_set("cluster")),
+    )
+    release_caches(picked)
+    return {**seen, "policy": args.policy}
 
 
 def cmd_compact(args) -> dict:
@@ -317,24 +332,18 @@ def cmd_bpe(args) -> dict:
         ref = (spark.read.parquet(args.reference).select("doc_id", "text")
                if args.reference else docs)
         merges = train_bpe(ref, n_merges=args.n_merges)
-    local_frame(
+    write_stage(spark, local_frame(
         spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
-    ).coalesce(1).write.mode("overwrite").parquet(args.output + "/merges")
-    bpe_token_count(docs, merges).write.mode("overwrite").parquet(
-        args.output + "/counts"
+    ).coalesce(1), args.output + "/merges")
+    _, seen = write_stage(
+        spark, bpe_token_count(docs, merges), args.output + "/counts",
+        docs=_rows(), words=_total("n_words"),
+        bpe_tokens=_total("n_bpe_tokens"),
     )
-    out = spark.read.parquet(args.output + "/counts")
-    from pyspark.sql import functions as SF
-
-    tot = out.agg(SF.sum("n_words"), SF.sum("n_bpe_tokens")).first()
-    return {
-        "docs": out.count(),
-        "merges": len(merges),
-        "words": int(tot[0] or 0),
-        "bpe_tokens": int(tot[1] or 0),
-    }
+    return {"docs": seen["docs"], "merges": len(merges),
+            "words": seen["words"], "bpe_tokens": seen["bpe_tokens"]}
 
 
 def cmd_ppl(args) -> dict:
@@ -345,14 +354,11 @@ def cmd_ppl(args) -> dict:
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
     ref = spark.read.parquet(args.reference).select("doc_id", "text")
-    perplexity_score(
-        docs, ref, n_buckets=args.buckets, alpha=args.alpha
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    return {
-        "docs": out.count(),
-        "scored": out.filter("ppl is not null").count(),
-    }
+    return write_stage(
+        spark, perplexity_score(docs, ref, n_buckets=args.buckets,
+                                alpha=args.alpha),
+        args.output, docs=_rows(), scored=F.count("ppl"),
+    )[1]
 
 
 def cmd_linededup(args) -> dict:
@@ -363,18 +369,12 @@ def cmd_linededup(args) -> dict:
     from deidcm_spark.operators.spandedup import line_dedup
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    line_dedup(
-        docs, min_line_chars=args.min_line_chars, hash_impl=args.hash
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
-
-    tot = out.agg(SF.sum("n_lines"), SF.sum("n_dropped")).first()
-    return {
-        "docs": out.count(),
-        "lines": int(tot[0] or 0),
-        "dropped_lines": int(tot[1] or 0),
-    }
+    return write_stage(
+        spark, line_dedup(docs, min_line_chars=args.min_line_chars,
+                          hash_impl=args.hash),
+        args.output, docs=_rows(), lines=_total("n_lines"),
+        dropped_lines=_total("n_dropped"),
+    )[1]
 
 
 def cmd_substrdedup(args) -> dict:
@@ -384,18 +384,11 @@ def cmd_substrdedup(args) -> dict:
     from deidcm_spark.operators.spandedup import substring_dedup
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    substring_dedup(
-        docs, window=args.window, hash_impl=args.hash
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
-
-    tot = out.agg(SF.sum("n_tokens"), SF.sum("n_removed_tokens")).first()
-    return {
-        "docs": out.count(),
-        "tokens": int(tot[0] or 0),
-        "removed_tokens": int(tot[1] or 0),
-    }
+    return write_stage(
+        spark, substring_dedup(docs, window=args.window, hash_impl=args.hash),
+        args.output, docs=_rows(), tokens=_total("n_tokens"),
+        removed_tokens=_total("n_removed_tokens"),
+    )[1]
 
 
 def cmd_bloom(args) -> dict:
@@ -424,19 +417,27 @@ def cmd_bloom(args) -> dict:
         )
     docs = spark.read.parquet(args.input)
     summary: dict = {"bits": args.bits, "hashes": args.hashes}
-    shard_filter = bloom_build(docs, args.bits, args.hashes, args.hash)
-    if args.filter:
+    if not args.filter:
+        shard_filter = bloom_build(docs, args.bits, args.hashes, args.hash)
+    else:
         prior = spark.read.parquet(args.filter)
-        fresh = bloom_new_documents(
-            docs, prior, args.bits, args.hashes, args.hash
+        summary.update(write_stage(
+            spark,
+            bloom_new_documents(docs, prior, args.bits, args.hashes, args.hash),
+            args.output + "/fresh", fresh=_rows(),
+        )[1])
+        # the probe reads docs twice, the filter build once: count it there
+        n_in = Observation()
+        shard = docs.observe(n_in, _rows().alias("input"))
+        shard_filter = bloom_merge(
+            prior, bloom_build(shard, args.bits, args.hashes, args.hash)
         )
-        fresh.write.mode("overwrite").parquet(args.output + "/fresh")
-        summary["fresh"] = spark.read.parquet(args.output + "/fresh").count()
-        summary["input"] = docs.count()
-        shard_filter = bloom_merge(prior, shard_filter)
-    shard_filter.write.mode("overwrite").parquet(args.output + "/filter")
-    summary["filter_words"] = spark.read.parquet(args.output + "/filter").count()
-    return summary
+    _, seen = write_stage(
+        spark, shard_filter, args.output + "/filter", filter_words=_rows()
+    )
+    if args.filter:
+        summary.update(n_in.get)
+    return {**summary, **seen}
 
 
 def cmd_sketch(args) -> dict:
@@ -465,9 +466,8 @@ def cmd_sketch(args) -> dict:
             built = sk.hll_merge(
                 [spark.read.parquet(args.merge_with), built]
             )
-        built.write.mode("overwrite").parquet(args.output)
-        est = sk.hll_estimate(spark.read.parquet(args.output), args.p)
-        row = est.collect()[0]
+        back, _ = write_stage(spark, built, args.output)
+        row = sk.hll_estimate(back, args.p).collect()[0]
         summary.update(
             {"estimate": round(row["estimate"], 1),
              "zero_registers": row["n_zero_registers"]}
@@ -479,12 +479,8 @@ def cmd_sketch(args) -> dict:
             built = sk.cms_merge(
                 [spark.read.parquet(args.merge_with), built]
             )
-        from pyspark.sql import functions as F
-
-        from deidcm_spark.pipeline import write_stage
-
-        back, seen = write_stage(spark, built, args.output, n=F.count(F.lit(1)))
-        summary["counters"] = seen["n"]
+        back, seen = write_stage(spark, built, args.output, counters=_rows())
+        summary.update(seen)
         if args.query:
             items = local_frame(
                 spark, [(q,) for q in args.query], f"{args.col} string"
@@ -506,25 +502,25 @@ def cmd_robots(args) -> dict:
     spark = _spark("deidcm_robots", args.shuffle_partitions)
     from deidcm_spark.operators.robots import parse_robots, robots_filter
 
-    bodies = spark.read.parquet(args.robots)
-    rules, sitemaps = parse_robots(bodies)
-    rules.write.mode("overwrite").parquet(args.output + "/rules")
-    sitemaps.write.mode("overwrite").parquet(args.output + "/sitemaps")
-    rules = spark.read.parquet(args.output + "/rules")
-    urls = spark.read.parquet(args.input)
-    out = robots_filter(urls, rules, args.agent, mode=args.mode)
-    dest = args.output + ("/flagged" if args.mode == "flag" else "/allowed")
-    out.write.mode("overwrite").parquet(dest)
-    n_in = urls.count()
-    back = spark.read.parquet(dest)
-    n_allowed = (
-        back.filter("allowed").count() if args.mode == "flag" else back.count()
+    rules, sitemaps = parse_robots(spark.read.parquet(args.robots))
+    rules, n_rules = write_stage(
+        spark, rules, args.output + "/rules", rules=_rows()
     )
+    write_stage(spark, sitemaps, args.output + "/sitemaps")
+    urls = spark.read.parquet(args.input)
+    flag = args.mode == "flag"
+    _, seen = write_stage(
+        spark, robots_filter(urls, rules, args.agent, mode=args.mode),
+        args.output + ("/flagged" if flag else "/allowed"),
+        allowed=F.count_if("allowed") if flag else _rows(),
+    )
+    # the gate reads urls twice (per-url verdict, join back): count apart
+    n_in = urls.count()
     return {
         "urls": n_in,
-        "allowed": n_allowed,
-        "blocked": n_in - n_allowed,
-        "rules": rules.count(),
+        "allowed": seen["allowed"],
+        "blocked": n_in - seen["allowed"],
+        "rules": n_rules["rules"],
         "agent": args.agent,
     }
 
@@ -535,17 +531,13 @@ def cmd_heavyhitters(args) -> dict:
     spark = _spark("deidcm_heavyhitters", args.shuffle_partitions)
     from deidcm_spark.operators.sketch import heavy_hitters
 
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(args.input)
-    heavy_hitters(
-        df, args.min_count, n=args.n, width=args.width, depth=args.depth,
-        hash_impl=args.hash,
-    ).write.mode("overwrite").parquet(args.output)
-    back = spark.read.parquet(args.output)
+    back, seen = write_stage(spark, heavy_hitters(
+        spark.read.parquet(args.input), args.min_count, n=args.n,
+        width=args.width, depth=args.depth, hash_impl=args.hash,
+    ), args.output, grams=_rows())
     top = back.orderBy(F.col("n_occurrences").desc(), "gram").limit(3).collect()
     return {
-        "grams": back.count(),
+        **seen,
         "top": [[r["gram"], int(r["n_occurrences"])] for r in top],
     }
 
@@ -597,12 +589,13 @@ def cmd_topk(args) -> dict:
         out = select_top_k(df, args.k, score_col=args.score_col)
     else:
         out = select_top_fraction(df, args.fraction, score_col=args.score_col)
-    out.write.mode("overwrite").parquet(args.output)
-    back = spark.read.parquet(args.output)
-    row = back.agg({args.score_col: "min"}).first()
+    _, seen = write_stage(
+        spark, out, args.output, rows=_rows(), lo=F.min(args.score_col)
+    )
+    lo = seen["lo"]
     return {
-        "rows": back.count(),
-        "min_score": None if row[0] is None else round(float(row[0]), 6),
+        "rows": seen["rows"],
+        "min_score": None if lo is None else round(float(lo), 6),
     }
 
 
@@ -611,29 +604,20 @@ def cmd_snapdiff(args) -> dict:
     write <output>/diff (added/removed/changed) plus <output>/reprocess
     (the new-snapshot slice the pipeline must actually re-touch)."""
     spark = _spark("deidcm_snapdiff", args.shuffle_partitions)
-    from deidcm_spark.operators.cdc import (
-        select_reprocess,
-        snapshot_diff,
-        snapshot_diff_stats,
-    )
+    from deidcm_spark.operators.cdc import select_reprocess, snapshot_diff
 
-    old = spark.read.parquet(args.old)
     new = spark.read.parquet(args.input)
-    diff = snapshot_diff(old, new, text_col=args.text_col)
-    diff.write.mode("overwrite").parquet(args.output + "/diff")
-    diff = spark.read.parquet(args.output + "/diff")
-    select_reprocess(new, diff).write.mode("overwrite").parquet(
-        args.output + "/reprocess"
+    diff, seen = write_stage(
+        spark,
+        snapshot_diff(spark.read.parquet(args.old), new,
+                      text_col=args.text_col),
+        args.output + "/diff",
+        **{c: F.count_if(F.col("change") == c)
+           for c in ("added", "removed", "changed")},
     )
-    stats = {
-        r["change"]: r["n_docs"] for r in snapshot_diff_stats(diff).collect()
-    }
-    return {
-        "added": stats.get("added", 0),
-        "removed": stats.get("removed", 0),
-        "changed": stats.get("changed", 0),
-        "reprocess": spark.read.parquet(args.output + "/reprocess").count(),
-    }
+    _, rp = write_stage(spark, select_reprocess(new, diff),
+                        args.output + "/reprocess", reprocess=_rows())
+    return {**seen, **rp}
 
 
 def cmd_pq(args) -> dict:
@@ -655,11 +639,11 @@ def cmd_pq(args) -> dict:
             emb, nlist=args.nlist, m=args.m, ksub=args.ksub,
             lloyd_iters=args.iters, normalize=args.normalize,
         )
-        local_frame(
+        write_stage(spark, local_frame(
             spark,
             [(i, c) for i, c in enumerate(coarse)],
             "list_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(args.output + "/coarse")
+        ), args.output + "/coarse")
         enc = pqop.ivfpq_encode(emb, coarse, books, normalize=args.normalize)
     else:
         books = pqop.pq_train(
@@ -672,13 +656,12 @@ def cmd_pq(args) -> dict:
         for s in range(len(books))
         for c in range(len(books[s]))
     ]
-    local_frame(
+    write_stage(spark, local_frame(
         spark, rows, "sub int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(args.output + "/codebook")
-    enc.write.mode("overwrite").parquet(args.output + "/codes")
-    codes = spark.read.parquet(args.output + "/codes")
+    ), args.output + "/codebook")
+    codes, seen = write_stage(spark, enc, args.output + "/codes", rows=_rows())
     summary = {
-        "rows": codes.count(),
+        **seen,
         "m": len(books),
         "ksub": len(books[0]),
     }
@@ -710,20 +693,14 @@ def cmd_packseq(args) -> dict:
     from deidcm_spark.operators.textops import pack_sequences
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
-    pack_sequences(docs, seq_len=args.seq_len).write.mode(
-        "overwrite"
-    ).parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
-
-    agg = out.agg(
-        SF.countDistinct("seq_id"), SF.sum("piece_tokens")
-    ).first()
-    return {
-        "pieces": out.count(),
-        "sequences": int(agg[0] or 0),
-        "tokens": int(agg[1] or 0),
-    }
+    # the packed stream is contiguous from token 0, so seq ids are dense
+    # from 0: the sequence count is max(seq_id) + 1 (0 without pieces)
+    return write_stage(
+        spark, pack_sequences(docs, seq_len=args.seq_len), args.output,
+        pieces=_rows(),
+        sequences=F.coalesce(F.max("seq_id") + 1, F.lit(0)),
+        tokens=_total("piece_tokens"),
+    )[1]
 
 
 def cmd_report(args) -> dict:
@@ -732,19 +709,13 @@ def cmd_report(args) -> dict:
     spark = _spark("deidcm_report", args.shuffle_partitions)
     from deidcm_spark.operators.textops import corpus_report
 
-    docs = spark.read.parquet(args.input)
-    corpus_report(docs, with_sketches=args.sketches).write.mode(
-        "overwrite"
-    ).parquet(args.output)
-    out = spark.read.parquet(args.output)
-    from pyspark.sql import functions as SF
-
-    tot = out.agg(SF.sum("n_docs"), SF.sum("kept_docs")).first()
-    return {
-        "slices": out.count(),
-        "docs": int(tot[0] or 0),
-        "kept": int(tot[1] or 0),
-    }
+    return write_stage(
+        spark,
+        corpus_report(spark.read.parquet(args.input),
+                      with_sketches=args.sketches),
+        args.output, slices=_rows(), docs=_total("n_docs"),
+        kept=_total("kept_docs"),
+    )[1]
 
 
 def cmd_hostrank(args) -> dict:
@@ -752,22 +723,22 @@ def cmd_hostrank(args) -> dict:
     <output>/records) → host edges + PageRank.  Writes <output>/edges and
     <output>/ranks."""
     spark = _spark("deidcm_hostrank", args.shuffle_partitions)
+    from deidcm_spark.operators.dedup import delete_path
     from deidcm_spark.operators.linkgraph import extract_links, host_rank
 
     recs = spark.read.parquet(args.input).select("url", "html")
-    extract_links(recs).write.mode("overwrite").parquet(args.output + "/edges")
-    edges = spark.read.parquet(args.output + "/edges")
-    host_rank(
-        edges, iterations=args.iterations,
-        checkpoint_dir=args.output + "/_pr_rounds",
-    ).write.mode("overwrite").parquet(args.output + "/ranks")
-    ranks = spark.read.parquet(args.output + "/ranks")
-    top = ranks.orderBy("rank", ascending=False).first()
-    return {
-        "edges": edges.count(),
-        "hosts": ranks.count(),
-        "top_host": top["host"] if top else None,
-    }
+    edges, seen = write_stage(
+        spark, extract_links(recs), args.output + "/edges", edges=_rows()
+    )
+    rounds = args.output + "/_pr_rounds"
+    _, ranked = write_stage(
+        spark,
+        host_rank(edges, iterations=args.iterations, checkpoint_dir=rounds),
+        args.output + "/ranks",
+        hosts=_rows(), top_host=F.max_by("host", "rank"),
+    )
+    delete_path(spark, rounds)  # the final round is copied into ranks
+    return {**seen, **ranked}
 
 
 def cmd_urldedup(args) -> dict:
@@ -777,14 +748,12 @@ def cmd_urldedup(args) -> dict:
     spark = _spark("deidcm_urldedup", args.shuffle_partitions)
     from deidcm_spark.operators.linkgraph import url_dedup
 
-    df = spark.read.parquet(args.input)
-    url_dedup(df).write.mode("overwrite").parquet(args.output + "/decisions")
-    dec = spark.read.parquet(args.output + "/decisions")
-    dec.filter("keep").drop("keep").write.mode("overwrite").parquet(
-        args.output + "/kept"
+    dec, seen = write_stage(
+        spark, url_dedup(spark.read.parquet(args.input)),
+        args.output + "/decisions", rows=_rows(), kept=F.count_if("keep"),
     )
-    kept = spark.read.parquet(args.output + "/kept").count()
-    return {"rows": dec.count(), "kept": kept}
+    write_stage(spark, dec.filter("keep").drop("keep"), args.output + "/kept")
+    return seen
 
 
 def cmd_domainfilter(args) -> dict:
@@ -793,8 +762,6 @@ def cmd_domainfilter(args) -> dict:
     a text file of one domain per line, or a parquet with a `domain`
     column."""
     spark = _spark("deidcm_domainfilter", args.shuffle_partitions)
-    from pyspark.sql import functions as F
-
     from deidcm_spark.operators.linkgraph import domain_filter
 
     df = spark.read.parquet(args.input)
@@ -804,13 +771,14 @@ def cmd_domainfilter(args) -> dict:
         bl = spark.read.text(args.blocklist).select(
             F.trim("value").alias("domain")
         ).filter("domain != ''")
-    out = domain_filter(df, bl, mode=args.mode)
-    out.write.mode("overwrite").parquet(args.output)
-    result = spark.read.parquet(args.output)
-    summary = {"rows_in": df.count(), "rows_out": result.count()}
+    observe = {"rows_out": _rows()}
     if args.mode == "flag":
-        summary["blocked"] = result.filter("blocked").count()
-    return summary
+        observe["blocked"] = F.count_if("blocked")
+    _, seen = write_stage(
+        spark, domain_filter(df, bl, mode=args.mode), args.output, **observe
+    )
+    # domain_filter reads df in two branches: count the input apart
+    return {"rows_in": df.count(), **seen}
 
 
 def cmd_mix(args) -> dict:
@@ -825,14 +793,15 @@ def cmd_mix(args) -> dict:
         name, rest = spec.split("=", 1)
         path, weight = rest.rsplit("@", 1)
         sources.append((name, spark.read.parquet(path), float(weight)))
-    mix_corpora(sources, salt=args.salt).write.mode("overwrite").parquet(
-        args.output
+    # mix_corpora requires unique names; every row carries one of them
+    _, per_source = write_stage(
+        spark, mix_corpora(sources, salt=args.salt), args.output,
+        **{n: F.count_if(F.col("source") == n) for n, _, _ in sources},
     )
-    mixed = spark.read.parquet(args.output)
-    per_source = {
-        r.source: r["count"] for r in mixed.groupBy("source").count().collect()
+    return {
+        "rows": sum(per_source.values()),
+        "per_source": {n: c for n, c in per_source.items() if c},
     }
-    return {"rows": mixed.count(), "per_source": per_source}
 
 
 def cmd_budget(args) -> dict:
@@ -842,14 +811,10 @@ def cmd_budget(args) -> dict:
     spark = _spark("deidcm_budget", args.shuffle_partitions)
     from deidcm_spark.operators.sampling import select_token_budget
 
-    df = spark.read.parquet(args.input)
-    select_token_budget(
-        df, args.budget, score_col=args.score_col,
-        token_col=args.token_col or None,
-    ).write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    row = out.agg({"n_tokens": "sum"}).first()
-    return {"docs": out.count(), "tokens": int(row[0] or 0)}
+    return write_stage(spark, select_token_budget(
+        spark.read.parquet(args.input), args.budget,
+        score_col=args.score_col, token_col=args.token_col or None,
+    ), args.output, docs=_rows(), tokens=_total("n_tokens"))[1]
 
 
 def cmd_bm25index(args) -> dict:
@@ -859,18 +824,19 @@ def cmd_bm25index(args) -> dict:
     spark = _spark("deidcm_bm25index", args.shuffle_partitions)
     from deidcm_spark.operators.retrieval import build_bm25_index
 
-    docs = spark.read.parquet(args.input)
-    postings, stats = build_bm25_index(docs)
-    postings.sort("term").write.mode("overwrite").parquet(
-        args.output + "/postings"
+    postings, stats = build_bm25_index(spark.read.parquet(args.input))
+    postings, seen = write_stage(
+        spark, postings.sort("term"), args.output + "/postings",
+        postings=_rows(),
     )
-    stats.write.mode("overwrite").parquet(args.output + "/stats")
-    p = spark.read.parquet(args.output + "/postings")
-    s = spark.read.parquet(args.output + "/stats").first()
+    _, st = write_stage(
+        spark, stats, args.output + "/stats", n_docs=F.max("n_docs")
+    )
     return {
-        "postings": p.count(),
-        "terms": p.select("term").distinct().count(),
-        "n_docs": int(s["n_docs"]),
+        **seen,
+        # DISTINCT cannot be observed: one query on the written postings
+        "terms": postings.select("term").distinct().count(),
+        "n_docs": int(st["n_docs"]),
     }
 
 
@@ -878,20 +844,16 @@ def cmd_bm25search(args) -> dict:
     """Query a built index: top-k (doc_id, score, n_terms_hit) written to
     --output and echoed in the summary."""
     spark = _spark("deidcm_bm25search", args.shuffle_partitions)
-    from pyspark.sql import functions as F
-
     from deidcm_spark.operators.retrieval import bm25_search
 
-    postings = spark.read.parquet(args.index + "/postings")
-    stats = spark.read.parquet(args.index + "/stats")
-    out = bm25_search(postings, stats, args.query, k=args.k)
-    out.write.mode("overwrite").parquet(args.output)
-    rows = spark.read.parquet(args.output).orderBy(
-        F.desc("score"), "doc_id"
-    ).collect()
+    hits, seen = write_stage(spark, bm25_search(
+        spark.read.parquet(args.index + "/postings"),
+        spark.read.parquet(args.index + "/stats"), args.query, k=args.k,
+    ), args.output, hits=_rows())
+    top = hits.orderBy(F.desc("score"), "doc_id").limit(3).collect()
     return {
-        "hits": len(rows),
-        "top": [{"doc_id": r.doc_id, "score": r.score} for r in rows[:3]],
+        **seen,
+        "top": [{"doc_id": r.doc_id, "score": r.score} for r in top],
     }
 
 
@@ -900,21 +862,18 @@ def cmd_qualitygate(args) -> dict:
     signal plus keep/reasons; reports the drop-mass per rule so curation
     can see WHY documents were rejected."""
     spark = _spark("deidcm_qualitygate", args.shuffle_partitions)
-    from pyspark.sql import functions as SF
-
     from deidcm_spark.operators.textops import quality_gate
-    from deidcm_spark.pipeline import write_stage
 
     docs = spark.read.parquet(args.input).select("doc_id", "text")
     # docs/kept ride the gate write: no counting pass over the output
     out, seen = write_stage(
         spark, quality_gate(docs), args.output,
-        docs=SF.count(SF.lit(1)), kept=SF.count_if("keep"),
+        docs=_rows(), kept=F.count_if("keep"),
     )
 
     by_rule = {
         r["reason"]: r["n"]
-        for r in out.select(SF.explode("reasons").alias("reason"))
+        for r in out.select(F.explode("reasons").alias("reason"))
         .groupBy("reason").count().withColumnRenamed("count", "n").collect()
     }
     return {
@@ -937,16 +896,16 @@ def cmd_warc(args) -> dict:
     # two writes on one parse: persist so each shard decodes once
     recs.persist()
     try:
-        recs.write.mode("overwrite").parquet(args.output + "/records")
-        warc_to_documents(recs).write.mode("overwrite").parquet(
-            args.output + "/documents"
+        _, seen = write_stage(
+            spark, recs, args.output + "/records", records=_rows()
+        )
+        _, docs = write_stage(
+            spark, warc_to_documents(recs), args.output + "/documents",
+            documents=_rows(),
         )
     finally:
         recs.unpersist()
-    return {
-        "records": spark.read.parquet(args.output + "/records").count(),
-        "documents": spark.read.parquet(args.output + "/documents").count(),
-    }
+    return {**seen, **docs}
 
 
 def cmd_textstats(args) -> dict:
@@ -977,8 +936,8 @@ def cmd_ingest(args) -> dict:
         parsed.persist()
         try:
             n_docs = _write_counted(spark, documents_view(parsed), args.output)
-            payloads_view(parsed).write.mode("overwrite").parquet(
-                f"{args.output.rstrip('/')}_media")
+            write_stage(spark, payloads_view(parsed),
+                        f"{args.output.rstrip('/')}_media")
         finally:
             parsed.unpersist()
     else:

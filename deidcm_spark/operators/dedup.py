@@ -26,6 +26,8 @@ shingle + 16 affine maps (universal hashing), instead of 16 md5 passes
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.textops import NORM_FP, SHINGLES, TOKENS
@@ -563,6 +565,40 @@ def _release_local_checkpoint(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
+def delete_path(spark, path: str) -> None:
+    """Recursively delete ``path`` through the Hadoop FileSystem API (any
+    scheme Spark can reach); a missing path is a no-op."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(p, True)
+
+
+def _round_checkpoints(spark, checkpoint_dir: str | None):
+    """``(ckpt, release)`` for an iterative operator's round state.
+
+    Without ``checkpoint_dir``: ``localCheckpoint`` (executor-resident)
+    and :func:`_release_local_checkpoint`.  With it: each ``ckpt`` writes
+    the frame as parquet under ``<checkpoint_dir>/round_<i>`` and reads
+    it back with the written schema (no schema-inference job), so
+    lineage is truncated and the state survives executor loss;
+    ``release`` deletes that round's directory.  Deliberately NOT
+    ``sc.setCheckpointDir`` + ``df.checkpoint()``: that mutates global
+    SparkContext state for every other caller, and nothing ever deletes
+    the checkpoint files (``spark.cleaner.referenceTracking.
+    cleanCheckpoints`` defaults to false)."""
+    if checkpoint_dir is None:
+        return (lambda d: d.localCheckpoint()), _release_local_checkpoint
+    rounds = itertools.count()
+
+    def ckpt(d: DataFrame) -> DataFrame:
+        path = f"{checkpoint_dir}/round_{next(rounds)}"
+        d.write.mode("overwrite").parquet(path)
+        out = spark.read.schema(d.schema).parquet(path)
+        out._round_path = path  # type: ignore[attr-defined]
+        return out
+
+    return ckpt, lambda d: delete_path(spark, d._round_path)
+
+
 def neardup_components(
     df: DataFrame,
     threshold: float = 0.8,
@@ -595,35 +631,13 @@ def neardup_components(
     round state: each round is written as parquet under that directory
     (HDFS/object store on a real cluster) and read back — lineage
     truncated, iteration state survives executor loss, superseded rounds
-    deleted eagerly through the Hadoop FileSystem API.  Deliberately NOT
-    ``sc.setCheckpointDir`` + ``df.checkpoint()``: that mutates global
-    SparkContext state for every other caller, and nothing ever deletes
-    the per-round checkpoint files (``spark.cleaner.referenceTracking.
-    cleanCheckpoints`` defaults to false).  The FINAL labels frame stays
-    backed by its round directory — the caller owns ``checkpoint_dir``
-    cleanup once done consuming the result.
+    deleted eagerly (:func:`_round_checkpoints`).  The FINAL labels frame
+    stays backed by its round directory — the caller owns
+    ``checkpoint_dir`` cleanup once done consuming the result.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if checkpoint_dir is not None:
-        spark = df.sparkSession
-        counter = iter(range(10 * max_iter))
-
-        def _ckpt(d: DataFrame) -> DataFrame:
-            path = f"{checkpoint_dir}/round_{next(counter)}"
-            d.write.mode("overwrite").parquet(path)
-            out = spark.read.parquet(path)
-            out._round_path = path  # type: ignore[attr-defined]
-            return out
-
-        def _release(d: DataFrame) -> None:
-            jvm = spark.sparkContext._jvm
-            p = jvm.org.apache.hadoop.fs.Path(d._round_path)
-            fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            fs.delete(p, True)
-    else:
-        _ckpt = lambda d: d.localCheckpoint()  # noqa: E731
-        _release = _release_local_checkpoint
+    _ckpt, _release = _round_checkpoints(df.sparkSession, checkpoint_dir)
     if pairs is None:
         pairs = ngram_jaccard_pairs(df, threshold=threshold)
     edges = _ckpt(

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from deidcm_spark.operators.dedup import _release_local_checkpoint
+from deidcm_spark.operators.dedup import _round_checkpoints
 from deidcm_spark.schema import local_frame
 
 # scheme matching is case-insensitive (RFC 3986 §3.1: "HTTP://x" is the
@@ -88,25 +88,7 @@ def host_rank(
     pairs collapse — the rank is structural, not link-count-weighted)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        counter = iter(range(10 * iterations + 10))
-
-        def _ckpt(d: DataFrame) -> DataFrame:
-            path = f"{checkpoint_dir}/round_{next(counter)}"
-            d.write.mode("overwrite").parquet(path)
-            out = spark.read.parquet(path)
-            out._round_path = path  # type: ignore[attr-defined]
-            return out
-
-        def _release(d: DataFrame) -> None:
-            jvm = spark.sparkContext._jvm
-            p = jvm.org.apache.hadoop.fs.Path(d._round_path)
-            fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            fs.delete(p, True)
-    else:
-        _ckpt = lambda d: d.localCheckpoint()  # noqa: E731
-        _release = _release_local_checkpoint
+    _ckpt, _release = _round_checkpoints(edges.sparkSession, checkpoint_dir)
 
     # only e and the per-round ranks are checkpointed: out_deg/nodes are
     # one-shot derivations OF e (already a checkpoint root), so their
@@ -156,6 +138,7 @@ def host_rank(
         )
         _release(ranks)
         ranks = new_ranks
+    _release(e)  # the final ranks are their own checkpoint root
     return ranks.select("host", "rank")
 
 

@@ -2,6 +2,8 @@
 ranks checked against a full pure-Python power-iteration oracle of the
 shared spec (dangling redistribution included)."""
 
+import os
+
 import pytest
 
 from deidcm_spark.operators.linkgraph import extract_links, host_rank
@@ -172,6 +174,8 @@ def test_cli_hostrank(tmp_path, capsys, spark):
            "--iterations", "5", "--shuffle-partitions", "4"])
     r = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert r == {"edges": 4, "hosts": 5, "top_host": "hub.example"}
+    # the PageRank round checkpoints are gone once ranks is written
+    assert sorted(os.listdir(rank_out)) == ["edges", "ranks"]
 
 
 def test_anchor_texts(spark):
