@@ -10,7 +10,7 @@ computes, not HOW), re-expressed Spark-first:
   (``deidcm/dicom/dicom2df.py:31-54``);
 * the per-cell Python interpreter loop of the reference
   (``deidcm/dicom/deid_mammogram.py:301-310``) becomes ONE Arrow-vectorized
-  pandas UDF over the span array, with the rule table broadcast;
+  ``mapInArrow`` kernel over the span array, with the rule table broadcast;
 * media redaction (``deid_mammogram.py:153-267``) becomes a ``mapInPandas``
   stage over binary payloads with a pluggable (stubbed) OCR backend;
 * scale features the reference lacks: salted repartitioning on

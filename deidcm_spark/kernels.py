@@ -4,7 +4,6 @@ Parity targets (all in /root/reference/deidcm/dicom/deid_mammogram.py):
 
 * ``gen_dicom_uid``      — :446-457  (deterministic salted-hash UID, matched exactly)
 * ``gen_uuid128``        — :465-474  (sha256 → 16 hex chars → b64 bytes, matched exactly)
-* ``get_first_day_year`` — :483-485
 * ``offset4date``        — :477-480
 * ``hide_time``          — :488-490
 * ``replace_with_dummy_str`` / ``gen_dummy_str`` — :493-513.  The reference
@@ -16,8 +15,9 @@ Parity targets (all in /root/reference/deidcm/dicom/deid_mammogram.py):
 * ``levenshtein_distance`` — deid_verification.py:303-324 (golden pairs
   ported in tests; the query surface uses Spark's built-in ``levenshtein``).
 
-These run inside Arrow-batched pandas UDFs on executors — never per-row on
-the driver.
+These run inside the Arrow deid kernel (operators/deidentify_arrow.py) on
+executors — never per-row on the driver.  The active DA/DT coarsening
+(``get_first_day_year``, :483-485) is a vectorized slice-and-join there.
 """
 
 from __future__ import annotations
@@ -57,11 +57,6 @@ def gen_uuid128_b64(original: str) -> str:
 def gen_uuid128_hex(original: str) -> str:
     """UC variant (tag 0x00189367): hex of gen_uuid128 bytes."""
     return gen_uuid128(original).hex()
-
-
-def get_first_day_year(date: str) -> str:
-    """YYYYMMDD → YYYY0101 (active DA/DT coarsening)."""
-    return f"{date[:4]}0101"
 
 
 def offset4date(date: str, offset: int = 100000) -> str:

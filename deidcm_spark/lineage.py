@@ -215,6 +215,8 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
     at attempt start plus this attempt's — without deduplicating buckets,
     so a bucket committed twice shows up as a surplus.
     """
+    if n_buckets < 1:  # range(0) would leave nothing pending: a silent no-op
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     prior = _committed_rows(spark, out_dir, run_id)
     done = {b for b, _ in prior}
     pending = sorted(set(range(n_buckets)) - done)

@@ -1,11 +1,11 @@
-"""Arrow-native de-identification kernel (the fast hot path).
+"""Arrow-native de-identification kernel: the one batch function behind
+``deidentify_attributes`` (operators/deidentify.py).
 
-The pandas-UDF implementation (operators/deidentify.py) materializes every
-span as a Python dict on both sides of the Arrow boundary — ~16M dict
-allocations per 400k-doc pass.  Profiling on the bench VM showed the stage
-spending 50-70% of CPU in the KERNEL (mmap/TLB churn from the allocation
-storm) while the pure deid compute runs 7x faster than the end-to-end
-stage.  This module removes the per-span Python objects entirely:
+A scalar UDF would materialize every span as a Python dict on both sides of
+the Arrow boundary — ~16M dict allocations per 400k-doc pass, and profiles
+of such a stage showed 50-70% of its CPU in the OS kernel (mmap/TLB churn
+from the allocation storm).  This module keeps spans out of Python objects
+entirely:
 
 * ``mapInArrow`` hands us raw ``pyarrow.RecordBatch``es; spans stay as one
   flat StructArray (``kind/text/media_ref/offset``) plus list offsets;
@@ -19,9 +19,12 @@ stage.  This module removes the per-span Python objects entirely:
 * per-doc segment reductions (counters, max offset, survivor counts) are
   numpy ``cumsum``/``reduceat`` over the list offsets.
 
-Semantics are IDENTICAL to deidentify.py (tests assert span-for-span
-equality on synthetic corpora, recipe cases, and both date modes); the
-reference parity citations live there and in rules.py/kernels.py.
+Semantics follow the reference's action and VR dispatch
+(deid_mammogram.py:321-340, 407-438; the span-level map is in the
+operators/deidentify.py docstring).  tests/test_deid_arrow.py checks the
+kernel span-for-span and counter-for-counter against the independent
+oracle (oracle.deidentify_doc_oracle) on synthetic corpora, recipe cases,
+the ingested table and both date modes.
 """
 
 from __future__ import annotations
@@ -52,7 +55,7 @@ from deidcm_spark.rules import (
 MARKER_TEXT = "PatientIdentityRemoved_0x00120062_CS_1____=YES"
 
 # pseudonymization families — per-distinct-key classification replicating
-# pseudonymize_value's dispatch ORDER (deid_mammogram.py:407-438)
+# the reference's VR/tag dispatch ORDER (deid_mammogram.py:407-438)
 FAM_NONE, FAM_DADT, FAM_TM, FAM_PN, FAM_OBTS, FAM_SH, FAM_LO, FAM_UI, \
     FAM_OB64, FAM_UCHEX = range(10)
 
@@ -63,7 +66,8 @@ _ACTION_CODE = {CONSERVER: ACT_KEEP, RETIRER: ACT_RM, EFFACER: ACT_ER,
 
 
 def _family(vr: str, tags: tuple[str, ...]) -> int:
-    """Mirror of pseudonymize_value's if-chain, evaluated per distinct key."""
+    """Mirror of the reference's VR/tag if-chain (deid_mammogram.py:407-438),
+    evaluated per distinct key."""
     if vr in ("DA", "DT"):
         return FAM_DADT
     if vr == "TM":

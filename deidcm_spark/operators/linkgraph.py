@@ -23,11 +23,13 @@ PageRank spec (shared with the pure-Python test oracle, tests/test_linkgraph.py)
 Scale shape: each iteration is ONE equi-join of the edge list with the
 rank table on ``src_host`` plus one hash aggregation on ``dst_host`` —
 the canonical distributed PageRank; the rank/out-degree tables are
-|hosts| rows (orders of magnitude below |edges|), the dangling mass is a
-single-scalar aggregate per round.  Round state is materialized with the
-same lineage-bounding machinery as ``dedup.neardup_components``:
-``localCheckpoint`` by default, a reliable per-round parquet directory
-via ``checkpoint_dir`` on real clusters, superseded rounds released.
+|hosts| rows (orders of magnitude below |edges|); the node count and each
+round's dangling mass are ``Observation``s on the checkpoint job that
+writes that state, so no round runs an aggregate job of its own.  Round
+state is materialized with the same lineage-bounding machinery as
+``dedup.neardup_components``: ``localCheckpoint`` by default, a reliable
+per-round parquet directory via ``checkpoint_dir`` on real clusters,
+superseded rounds released.
 
 Host skew: a mega-host (wikipedia) is a HOT KEY on both join sides; the
 per-iteration join is exactly the AQE skew-join case
@@ -37,7 +39,7 @@ engine session profile and evidenced in tests/test_plans.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from deidcm_spark.operators.dedup import _round_checkpoints
 from deidcm_spark.schema import local_frame
@@ -90,7 +92,14 @@ def host_rank(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     _ckpt, _release = _round_checkpoints(edges.sparkSession, checkpoint_dir)
 
-    # only e and the per-round ranks are checkpointed: out_deg/nodes are
+    def ckpt_observed(d: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+        """Checkpoint ``d`` and evaluate ``aggs`` on the rows the checkpoint
+        job writes — no separate aggregate job."""
+        obs = Observation()
+        out = _ckpt(d.observe(obs, *(c.alias(k) for k, c in aggs.items())))
+        return out, obs.get
+
+    # only e and the per-round state are checkpointed: out_deg/nodes are
     # one-shot derivations OF e (already a checkpoint root), so their
     # lineage is bounded without pinning extra frames for the whole run
     e = _ckpt(edges.select("src_host", "dst_host").distinct())
@@ -102,18 +111,18 @@ def host_rank(
         .union(e.select(F.col("dst_host").alias("host")))
         .distinct()
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("host", F.lit(0.0).alias("rank"))
-    ranks = _ckpt(
-        nodes.join(out_deg, "host", "left")
-        .select("host", "out_deg", F.lit(1.0 / n).alias("rank"))
+    state, seen = ckpt_observed(
+        nodes.join(out_deg, "host", "left"),
+        n=F.count("*"), n_dangling=F.count_if(F.col("out_deg").isNull()),
     )
+    n = seen["n"]
+    if n == 0:
+        _release(e)
+        return state.select("host", F.lit(0.0).alias("rank"))
+    ranks = state.withColumn("rank", F.lit(1.0 / n))
+    dangling = seen["n_dangling"] / n
     base = (1.0 - damping) / n
     for _ in range(iterations):
-        dangling = (
-            ranks.filter("out_deg is null").agg(F.sum("rank")).first()[0] or 0.0
-        )
         contrib = (
             e.join(
                 ranks.select(
@@ -125,7 +134,7 @@ def host_rank(
             .groupBy(F.col("dst_host").alias("host"))
             .agg(F.sum("share").alias("contrib"))
         )
-        new_ranks = _ckpt(
+        new_state, seen = ckpt_observed(
             ranks.join(contrib, "host", "left").select(
                 "host",
                 "out_deg",
@@ -134,10 +143,12 @@ def host_rank(
                     + F.lit(damping)
                     * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
-            )
+            ),
+            dangling=F.sum(F.when(F.col("out_deg").isNull(), F.col("rank"))),
         )
-        _release(ranks)
-        ranks = new_ranks
+        _release(state)
+        state = ranks = new_state
+        dangling = seen["dangling"] or 0.0  # null when no host is dangling
     _release(e)  # the final ranks are their own checkpoint root
     return ranks.select("host", "rank")
 

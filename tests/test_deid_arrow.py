@@ -1,66 +1,102 @@
-"""Arrow-native deid kernel vs the pandas-UDF reference implementation:
-span-for-span equality (kind, text, media_ref, offset, order) plus counter
-equality on every corpus shape we have — synthetic skewed corpora (media
-mixed in), the 9 recipe cases, the ingested driver table, both date modes,
-and passthrough columns."""
+"""The Arrow deid kernel vs the independent oracle
+(``oracle.deidentify_doc_oracle``, which imports neither rules.py nor
+kernels.py): span-for-span equality (kind, text, media_ref, offset, order)
+plus all four counters, the expected counters computed from
+``oracle._action_for_key`` per input text span.  Corpus shapes: synthetic
+skewed corpora (media mixed in), the 9 recipe cases, the ingested driver
+table, both date modes, passthrough columns, empty and giant documents."""
 
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
 
+from deidcm_spark import oracle
 from deidcm_spark.corpus import case_documents_df, synth_documents
 from deidcm_spark.ingest import documents_to_spans
 from deidcm_spark.operators.deidentify import deidentify_attributes
 
 ORG = "9.9.9.9.9"
+SPAN_T = pa.struct([
+    ("kind", pa.string()), ("text", pa.string()),
+    ("media_ref", pa.string()), ("offset", pa.int32()),
+])
+COUNTERS = ("n_removed", "n_erased", "n_pseudonymized", "n_kept")
+_COUNTER_OF = dict(zip(("RETIRER", "EFFACER", "PSEUDONYMISER", "CONSERVER"),
+                       COUNTERS))
 
 
-def _canon(df):
-    rows = df.collect()
-    out = {}
-    for r in rows:
-        d = r.asDict()
-        spans = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d.pop("spans")
-        ]
-        out[d.pop("doc_id")] = (spans, tuple(sorted(d.items())))
+def oracle_counters(spans) -> dict:
+    """The four action counters one document should report: one count per
+    input text span, by the oracle's action for its attribute key."""
+    out = dict.fromkeys(COUNTERS, 0)
+    for s in spans:
+        if s["kind"] == "text":
+            action = oracle._action_for_key(s["text"].partition("=")[0])[0]
+            out[_COUNTER_OF[action]] += 1
     return out
 
 
-def _assert_impls_equal(docs, **kw):
-    a = _canon(deidentify_attributes(docs, ORG, "s1", impl="arrow", **kw))
-    p = _canon(deidentify_attributes(docs, ORG, "s1", impl="pandas", **kw))
-    assert set(a) == set(p)
-    for doc_id in p:
-        assert a[doc_id] == p[doc_id], f"doc {doc_id}"
+def span_tuples(spans) -> list[tuple]:
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
-def test_arrow_equals_pandas_synth(spark):
+def _assert_matches_oracle(docs, date_mode="first_day_year",
+                           date_offset=100000) -> dict:
+    """Run the engine over ``docs`` and check every output document — spans,
+    counters and passthrough columns — against the oracle applied to its
+    input.  Returns the output rows by doc_id."""
+    inputs = {r["doc_id"]: r.asDict(recursive=True) for r in docs.collect()}
+    out = {
+        r["doc_id"]: r.asDict(recursive=True)
+        for r in deidentify_attributes(
+            docs, ORG, "s1", with_metrics=True,
+            date_mode=date_mode, date_offset=date_offset,
+        ).collect()
+    }
+    assert set(out) == set(inputs)
+    for doc_id, doc in inputs.items():
+        got = out[doc_id]
+        want = oracle.deidentify_doc_oracle(
+            doc_id, doc["spans"], ORG, "s1", date_mode, date_offset
+        )
+        assert span_tuples(got["spans"]) == span_tuples(want), f"doc {doc_id}"
+        assert {c: got[c] for c in COUNTERS} == oracle_counters(doc["spans"]), (
+            f"doc {doc_id}"
+        )
+        for c in doc:
+            if c not in ("doc_id", "spans"):
+                assert got[c] == doc[c], f"doc {doc_id} column {c}"
+    return out
+
+
+def test_arrow_matches_oracle_synth(spark):
     docs = synth_documents(spark, 400, seed=31, media_rate=0.25, skew=0.05)
-    _assert_impls_equal(docs, with_metrics=True)
+    _assert_matches_oracle(docs)
 
 
-def test_arrow_equals_pandas_recipe_cases(spark):
-    _assert_impls_equal(case_documents_df(spark), with_metrics=True)
+def test_arrow_matches_oracle_recipe_cases(spark):
+    _assert_matches_oracle(case_documents_df(spark))
 
 
-def test_arrow_equals_pandas_ingested(spark):
+def test_arrow_matches_oracle_ingested(spark):
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    _assert_impls_equal(documents_to_spans(d), with_metrics=True)
+    _assert_matches_oracle(documents_to_spans(d))
 
 
-def test_arrow_equals_pandas_offset_mode(spark):
+def test_arrow_matches_oracle_offset_mode(spark):
     docs = synth_documents(spark, 150, seed=7, media_rate=0.1)
-    _assert_impls_equal(
-        docs, with_metrics=True, date_mode="offset", date_offset=365
-    )
+    _assert_matches_oracle(docs, date_mode="offset", date_offset=365)
 
 
 def test_arrow_passthrough_columns(spark):
     docs = synth_documents(spark, 100, seed=3).withColumn(
         "bucket", (F.xxhash64("doc_id") % 8).cast("int")
     )
-    _assert_impls_equal(docs, with_metrics=False)
+    _assert_matches_oracle(docs)  # also checks bucket per document
+    assert deidentify_attributes(docs, ORG, "s1").columns == [
+        "doc_id", "spans", "bucket"
+    ]
 
 
 def test_arrow_empty_spans_doc(spark):
@@ -71,17 +107,18 @@ def test_arrow_empty_spans_doc(spark):
         pd.DataFrame({"doc_id": ["empty1"], "spans": [[]]}),
         schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    _assert_impls_equal(docs, with_metrics=True)
-    out = deidentify_attributes(docs, ORG, "s1", impl="arrow").collect()
-    assert [tuple(s) for s in out[0]["spans"]] == [
+    out = _assert_matches_oracle(docs)
+    assert span_tuples(out["empty1"]["spans"]) == [
         ("text", "PatientIdentityRemoved_0x00120062_CS_1____=YES", "", 0)
     ]
 
 
-def test_arrow_rejects_unknown_impl(spark):
+@pytest.mark.parametrize("mode", ["offest", "", "FIRST_DAY_YEAR"])
+def test_unknown_date_mode_rejected(spark, mode):
+    """A misspelt date_mode must not fall back to year coarsening."""
     docs = synth_documents(spark, 5, seed=1)
-    with pytest.raises(ValueError):
-        deidentify_attributes(docs, ORG, "s1", impl="rdd")
+    with pytest.raises(ValueError, match="date_mode"):
+        deidentify_attributes(docs, ORG, "s1", date_mode=mode)
 
 
 def test_arrow_giant_and_empty_docs_mixed(spark):
@@ -110,18 +147,13 @@ def test_arrow_giant_and_empty_docs_mixed(spark):
         schema=normal.schema,
     )
     docs = normal.unionByName(extremes)
-    _assert_impls_equal(docs, with_metrics=True)
-    out = {
-        r["doc_id"]: r
-        for r in deidentify_attributes(docs, ORG, "s1", with_metrics=True).collect()
-    }
+    out = _assert_matches_oracle(docs)
     g = out["giant"]
     assert g["n_pseudonymized"] == 20_000
     assert g["spans"][-1]["text"].endswith("=YES")
     assert g["spans"][-1]["offset"] == 20_000
     # one attr_key shared by all 20k spans → ONE deterministic replacement
-    # (keyed on salt+doc_id+attr_key; parity with the pandas impl asserted
-    # above by _assert_impls_equal)
+    # (keyed on salt+doc_id+attr_key; oracle parity asserted above)
     from deidcm_spark.kernels import patient_name
 
     texts = {s["text"] for s in g["spans"][:-1]}
@@ -137,14 +169,8 @@ def test_record_batch_slice_and_empty_paths():
     """Drive deidentify_record_batch directly on a SLICED batch (non-zero
     Arrow offsets — the normalization path Spark may or may not exercise)
     and on an empty batch."""
-    import pyarrow as pa
-
     from deidcm_spark.operators.deidentify_arrow import deidentify_record_batch
 
-    span_t = pa.struct([
-        ("kind", pa.string()), ("text", pa.string()),
-        ("media_ref", pa.string()), ("offset", pa.int32()),
-    ])
     docs = []
     for i in range(5):
         docs.append([
@@ -153,7 +179,7 @@ def test_record_batch_slice_and_empty_paths():
             {"kind": "media", "text": "", "media_ref": f"m{i}", "offset": 1},
         ])
     batch = pa.RecordBatch.from_arrays(
-        [pa.array([f"d{i}" for i in range(5)]), pa.array(docs, pa.list_(span_t))],
+        [pa.array([f"d{i}" for i in range(5)]), pa.array(docs, pa.list_(SPAN_T))],
         names=["doc_id", "spans"],
     )
 

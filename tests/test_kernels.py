@@ -80,7 +80,6 @@ def test_gen_uuid128_variants():
 
 
 def test_date_time_kernels():
-    assert kernels.get_first_day_year("20230817") == "20230101"
     assert kernels.hide_time() == "000000"
     assert kernels.OB_DATE_CONSTANT == "2022-01-01T00:00:00"
 

@@ -326,6 +326,24 @@ def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, job, case):
         assert sum(v[3] for v in got.values()) == docs.count()
 
 
+@pytest.mark.parametrize("n_buckets", [0, -1])
+@pytest.mark.parametrize("job", JOBS)
+def test_commit_rejects_fewer_than_one_bucket(spark, tmp_path, job, n_buckets):
+    """n_buckets < 1 leaves range(n_buckets) empty: the job must refuse
+    instead of reporting a clean attempt that wrote nothing."""
+    from deidcm_spark.lineage import run_extract_job
+
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="n_buckets"):
+        if job == "deid":
+            run_deid_job(spark, _docs(spark, 10), str(out), ORG_ROOT, SALT,
+                         n_buckets=n_buckets)
+        else:
+            run_extract_job(spark, _raw(spark, 10), str(out), SALT,
+                            n_buckets=n_buckets)
+    assert not out.exists()
+
+
 @pytest.mark.parametrize("job", JOBS)
 def test_lineage_is_one_file_per_attempt(spark, tmp_path, job):
     import glob

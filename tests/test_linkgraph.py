@@ -170,10 +170,17 @@ def test_cli_hostrank(tmp_path, capsys, spark):
            "--shuffle-partitions", "4"])
     capsys.readouterr()
     rank_out = str(tmp_path / "rank_out")
-    _main(["hostrank", "--input", warc_out + "/records", "--output", rank_out,
-           "--iterations", "5", "--shuffle-partitions", "4"])
+    sc = spark.sparkContext
+    sc.setJobGroup("cli_hostrank", "cli hostrank")
+    try:
+        _main(["hostrank", "--input", warc_out + "/records", "--output",
+               rank_out, "--iterations", "5", "--shuffle-partitions", "4"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     r = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert r == {"edges": 4, "hosts": 5, "top_host": "hub.example"}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cli_hostrank"))
+    assert n_jobs <= 30, f"hostrank: {n_jobs} Spark jobs, pinned at 30"
     # the PageRank round checkpoints are gone once ranks is written
     assert sorted(os.listdir(rank_out)) == ["edges", "ranks"]
 

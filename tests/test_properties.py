@@ -3,6 +3,7 @@ must agree with the independent oracle on arbitrary generated inputs — not
 just the curated fixtures.  Pure Python, no Spark session."""
 
 import string
+from datetime import date
 
 from hypothesis import given, settings, strategies as st
 
@@ -57,15 +58,30 @@ def test_det_str_spec_shared(salt, doc_id, key):
     )
 
 
-@given(st.text(min_size=0, max_size=100))
-@settings(max_examples=200, deadline=None)
-def test_pseudonymize_doc_matches_oracle(value):
-    """Full single-doc pipeline vs oracle on an arbitrary value under every
-    recipe VR family tag."""
-    from deidcm_spark.corpus import attr_key
-    from deidcm_spark.operators.deidentify import deidentify_doc
-    from deidcm_spark.oracle import deidentify_doc_oracle
+@st.composite
+def mode_and_value(draw):
+    """``(date_mode, date_offset, value)``: any text under year coarsening;
+    under ``offset`` a YYYYMMDD date (plus any tail), since offset mode
+    parses the first 8 characters as a date."""
+    if draw(st.booleans()):
+        return "first_day_year", 100000, draw(st.text(min_size=0, max_size=100))
+    day = draw(st.dates(min_value=date(1900, 1, 1), max_value=date(2100, 12, 31)))
+    tail = draw(st.text(min_size=0, max_size=20))
+    return "offset", draw(st.integers(0, 100000)), day.strftime("%Y%m%d") + tail
 
+
+@given(mode_and_value())
+@settings(max_examples=200, deadline=None)
+def test_pseudonymize_doc_matches_oracle(case):
+    """The production batch kernel on a one-document RecordBatch vs the
+    oracle, for an arbitrary value under every recipe VR family tag, in
+    both date modes: spans and all four counters."""
+    from deidcm_spark.corpus import attr_key
+    from deidcm_spark.operators.deidentify_arrow import deidentify_record_batch
+    import pyarrow as pa
+    from test_deid_arrow import COUNTERS, SPAN_T, oracle_counters, span_tuples
+
+    date_mode, date_offset, value = case
     spans = []
     for i, (tag, v) in enumerate(
         [("0x00080018", "UI"), ("0x00080020", "DA"), ("0x00080030", "TM"),
@@ -74,11 +90,17 @@ def test_pseudonymize_doc_matches_oracle(value):
     ):
         spans.append({"kind": "text", "text": f"{attr_key(tag, v)}={value}",
                       "media_ref": "", "offset": i})
-    got, *_ = deidentify_doc("doc", spans, "1.2.3", "s")
-    want = deidentify_doc_oracle("doc", spans, "1.2.3", "s")
-    assert [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in got] == [
-        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want
-    ]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["doc"]), pa.array([spans], pa.list_(SPAN_T))],
+        names=["doc_id", "spans"],
+    )
+    (got,) = deidentify_record_batch(
+        batch, "1.2.3", "s", date_mode, date_offset
+    ).to_pylist()
+    want = oracle.deidentify_doc_oracle("doc", spans, "1.2.3", "s",
+                                        date_mode, date_offset)
+    assert span_tuples(got["spans"]) == span_tuples(want)
+    assert {c: got[c] for c in COUNTERS} == oracle_counters(spans)
 
 
 # ---------------------------------------------------------------------------
