@@ -292,10 +292,6 @@ def lsh_index_probe(
     )
 
 
-def shingle_rows(df: DataFrame) -> DataFrame:
-    return df.select("doc_id", F.explode(F.expr(SHINGLES)).alias("shingle"))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,

@@ -13,16 +13,20 @@ Reference semantics (/root/reference/deidcm/dicom/deid_mammogram.py):
 Spark-first re-design: the pixel payloads live OUT of the document rows (a
 ``media_payloads`` table keyed by ``media_ref``), so the document shuffle
 stays slim and the pixel stage is an independent ``mapInPandas`` over
-payload batches.  OCR is a pluggable per-batch backend: the default is the
-deterministic stub that reads the ground-truth ``ocr_boxes`` table the
-corpus synthesizer embeds (a real backend — easyOCR/tesseract — would be
-initialized ONCE per batch here, fixing the reference's per-image reader
-construction at :169; those libs are not in this container).
+payload batches.  The gates and the margin geometry exist once, as Spark
+SQL (:func:`_gated_rects`); :func:`redaction_plan` clamps those rects into
+the oracle-checked fill plan and :func:`redact_media` paints them
+with the numpy kernel :func:`redact_array`.  OCR is a pluggable backend
+(:func:`ocr_detect`); the default box source is the ground-truth
+``ocr_boxes`` table the corpus synthesizer embeds.
 
-Plan shape (one shuffle, no driver participation):
+Plan shape (one shuffle, of the boxes only; nothing collected):
 
-    ocr_boxes ──groupBy(media_ref).collect_list──┐
-    media_payloads ──join(media_ref)─────────────┴─▶ mapInPandas(redact) ─▶ sink
+    ocr_boxes ──groupBy(media_ref): gates → rects──┐
+    media_payloads ──left join(media_ref)──────────┴─▶ mapInPandas(paint) ─▶ sink
+
+(the rects side is broadcast when Spark's size estimate allows it, and the
+payload side is not shuffled).
 
 Document rows are untouched: spans keep (kind, media_ref, order), satisfying
 span-sequence equality; only the payload bytes behind ``media_ref`` change.
@@ -30,6 +34,7 @@ span-sequence equality; only the payload bytes behind ``media_ref`` change.
 
 from __future__ import annotations
 
+import string
 from typing import Iterator
 
 import numpy as np
@@ -45,57 +50,27 @@ from deidcm_spark.schema import (  # shared spec — one source of truth
 REDACT_MARGIN = 300
 
 
-def expand_box(x1: int, y1: int, x2: int, y2: int, margin: int) -> tuple[int, int, int, int]:
-    """Sign-aware margin expansion (hide_text :232-244): grow outward along
-    whichever direction the corner pair runs."""
-    if x1 < x2:
-        x1, x2 = x1 - margin, x2 + margin
-    else:
-        x1, x2 = x1 + margin, x2 - margin
-    if y1 < y2:
-        y1, y2 = y1 - margin, y2 + margin
-    else:
-        y1, y2 = y1 + margin, y2 - margin
-    return x1, y1, x2, y2
-
-
 def redact_array(
     pixels: np.ndarray,
-    boxes: list[dict],
-    margin: int = REDACT_MARGIN,
+    rects: list[dict],
     color_value: str = "black",
     mode: str = "rectangle",
-    authorized: frozenset[str] | None = None,
 ) -> np.ndarray:
-    """numpy redaction kernel for one image.
+    """numpy paint kernel for one image: fill or blur each gated rectangle.
 
-    Differences vs the reference, pinned by our fixtures: fills are done with
-    numpy slice assignment clamped to the image (PIL's draw.rectangle clamps
-    implicitly and includes both corners — we include both corners too);
-    ``blur`` mode applies :func:`pil_blur` ×30 — the exact ImageFilter.BLUR
-    ring-kernel spec (unfiltered 2-px border) without PIL — except crops
-    smaller than the 5×5 kernel, which PIL would refuse and which are
-    mean-filled here so content is always destroyed.
+    ``rects`` are :func:`_gated_rects` elements (``box_idx, xa, ya, xb, yb``,
+    margin-expanded, corner-sorted, NOT clamped); every gate has already
+    run in SQL.  Rects are painted in ``box_idx`` order (overlapping blurs
+    compound) after clamping to the image; bounds are inclusive, like PIL's
+    draw.rectangle.  ``blur`` mode applies :func:`pil_blur` ×30 — the exact
+    ImageFilter.BLUR ring-kernel spec (unfiltered 2-px border) without PIL
+    — except crops smaller than the 5×5 kernel, which PIL would refuse and
+    which are mean-filled here so content is always destroyed.
     """
     out = pixels.copy()
-    if not boxes:
-        return out
-    ordered = sorted(boxes, key=lambda b: b["box_idx"])
-    # whole-image confidence gate on the FIRST detection (:171-179)
-    if ordered[0]["confidence"] <= 0.3:
-        return out
-    words = authorized if authorized is not None else load_authorized_words()
     h, w = out.shape[0], out.shape[1]
-    rgb = out.ndim == 3
-    for b in ordered:
-        word = b["word"]
-        if word == "" or len(word) <= 1:  # false-positive guard (:228)
-            continue
-        if word.upper() in words:  # dictionary exemption (:201)
-            continue
-        x1, y1, x2, y2 = expand_box(b["x1"], b["y1"], b["x2"], b["y2"], margin)
-        xa0, xb0 = sorted((int(x1), int(x2)))
-        ya0, yb0 = sorted((int(y1), int(y2)))
+    for r in sorted(rects, key=lambda r: r["box_idx"]):
+        xa0, ya0, xb0, yb0 = (int(r[k]) for k in ("xa", "ya", "xb", "yb"))
         xa, xb = max(0, xa0), min(w - 1, xb0)
         ya, yb = max(0, ya0), min(h - 1, yb0)
         if xa > xb or ya > yb:
@@ -127,8 +102,7 @@ def redact_array(
                     ya - ya0 : yb - ya0 + 1, xa - xa0 : xb - xa0 + 1
                 ]
         else:
-            fill = 255 if color_value == "white" else 0
-            out[ya : yb + 1, xa : xb + 1] = fill
+            out[ya : yb + 1, xa : xb + 1] = 255 if color_value == "white" else 0
     return out
 
 
@@ -292,13 +266,7 @@ def dicom_decode_normalize(
         if modality == "CT":
             data = apply_modality_lut_linear(data, rescale_slope, rescale_intercept)
         data = apply_voi_lut_linear(data, voi_center, voi_width)
-    if monochrome1:
-        data = data.max() - data
-    data = data - data.min()
-    mx = data.max()
-    if mx > 0:
-        data = data / mx
-    return (data * 255).astype(np.uint8)
+    return normalize_to_uint8(data, monochrome1)
 
 
 def normalize_to_uint8(pixels: np.ndarray, monochrome1: bool = False) -> np.ndarray:
@@ -493,6 +461,50 @@ def decode_payload(row: dict | pd.Series) -> np.ndarray:
     return arr.reshape(shape)
 
 
+def _gated_rects(
+    boxes: DataFrame, margin: int, authorized: frozenset[str] | None = None
+) -> DataFrame:
+    """The reference's redaction gates, once, as one Spark aggregate:
+    ``(media_ref, rects)`` per image whose FIRST detection (smallest
+    ``box_idx`` present — a pre-filtered box table need not start at 0) has
+    confidence > 0.3 (deid_mammogram.py:171-179) and that keeps at least
+    one rect.  A box becomes a rect unless its word is empty/len≤1 (:228)
+    or authorized (upper-cased membership, :201); its corners grow by the
+    sign-aware ±margin (:232-244) and are sorted into (xa, ya) ≤ (xb, yb).
+    Rects are NOT clamped: blur pads the out-of-image part of its crop."""
+    words = sorted(authorized if authorized is not None else load_authorized_words())
+    x1, y1, x2, y2 = (F.col(c) for c in ("x1", "y1", "x2", "y2"))
+    ex1 = F.when(x1 < x2, x1 - margin).otherwise(x1 + margin)
+    ex2 = F.when(x1 < x2, x2 + margin).otherwise(x2 - margin)
+    ey1 = F.when(y1 < y2, y1 - margin).otherwise(y1 + margin)
+    ey2 = F.when(y1 < y2, y2 + margin).otherwise(y2 - margin)
+    rect = F.struct(
+        "box_idx",
+        F.least(ex1, ex2).alias("xa"),
+        F.least(ey1, ey2).alias("ya"),
+        F.greatest(ex1, ex2).alias("xb"),
+        F.greatest(ey1, ey2).alias("yb"),
+    )
+    word = F.col("word")
+    # ASCII words (the usual case) upper-case through translate: Spark's
+    # upper() maps case with ICU, whose first use in a process costs
+    # ~1.5 s (measured in the first redact_media job, 4-core host)
+    upper = F.when(
+        F.length(word) == F.octet_length(word),
+        F.translate(word, string.ascii_lowercase, string.ascii_uppercase),
+    ).otherwise(F.upper(word))
+    word_ok = (F.length(word) > 1) & ~upper.isin(words)
+    return (
+        boxes.groupBy("media_ref")
+        .agg(
+            F.min_by("confidence", "box_idx").alias("_first_conf"),
+            F.collect_list(F.when(word_ok, rect)).alias("rects"),
+        )
+        .filter((F.col("_first_conf") > 0.3) & (F.size("rects") > 0))
+        .select("media_ref", "rects")
+    )
+
+
 def redaction_plan(
     boxes: DataFrame,
     margin: int = REDACT_MARGIN,
@@ -501,48 +513,22 @@ def redaction_plan(
     authorized: frozenset[str] | None = None,
     dims: DataFrame | None = None,
 ) -> DataFrame:
-    """The gate + geometry stage of redaction as PURE Spark SQL (codegen):
-    (media_ref, box_idx, xa, ya, xb, yb) fill rectangles after the
-    reference's gates — whole-image first-box confidence (> 0.3,
-    deid_mammogram.py:171-179), empty/len≤1 word guard (:228), authorized
-    -word exemption (:201), sign-aware ±margin expansion (:232-244) and
-    image clamping.
-
-    Splitting the gates out of the pixel UDF makes them driver-
-    oracle-checkable (DuckDB re-derives the same rects) and keeps the
-    mapInPandas stage pure pixel fill; at corpus scale the plan is one
-    window over media_ref — the same partitioning as the payload join that
-    consumes it, so no extra shuffle.
+    """Fill rectangles ``(media_ref, box_idx, xa, ya, xb, yb)`` as pure
+    Spark SQL: the :func:`_gated_rects` rects, one row each, clamped to the
+    image and dropped when the clamp leaves nothing — exactly the pixels
+    :func:`redact_media` fills.  The DuckDB twin in ``__spark_entry__``
+    re-derives the same rows independently, so the gates are
+    oracle-checked.
 
     Clamping: ``dims`` — a (media_ref, width, height) table (e.g. a
     projection of the payload table) — clamps each rectangle to ITS OWN
-    image, matching redact_array's per-image ``out.shape`` clamp on
-    mixed-size corpora (real ``read_dcm_documents`` ingests vary in
-    Rows/Columns).  Without it the static ``width``/``height`` arguments
-    apply to every image — only correct for uniform corpora like the
-    synthetic 96x96 one.
+    image, as redact_array does on mixed-size corpora (real
+    ``read_dcm_documents`` ingests vary in Rows/Columns).  Without it the
+    static ``width``/``height`` arguments apply to every image — only
+    correct for uniform corpora like the synthetic 96x96 one.
     """
-    from pyspark.sql import Window
-
-    words = sorted(authorized if authorized is not None else load_authorized_words())
-    # gate on the FIRST detection by box order (smallest box_idx PRESENT —
-    # not literal 0: redact_array sorts and takes ordered[0], and a
-    # pre-filtered box table may not start at index 0)
-    w = (
-        Window.partitionBy("media_ref")
-        .orderBy("box_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    first_conf = F.first("confidence").over(w)
-    b = boxes.withColumn("_first_conf", first_conf)
-    ex1 = F.when(F.col("x1") < F.col("x2"), F.col("x1") - margin).otherwise(F.col("x1") + margin)
-    ex2 = F.when(F.col("x1") < F.col("x2"), F.col("x2") + margin).otherwise(F.col("x2") - margin)
-    ey1 = F.when(F.col("y1") < F.col("y2"), F.col("y1") - margin).otherwise(F.col("y1") + margin)
-    ey2 = F.when(F.col("y1") < F.col("y2"), F.col("y2") + margin).otherwise(F.col("y2") - margin)
-    applied = (
-        (F.col("_first_conf") > 0.3)
-        & (F.length("word") > 1)
-        & (~F.upper("word").isin(words))
+    b = _gated_rects(boxes, margin, authorized).select(
+        "media_ref", F.inline("rects")
     )
     if dims is not None:
         b = b.join(
@@ -556,13 +542,13 @@ def redaction_plan(
         xmax, ymax = F.col("_xmax"), F.col("_ymax")
     else:
         xmax, ymax = F.lit(width - 1), F.lit(height - 1)
-    planned = b.filter(applied).select(
+    planned = b.select(
         "media_ref",
         "box_idx",
-        F.greatest(F.lit(0), F.least(ex1, ex2)).alias("xa"),
-        F.greatest(F.lit(0), F.least(ey1, ey2)).alias("ya"),
-        F.least(xmax, F.greatest(ex1, ex2)).alias("xb"),
-        F.least(ymax, F.greatest(ey1, ey2)).alias("yb"),
+        F.greatest(F.lit(0), "xa").alias("xa"),
+        F.greatest(F.lit(0), "ya").alias("ya"),
+        F.least(xmax, "xb").alias("xb"),
+        F.least(ymax, "yb").alias("yb"),
     )
     return planned.filter((F.col("xa") <= F.col("xb")) & (F.col("ya") <= F.col("yb")))
 
@@ -624,40 +610,33 @@ def redact_media(
 ) -> DataFrame:
     """media_payloads × ocr_boxes → redacted media_payloads (same schema).
 
-    Left join: payloads with no detections pass through identity (the
-    reference returns the original pixels when OCR finds nothing, :43).
+    The gates run in SQL (:func:`_gated_rects`); the left join hands each
+    payload its rects and the ``mapInPandas`` stage only paints them
+    (:func:`redact_array`).  An image without rects — no detections
+    (the reference returns the original pixels, :43), a low-confidence
+    first box, or only exempt words — passes through undecoded.
+    ``color_value`` is ``black``/``white``; ``mode`` is ``rectangle``/``blur``.
     """
-    grouped = boxes.groupBy("media_ref").agg(
-        F.collect_list(
-            F.struct("box_idx", "x1", "y1", "x2", "y2", "word", "confidence")
-        ).alias("_boxes")
-    )
-    joined = payloads.join(grouped, "media_ref", "left")
+    if mode not in ("rectangle", "blur"):
+        raise ValueError(f"mode must be 'rectangle' or 'blur', got {mode!r}")
+    if color_value not in ("black", "white"):
+        raise ValueError(f"color_value must be 'black' or 'white', got {color_value!r}")
+    joined = payloads.join(_gated_rects(boxes, margin), "media_ref", "left")
     schema = payloads.schema
-    authorized = load_authorized_words()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # a real OCR backend would be constructed HERE, once per batch
         for pdf in batches:
             out_pixels = []
             cols = (pdf["pixels"], pdf["width"], pdf["height"],
-                    pdf["channels"], pdf["bits"], pdf["_boxes"])
-            for pixels, w, h, ch, bits, blist in zip(*[c.to_numpy() for c in cols]):
-                if blist is None or len(blist) == 0:
+                    pdf["channels"], pdf["bits"], pdf["rects"])
+            for pixels, w, h, ch, bits, rects in zip(*[c.to_numpy() for c in cols]):
+                if rects is None:
                     out_pixels.append(pixels)
                     continue
                 arr = decode_payload(
                     {"pixels": pixels, "width": w, "height": h, "channels": ch, "bits": bits}
                 )
-                red = redact_array(
-                    arr,
-                    [dict(b) for b in blist],
-                    margin=margin,
-                    color_value=color_value,
-                    mode=mode,
-                    authorized=authorized,
-                )
-                out_pixels.append(red.tobytes())
+                out_pixels.append(redact_array(arr, rects, color_value, mode).tobytes())
             res = pdf[["media_ref", "width", "height", "channels", "bits"]].copy()
             res["pixels"] = out_pixels
             yield res

@@ -126,13 +126,6 @@ def scrub_text(df: DataFrame, names: list[str] | None = None,
 _UID_PAT = re.compile(UID_RE)
 
 
-def remap_uids_in_text(text: str, org_root: str) -> str:
-    """Replace every dotted OID with its deterministic pseudonym.  Same
-    input UID → same output UID across every call site (kernels.
-    gen_dicom_uid parity with the structured lane)."""
-    return _UID_PAT.sub(lambda m: gen_dicom_uid("", m.group(0), org_root), text)
-
-
 def _uid_remapper(org_root: str):
     """A ``re.sub`` callback mapping each matched UID to its pseudonym,
     memoized: the corpus-wide UID universe is far smaller than its
@@ -147,6 +140,13 @@ def _uid_remapper(org_root: str):
         return hit
 
     return remap
+
+
+def remap_uids_in_text(text: str, org_root: str) -> str:
+    """Replace every dotted OID with its deterministic pseudonym.  Same
+    input UID → same output UID across every call site (kernels.
+    gen_dicom_uid parity with the structured lane)."""
+    return _UID_PAT.sub(_uid_remapper(org_root), text)
 
 
 def scrub_uids(df: DataFrame, org_root: str, text_col: str = "text") -> DataFrame:

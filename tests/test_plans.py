@@ -213,3 +213,30 @@ def test_register_bucketed_winner_agg_no_exchange(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_fp_reattached")
         spark.sql("DROP TABLE IF EXISTS t_fp_seed")
+
+
+def _physical_nodes(plan):
+    """Every node of a physical plan, the plan itself first."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i))
+
+
+def test_redact_media_plan_gates_in_one_aggregate(spark):
+    """The redaction gates are one aggregate over the boxes: no Window,
+    exactly one hash Exchange (the boxes' groupBy), and the payload side
+    of the join — the pixel bytes — is never shuffled."""
+    from deidcm_spark.operators.media import redact_media
+
+    payloads, boxes = corpus.synth_media(spark, 40, seed=5, media_rate=0.5)
+    df = redact_media(payloads, boxes, margin=8)
+    plan = _plan(df)
+    assert "Window" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "ObjectHashAggregate" in plan and "MapInPandas" in plan
+    root = df._jdf.queryExecution().executedPlan().executedPlan()  # under AQE
+    (join,) = [n for n in _physical_nodes(root) if "Join" in n.nodeName()]
+    payload_side = join.children().apply(0)
+    assert "pixels" in payload_side.output().toString()
+    assert not any("Exchange" in n.nodeName() for n in _physical_nodes(payload_side))

@@ -164,11 +164,19 @@ def test_scrub_chain_idempotent(text):
 @given(_phiish)
 @settings(max_examples=300, deadline=None)
 def test_uid_remap_total_and_stable(text):
-    from deidcm_spark.operators.scrub import remap_uids_in_text
+    """The memoized remapper (the one scrub_uids runs per task) rewrites
+    every UID mention, repeated ones included, exactly as one
+    gen_dicom_uid call per match would."""
+    import re as _re
 
-    a = remap_uids_in_text(text, "9.9")
-    b = remap_uids_in_text(text, "9.9")
-    assert a == b  # deterministic
+    from deidcm_spark.kernels import gen_dicom_uid
+    from deidcm_spark.operators.scrub import UID_RE, remap_uids_in_text
+
+    doubled = f"{text} {text}"  # every UID twice: the second is a memo hit
+    a = remap_uids_in_text(doubled, "9.9")
+    assert a == remap_uids_in_text(doubled, "9.9")  # deterministic
+    want = _re.sub(UID_RE, lambda m: gen_dicom_uid("", m.group(0), "9.9"), doubled)
+    assert a == want
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Round-2 additions: VOI-LUT decode parity, redaction_plan ≡ pixel kernel,
+"""Round-2 additions: VOI-LUT decode parity, redaction_plan ≡ pixel oracle,
 scrub name escaping, multi-probe LSH recall, scale-safe embedding near-dup
 plan shape, basis-point split semantics, idempotent streaming sink."""
 
@@ -10,10 +10,10 @@ from deidcm_spark import duck_oracle as dk
 from deidcm_spark.operators import dedup, similarity
 from deidcm_spark.operators.media import (
     dicom_decode_normalize,
-    redact_array,
     redaction_plan,
 )
 from deidcm_spark.operators.scrub import scrub_text, scrub_text_expr
+from deidcm_spark.oracle import redact_pixels_oracle
 
 SF = "/root/testdata/sf0.001"
 
@@ -95,13 +95,13 @@ def test_transform_media_voi_rows(spark):
 
 
 # ---------------------------------------------------------------------------
-# redaction_plan (codegen gates) ≡ redact_array (pixel kernel)
+# redaction_plan (codegen gates) ≡ redact_pixels_oracle (raw-box pixel gates)
 # ---------------------------------------------------------------------------
 
 def test_redaction_plan_matches_pixel_kernel(spark):
-    """The SQL gate/geometry stage and the Python pixel kernel must agree:
-    filling the planned rects reproduces redact_array byte for byte over
-    the whole SQL box corpus."""
+    """The SQL gate/geometry stage and the independent pixel oracle must
+    agree: filling the planned rects reproduces redact_pixels_oracle byte
+    for byte over the whole SQL box corpus."""
     spark.read.parquet(f"{SF}/documents.parquet").createOrReplaceTempView("documents")
     boxes = spark.sql(dk.boxes_sql("spark"))
     by_ref: dict[str, list[dict]] = {}
@@ -115,7 +115,7 @@ def test_redaction_plan_matches_pixel_kernel(spark):
     n_applied = 0
     for ref, blist in by_ref.items():
         base = np.zeros((96, 96), dtype=np.uint8) + 7
-        want = redact_array(base, blist, margin=8)
+        want = redact_pixels_oracle(base, blist, margin=8)
         got = base.copy()
         for xa, ya, xb, yb in rects.get(ref, []):
             got[ya : yb + 1, xa : xb + 1] = 0
@@ -404,8 +404,8 @@ def test_stratified_sample_rates(spark):
 
 def test_redaction_plan_gate_uses_first_present_box(spark):
     """Box tables need not start at box_idx 0 (pre-filtered detections):
-    the confidence gate anchors to the smallest index PRESENT, like
-    redact_array's ordered[0]."""
+    the confidence gate anchors to the smallest index PRESENT, like the
+    reference's ocr_data[0] over its ordered detections."""
     rows = [
         # image A: indices 3,7 — first present (3) is confident -> redact
         ("a", 3, 10, 10, 20, 20, "WORDY", 0.9),
@@ -557,10 +557,7 @@ def test_blur_mode_uses_ring_kernel(spark):
     img = np.zeros((40, 40), dtype=np.uint8)
     img[10:20, 10:20] = 200
     out = redact_array(
-        img,
-        [{"box_idx": 0, "x1": 8, "y1": 8, "x2": 24, "y2": 24,
-          "word": "WORDY", "confidence": 0.9}],
-        margin=0, mode="blur",
+        img, [{"box_idx": 0, "xa": 8, "ya": 8, "xb": 24, "yb": 24}], mode="blur"
     )
     region = out[8:25, 8:25]
     assert not np.array_equal(region, img[8:25, 8:25])
@@ -640,10 +637,7 @@ def test_blur_small_crop_and_uint16():
     img = np.zeros((20, 20), dtype=np.uint8)
     img[5:8, 5:7] = 220  # PHI glyph on black background, crop < 5x5
     out = redact_array(
-        img,
-        [{"box_idx": 0, "x1": 5, "y1": 5, "x2": 8, "y2": 7,
-          "word": "WORDY", "confidence": 0.9}],
-        margin=0, mode="blur",
+        img, [{"box_idx": 0, "xa": 5, "ya": 5, "xb": 8, "yb": 7}], mode="blur"
     )
     region = out[5:8, 5:9]
     assert len(set(region.ravel().tolist())) == 1  # mean-filled, not legible
