@@ -824,18 +824,12 @@ _DOUBLED_SQL = (
 
 
 def q_dedup_exact(spark, sf_dir):
-    """BOTH exact-dedup code paths in one entry: the single hash aggregate
-    and the two-phase salted variant (hot keys split across reducers) must
-    produce the identical result set by construction — the tagged union
-    oracle-checks each against the same SQL aggregation."""
-    docs = _doubled_docs(spark, sf_dir)
-    plain = dedup.dedup_exact(docs).select(
+    """Exact dedup over the doubled corpus.  The ``variant`` column is kept
+    (always ``'plain'``) because perfbench's curate oracle re-targets this
+    entry's SQL and filters on it."""
+    return dedup.dedup_exact(_doubled_docs(spark, sf_dir)).select(
         F.lit("plain").alias("variant"), "fp", "keep_doc_id", "n_dupes"
     )
-    salted = dedup.dedup_exact_salted(docs).select(
-        F.lit("salted").alias("variant"), "fp", "keep_doc_id", "n_dupes"
-    )
-    return plain.union(salted)
 
 
 def q_minhash_signatures(spark, sf_dir):
@@ -952,7 +946,7 @@ def _lines_synth_expr(cast_ty: str) -> str:
 
 def q_line_dedup(spark, sf_dir):
     """C4-style corpus-wide line dedup (operators/spandedup.py:line_dedup,
-    salted two-phase winner aggregation): the first occurrence of each
+    one winner aggregate per line fingerprint): the first occurrence of each
     eligible line by (doc_id, line_idx) survives, documents rebuilt in
     line order.  Oracle = FULL DuckDB re-derivation: positional split via
     list comprehension, the identical md5-prefix fingerprint,
@@ -2131,7 +2125,7 @@ WITH agg AS (
   FROM ({_DOUBLED_SQL}) GROUP BY 1
 )
 SELECT v.variant, a.fp, a.keep_doc_id, a.n_dupes
-FROM agg a CROSS JOIN (VALUES ('plain'), ('salted')) AS v(variant)
+FROM agg a CROSS JOIN (VALUES ('plain')) AS v(variant)
 """,
         "events_range_join": _EVENTS_RANGE_SQL,
         "minhash_signatures": _minhash_sql(),

@@ -435,7 +435,7 @@ buys for deid.
 
 The exact-substring-dedup lane (round-3 `spandedup.substring_dedup`,
 window=32, fast hashing) is the heaviest NEW lane: O(tokens × window)
-hashing on the explode side, a salted winner aggregation over every
+hashing on the explode side, one winner aggregation over every
 window occurrence, the loser join back, and per-doc interval-merge
 folds — on the replicated corpus every window is a 64-way duplicate,
 so the winner/loser machinery carries real volume at each level.

@@ -86,6 +86,15 @@ def _positions(df: DataFrame, n_bits: int, n_hashes: int, hash_impl: str) -> Dat
     )
 
 
+def _check_bloom(n_bits: int, n_hashes: int) -> None:
+    # n_hashes=0 makes bool_and over no hits null, dropping every document;
+    # n_bits=0 dies in a task on the modulo
+    if n_bits < 1 or n_hashes < 1:
+        raise ValueError(
+            f"need n_bits >= 1 and n_hashes >= 1, got {n_bits} bits x {n_hashes}"
+        )
+
+
 def bloom_build(
     df: DataFrame,
     n_bits: int = 1 << 23,
@@ -104,6 +113,7 @@ def bloom_build(
     with ``bloom_merge``; or just run bloom_build over the new shard and
     merge — the historical corpus is never re-read.
     """
+    _check_bloom(n_bits, n_hashes)
     fps = df.select(F.expr(_nullsafe_fp(fp_sql)).alias("fp"))
     return (
         _positions(fps, n_bits, n_hashes, hash_impl)
@@ -141,6 +151,7 @@ def bloom_probe(
     a shuffle join on the uniform ``word_idx``) → ``bool_and`` of per-hash
     hits back on ``doc_id``.
     """
+    _check_bloom(n_bits, n_hashes)
     probe_side = bloom if not broadcast_filter else F.broadcast(bloom)
     hits = (
         _positions(df.select("doc_id", F.expr(_nullsafe_fp(fp_sql)).alias("fp")), n_bits, n_hashes, hash_impl)

@@ -65,31 +65,15 @@ def _shingle_hash(hash_impl: str) -> str:
 
 
 def dedup_exact(df: DataFrame) -> DataFrame:
-    """Exact dedup on normalized text: keep the smallest doc_id per group."""
+    """Exact dedup on normalized text: keep the smallest doc_id per group.
+
+    One aggregate: ``min`` and ``count`` are algebraic, so the partial
+    aggregate before the shuffle sends a fingerprint duplicated millions
+    of times at most one row per map task — no salting needed."""
     return (
         df.select(F.expr(NORM_FP).alias("fp"), "doc_id")
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_dupes"))
-    )
-
-
-def dedup_exact_salted(df: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Two-phase (salted) exact dedup — identical semantics to
-    :func:`dedup_exact`, but a hot fingerprint (a document duplicated millions
-    of times at corpus scale) never lands on one reducer: phase 1 aggregates
-    per (fp, salt-bucket), phase 2 merges the per-bucket partials.  min and
-    count are algebraic, so the split is exact."""
-    partial = (
-        df.select(
-            F.expr(NORM_FP).alias("fp"),
-            "doc_id",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).alias("_salt"),
-        )
-        .groupBy("fp", "_salt")
-        .agg(F.min("doc_id").alias("_min_id"), F.count("*").alias("_cnt"))
-    )
-    return partial.groupBy("fp").agg(
-        F.min("_min_id").alias("keep_doc_id"), F.sum("_cnt").alias("n_dupes")
     )
 
 

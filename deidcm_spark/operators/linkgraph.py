@@ -307,31 +307,25 @@ def canonicalize_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def url_dedup(
-    df: DataFrame, url_col: str = "url", n_salts: int = 16
-) -> DataFrame:
+def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     """URL-level dedup decisions: one row per input row with
     ``canonical_url``, ``keep`` (first occurrence by doc_id wins) and
     ``n_occ`` (occurrences of that canonical URL corpus-wide).
 
-    The winner aggregation reuses the salted two-phase min-struct from the
-    span-dedup lane (a hot canonical URL — a crawler trap emitting the
-    same page a million times — spreads over ``n_salts`` reducers);
-    NULL urls never group together (always kept, ``n_occ = 1``).
+    The winner is the span-dedup lane's one-aggregate first occurrence: a
+    hot canonical URL (a crawler trap emitting the same page a million
+    times) is combined map-side by the partial aggregate, so its reducer
+    sees at most one row per map task; NULL urls never group together
+    (always kept, ``n_occ = 1``).
     """
-    from deidcm_spark.operators.spandedup import _salted_winners
+    from deidcm_spark.operators.spandedup import _first_occurrence
 
     canon = canonicalize_url(df, url_col)
     rows = canon.filter(F.col("canonical_url").isNotNull()).select(
         F.col("canonical_url").alias("fp"), "doc_id", F.lit(0).alias("pos")
     )
-    winners = (
-        _salted_winners(rows, n_salts)
-        .select(
-            F.col("fp").alias("canonical_url"),
-            F.col("w_doc_id").alias("_w_doc"),
-            "n_occ",
-        )
+    winners = _first_occurrence(rows).select(
+        F.col("fp").alias("canonical_url"), F.col("w_doc_id").alias("_w_doc"), "n_occ"
     )
     return (
         canon.join(winners, "canonical_url", "left")

@@ -42,6 +42,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.textops import TOKENS, twograms_all_expr
+from deidcm_spark.schema import local_frame
 
 # first-8-hex-chars-of-md5 → bigint, same convention as textops.SPLIT_HASH
 _H32 = "cast(conv(substring(md5({v}), 1, 8), 16, 10) as bigint)"
@@ -99,23 +100,29 @@ def importance_weights(
     Laplace(+1) smoothing.  Documents with no grams keep ``logw = 0.0``
     (an empty document is distribution-neutral, not dropped).
 
-    The two distribution tables are ``n_buckets`` rows each (persisted —
-    gram totals are a sum over them, not a second corpus scan); the ratio
-    table is broadcast into the gram stream, so the only corpus-sized
-    shuffle is the per-doc aggregation.  ``explode_outer`` keeps
-    gram-less documents in the stream (their null gram scores 0.0), so
-    no corpus-sized re-join is needed to restore them."""
+    The two distribution tables are ≤ ``n_buckets`` rows each, so they are
+    collected to the driver (gram totals summed there, no second corpus
+    scan, nothing left cached) and the ratio table is a local relation
+    broadcast into the gram stream; the only corpus-sized shuffle is the
+    per-doc aggregation.  ``explode_outer`` keeps gram-less documents in
+    the stream (their null gram scores 0.0), so no corpus-sized re-join is
+    needed to restore them."""
     gram = _gram_expr(ngram)
 
-    r = bucket_counts(raw, n_buckets, ngram, hash_impl).withColumnRenamed("n", "n_raw")
-    t = bucket_counts(target, n_buckets, ngram, hash_impl).withColumnRenamed("n", "n_tgt")
-    r.persist(), t.persist()
-    totals_r = int(r.agg(F.sum("n_raw")).first()[0] or 0)
-    totals_t = int(t.agg(F.sum("n_tgt")).first()[0] or 0)
+    r, t = (
+        dict(bucket_counts(df, n_buckets, ngram, hash_impl).collect())
+        for df in (raw, target)
+    )
+    totals_r, totals_t = sum(r.values()), sum(t.values())
 
-    # full_outer over two <=n_buckets-row tables (SMJ on metadata, fine)
+    # log/divide stay Spark expressions over the local table, so the
+    # weights keep the JVM's floating point, not Python's math.log
     ratio = (
-        r.join(t, "bucket", "full_outer")
+        local_frame(
+            raw.sparkSession,
+            [(b, r.get(b), t.get(b)) for b in sorted(set(r) | set(t))],
+            "bucket bigint, n_raw bigint, n_tgt bigint",
+        )
         .select(
             "bucket",
             (

@@ -20,11 +20,13 @@ Design notes for 100 TB:
 
 * everything is JVM-side Spark SQL — explode / hash-aggregate / equi-join /
   higher-order array functions; zero Python on the hot path;
-* the winner-per-fingerprint aggregation is SALTED two-phase (``n_salts``):
-  a hot fingerprint (an empty-ish boilerplate line or a viral paragraph
-  duplicated millions of times) contributes ``n_salts`` partial rows, never
-  one reducer-killing group.  ``min`` over a struct is algebraic, so the
-  split is exact;
+* the winner per fingerprint is ONE ``groupBy(fp)`` aggregate of algebraic
+  functions (``min`` over a struct, ``count``), so Spark plans a partial
+  aggregate before the shuffle: a hot fingerprint (a boilerplate line or a
+  viral paragraph duplicated millions of times) sends at most one row per
+  map task to its reducer.  That partial/final pair is the skew defence —
+  salting the key would only add a second shuffle
+  (tests/test_plans.py pins the plan);
 * the keep/drop join back to the exploded rows is an equi-join on the
   fingerprint — skewed fingerprints are exactly the AQE skew-join case
   (``spark.sql.adaptive.skewJoin`` splits the hot partition at runtime);
@@ -89,28 +91,17 @@ def _fast128(value_sql: str) -> str:
     )
 
 
-def _salted_winners(
-    rows: DataFrame, n_salts: int, require_dupes: bool = False
-) -> DataFrame:
-    """(fp) -> first occurrence, as (fp, w_doc_id, w_pos [, n_occ]).
+def _first_occurrence(rows: DataFrame, require_dupes: bool = False) -> DataFrame:
+    """(fp) -> first occurrence, as (fp, w_doc_id, w_pos, n_occ).
 
-    Two-phase exact min over struct(doc_id, pos): phase 1 groups by
-    (fp, salt-of-occurrence) so a million-occurrence fingerprint spreads
-    over ``n_salts`` reducers; phase 2 merges the tiny partials.
+    One exact ``min`` over struct(doc_id, pos) per fingerprint; its partial
+    aggregate combines each map task's occurrences before the shuffle.
     ``require_dupes`` additionally keeps only fingerprints seen >= 2 times
     (substring_dedup needs the count; line_dedup does not — a unique line
     is its own winner and the keep-join handles it for free).
     """
-    partial = (
-        rows.withColumn("_salt", F.pmod(F.xxhash64("doc_id", "pos"), F.lit(n_salts)))
-        .groupBy("fp", "_salt")
-        .agg(
-            F.min(F.struct("doc_id", "pos")).alias("_w"),
-            F.count("*").alias("_cnt"),
-        )
-    )
-    winners = partial.groupBy("fp").agg(
-        F.min("_w").alias("_w"), F.sum("_cnt").alias("n_occ")
+    winners = rows.groupBy("fp").agg(
+        F.min(F.struct("doc_id", "pos")).alias("_w"), F.count("*").alias("n_occ")
     )
     if require_dupes:
         winners = winners.filter(F.col("n_occ") >= 2)
@@ -123,10 +114,7 @@ def _salted_winners(
 
 
 def line_dedup(
-    df: DataFrame,
-    min_line_chars: int = 1,
-    n_salts: int = 16,
-    hash_impl: str = "portable",
+    df: DataFrame, min_line_chars: int = 1, hash_impl: str = "portable"
 ) -> DataFrame:
     """Corpus-wide line-level dedup (C4-style), documents rebuilt.
 
@@ -137,10 +125,10 @@ def line_dedup(
 
     ``doc_id, text (kept lines joined by \\n), n_lines, n_dropped``
 
-    Shape: posexplode(lines) → salted two-phase min-struct winner per line
-    fingerprint → left equi-join keep flag → ONE groupBy(doc_id) rebuild
-    (``array_sort(collect_list(struct(idx, line)))`` keeps line order
-    without a per-doc sort shuffle).
+    Shape: posexplode(lines) → one min-struct winner aggregate per line
+    fingerprint (partial before the shuffle) → left equi-join keep flag →
+    ONE groupBy(doc_id) rebuild (``array_sort(collect_list(struct(idx,
+    line)))`` keeps line order without a per-doc sort shuffle).
     """
     lines = df.select(
         # null text would DROP the document at the posexplode; treat as empty
@@ -155,8 +143,8 @@ def line_dedup(
             F.expr(_fp_expr("line", hash_impl)),
         ),
     )
-    winners = _salted_winners(
-        lines.filter("fp is not null").select("fp", "doc_id", "pos"), n_salts
+    winners = _first_occurrence(
+        lines.filter("fp is not null").select("fp", "doc_id", "pos")
     ).drop("n_occ")
     flagged = lines.join(winners, "fp", "left").withColumn(
         "keep",
@@ -210,10 +198,7 @@ def _window_hashes(df: DataFrame, window: int, hash_impl: str) -> DataFrame:
 
 
 def substring_dedup(
-    df: DataFrame,
-    window: int = 32,
-    n_salts: int = 16,
-    hash_impl: str = "portable",
+    df: DataFrame, window: int = 32, hash_impl: str = "portable"
 ) -> DataFrame:
     """Exact-substring dedup (arXiv:2107.06499 §4, rolling-window form).
 
@@ -226,7 +211,7 @@ def substring_dedup(
     ``doc_id, text (surviving tokens joined by spaces), n_tokens,
     n_removed_tokens, n_dup_windows``
 
-    Shape: window-hash explode → salted winner-per-fingerprint (dup
+    Shape: window-hash explode → one winner aggregate per fingerprint (dup
     fingerprints only — unique windows never leave the aggregation) →
     equi-join back for losing occurrences → per-doc interval merge
     (``aggregate`` fold over the SORTED start list; the accumulator holds
@@ -246,8 +231,10 @@ def substring_dedup(
     keeps the winner's uncovered prefix.  Cross-document duplication (the
     dominant case at corpus scale) is unaffected.
     """
+    if window < 1:
+        raise ValueError(f"window must be >= 1, got {window}")
     hashes = _window_hashes(df, window, hash_impl)
-    winners = _salted_winners(hashes, n_salts, require_dupes=True)
+    winners = _first_occurrence(hashes, require_dupes=True)
     losers = (
         hashes.join(winners, "fp")
         .filter(

@@ -20,9 +20,9 @@ from deidcm_spark.schema import local_frame
 TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
 
 # whitespace-normalized exact-dedup fingerprint — ONE definition (Spark
-# dialect); dedup_exact/dedup_exact_salted, fingerprint() and the streaming
-# dedup all key off this, so a drift would silently de-synchronize batch
-# and streaming dedup decisions
+# dialect); dedup_exact, fingerprint() and the streaming dedup all key
+# off this, so a drift would silently de-synchronize batch and streaming
+# dedup decisions
 NORM_FP = "md5(trim(regexp_replace(lower(text), '\\\\s+', ' ')))"
 
 # word-3-gram shingles via slice+zip_with: tokens are referenced a CONSTANT

@@ -478,6 +478,9 @@ def stream_bloom_ingest(
     Exactly-once: fresh documents and the filter partial both go through
     the batch_id-partitioned idempotent sink, and the probe reads the log
     EXCLUDING the current batch_id (see :func:`_bloom_ingest_batch`)."""
+    from deidcm_spark.operators.bloom import _check_bloom
+
+    _check_bloom(n_bits, n_hashes)  # before the query starts, not in a batch
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 16)

@@ -150,6 +150,24 @@ def _docs(spark, rows):
     )
 
 
+def test_unusable_sizes_rejected(spark, history, shard, tmp_path):
+    """Unchecked, k=0 drops every new document silently (bool_and over no
+    hits is null) and n_bits=0 dies in a task on the modulo."""
+    from deidcm_spark.streaming import stream_bloom_ingest
+
+    flt = bloom_build(history, N_BITS, K)
+    for n_bits, k in ((N_BITS, 0), (0, K), (-8, K)):
+        with pytest.raises(ValueError, match="n_hashes >= 1"):
+            bloom_build(history, n_bits, k)
+        with pytest.raises(ValueError, match="n_hashes >= 1"):
+            bloom_new_documents(shard, flt, n_bits, k)
+        with pytest.raises(ValueError, match="n_hashes >= 1"):
+            stream_bloom_ingest(
+                spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                str(tmp_path / "ckpt"), str(tmp_path / "filter"), n_bits, k,
+            )
+
+
 def test_stream_bloom_ingest_two_drops(spark, tmp_path):
     from deidcm_spark.streaming import read_bloom_log, stream_bloom_ingest
     from deidcm_spark.operators.bloom import bloom_probe

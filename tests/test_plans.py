@@ -2,6 +2,8 @@
 Catalyst actually produces (pushdown, pruning, single shuffle, broadcast),
 plus evidence that the salted repartition defeats document-size skew."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -240,3 +242,40 @@ def test_redact_media_plan_gates_in_one_aggregate(spark):
     payload_side = join.children().apply(0)
     assert "pixels" in payload_side.output().toString()
     assert not any("Exchange" in n.nodeName() for n in _physical_nodes(payload_side))
+
+
+def _shuffled_partial_keys(df):
+    """Run ``df``, then list the keys of every hash Exchange in its final
+    adaptive plan that sits directly on a partial aggregate."""
+    df.collect()  # execute THIS df so AQE finalizes its plan
+    final = _plan(df).split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    return [
+        re.search(r"hashpartitioning\((.*)\)", a).group(1)
+        for a, b in zip(lines, lines[1:])
+        if "Exchange hashpartitioning" in a and "partial_" in b
+    ]
+
+
+def test_dedup_winners_one_aggregate_per_fingerprint(spark):
+    """Each dedup winner is ONE groupBy(fp) aggregate: exactly one shuffle
+    keyed on the fingerprint alone, with the partial aggregate below it —
+    the map-side combine that bounds a hot key to one row per map task —
+    and no salt column anywhere in the plan."""
+    from deidcm_spark.operators.linkgraph import url_dedup
+    from deidcm_spark.operators.spandedup import line_dedup, substring_dedup
+
+    docs = spark.range(0, 60, numPartitions=4).selectExpr(
+        "id as doc_id",
+        "concat('hot line', chr(10), 'doc ', cast(id as string), chr(10), "
+        "'one two three four five six seven eight') as text",
+    )
+    urls = docs.selectExpr("doc_id", "'https://www.trap.example/p' as url")
+    for df in (
+        line_dedup(docs),
+        substring_dedup(docs, window=4),
+        url_dedup(urls),
+    ):
+        keys = _shuffled_partial_keys(df)
+        assert len(keys) == 1 and re.fullmatch(r"fp#\d+, \d+", keys[0]), keys
+        assert "_salt" not in _plan(df)

@@ -78,6 +78,16 @@ def test_weights_match_python_oracle(spark, corpora):
     assert not off, f"{len(off)} weight mismatches, e.g. {list(off.items())[:3]}"
 
 
+def test_weights_leave_nothing_cached(spark, corpora):
+    """The two bucket-count tables are localized, not persisted: no cached
+    RDD outlives the call (counts compared — the session is shared)."""
+    raw, target = corpora
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    importance_weights(raw, target, n_buckets=N_BUCKETS).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_sample_is_gumbel_topk_of_weights(spark, corpora):
     raw, target = corpora
     k = 40

@@ -123,23 +123,30 @@ def sub_corpus(spark):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
+@pytest.fixture(scope="module")
+def hot_corpus(spark):
+    """One line and one 10-token passage in EVERY document, over several
+    partitions: the hot-key shape the partial aggregate must combine."""
+    return spark.range(0, 600, numPartitions=6).selectExpr(
+        "cast(id as int) as doc_id",
+        "concat('the same hot line', chr(10), 'doc ', cast(id as string), "
+        "' body', chr(10), 'one two three four five six seven eight nine ten') "
+        "as text",
+    )
+
+
 # ---------- line_dedup ----------
 
-def test_line_dedup_matches_oracle(spark, line_corpus):
-    docs = {r.doc_id: r.text for r in line_corpus.collect()}
-    expected = oracle_line_dedup(docs)
-    got = _collect_docs(line_dedup(line_corpus))
-    assert got == expected
+def test_line_dedup_matches_oracle(spark, line_corpus, hot_corpus):
+    for df in (line_corpus, hot_corpus):
+        docs = {r.doc_id: r.text for r in df.collect()}
+        assert _collect_docs(line_dedup(df)) == oracle_line_dedup(docs)
 
 
-def test_line_dedup_min_chars_and_salts(spark, line_corpus):
+def test_line_dedup_min_chars(spark, line_corpus):
     docs = {r.doc_id: r.text for r in line_corpus.collect()}
     expected = oracle_line_dedup(docs, min_line_chars=15)
-    for n_salts in (1, 4):
-        got = _collect_docs(
-            line_dedup(line_corpus, min_line_chars=15, n_salts=n_salts)
-        )
-        assert got == expected
+    assert _collect_docs(line_dedup(line_corpus, min_line_chars=15)) == expected
 
 
 def test_line_dedup_first_occurrence_wins(spark, line_corpus):
@@ -181,12 +188,13 @@ def test_line_dedup_sf0001_sample(spark):
 
 # ---------- substring_dedup ----------
 
-def test_substring_dedup_matches_oracle(spark, sub_corpus):
-    docs = {r.doc_id: r.text for r in sub_corpus.collect()}
-    for window in (8, 32):
-        expected = oracle_substring_dedup(docs, window)
-        got = _collect_docs(substring_dedup(sub_corpus, window=window))
-        assert got == expected, f"window={window}"
+def test_substring_dedup_matches_oracle(spark, sub_corpus, hot_corpus):
+    for df in (sub_corpus, hot_corpus):
+        docs = {r.doc_id: r.text for r in df.collect()}
+        for window in (8, 32):
+            expected = oracle_substring_dedup(docs, window)
+            got = _collect_docs(substring_dedup(df, window=window))
+            assert got == expected, f"window={window}"
 
 
 def test_substring_dedup_viral_passage_kept_once(spark, sub_corpus):
@@ -211,10 +219,18 @@ def test_substring_dedup_periodic_self_repeat(spark, sub_corpus):
     assert out[101] == ("rep", 70, 69, 38)
 
 
-def test_substring_dedup_salts_and_fast_impl(spark, sub_corpus):
+def test_substring_dedup_fast_impl(spark, sub_corpus):
     base = _collect_docs(substring_dedup(sub_corpus, window=16))
-    for kw in ({"n_salts": 1}, {"n_salts": 4}, {"hash_impl": "fast"}):
-        assert _collect_docs(substring_dedup(sub_corpus, window=16, **kw)) == base
+    fast = substring_dedup(sub_corpus, window=16, hash_impl="fast")
+    assert _collect_docs(fast) == base
+
+
+def test_substring_dedup_rejects_window_below_one(spark, sub_corpus):
+    # unchecked, window=0 returns wrong counts silently and window=-1 dies
+    # in a task
+    for window in (0, -1):
+        with pytest.raises(ValueError, match="window"):
+            substring_dedup(sub_corpus, window=window)
 
 
 def test_substring_dedup_sf0001_sample(spark):

@@ -111,18 +111,8 @@ def test_canonicalize_plan_is_narrow_and_jvm_side(spark, url_df):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_url_dedup_matches_oracle(spark):
-    # three spellings of one page, two of another, one unique, one null
-    rows = [
-        (1, "https://example.com/a?utm_source=x"),
-        (2, "http://www.other.com/b?z=1&a=2"),
-        (3, "https://EXAMPLE.com/a/"),
-        (4, "https://example.com/a#frag"),
-        (5, "http://other.com/b?a=2&z=1"),
-        (6, "https://unique.example/only"),
-        (7, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, url string")
+def _url_dedup_vs_oracle(spark, rows):
+    df = spark.createDataFrame(rows, "doc_id bigint, url string").repartition(6)
     got = {r.doc_id: (r.keep, r.n_occ) for r in url_dedup(df).collect()}
 
     groups = {}
@@ -138,8 +128,28 @@ def test_url_dedup_matches_oracle(spark):
         else:
             want[doc_id] = (doc_id == min(groups[c]), len(groups[c]))
     assert got == want
+    return want
+
+
+def test_url_dedup_matches_oracle(spark):
+    # three spellings of one page, two of another, one unique, one null
+    rows = [
+        (1, "https://example.com/a?utm_source=x"),
+        (2, "http://www.other.com/b?z=1&a=2"),
+        (3, "https://EXAMPLE.com/a/"),
+        (4, "https://example.com/a#frag"),
+        (5, "http://other.com/b?a=2&z=1"),
+        (6, "https://unique.example/only"),
+        (7, None),
+    ]
+    want = _url_dedup_vs_oracle(spark, rows)
     # cross-check the winner structure: docs 1,3,4 collapse to one URL
     assert [want[1], want[3], want[4]] == [(True, 3), (False, 3), (False, 3)]
+    # hot key: a crawler trap, one URL in every document, with some nulls
+    _url_dedup_vs_oracle(spark, [
+        (d, None if d % 97 == 0 else "https://www.trap.example/p?utm_source=x")
+        for d in range(10, 610)
+    ])
 
 
 BLOCKLIST = ["ads.example", "Tracker.io"]

@@ -176,7 +176,7 @@ def main() -> None:
 
         # exact-substring dedup lane (round-3 session-4 operator): the
         # heaviest new lane — O(n_tokens × window) hashing on the explode
-        # side, a salted winner aggregation over EVERY window occurrence,
+        # side, one winner aggregation over EVERY window occurrence,
         # the loser join back, and per-doc interval-merge folds.  The
         # replicated corpus makes every window a 64-way duplicate, so the
         # winner/loser machinery carries real volume at every level.
