@@ -44,6 +44,7 @@ from deidcm_spark.schema import (
     EXTRACT_LINEAGE_SCHEMA,
     LINEAGE_SCHEMA,
     local_frame,
+    read_parquet_or_none,
 )
 
 # per-bucket counters of a deid lineage row, in LINEAGE_SCHEMA order
@@ -59,28 +60,10 @@ def _data_path(out_dir: str) -> str:
     return os.path.join(out_dir, "data")
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str):
-    """ONLY the path-not-found case (first run ever) may fall back to
-    'nothing committed yet' — a transient FS/read error on an EXISTING
-    lineage log must fail the attempt: silently restarting reprocesses
-    every bucket and appends duplicate committed rows, which the
-    completion reconciliation then reports as a (false) corpus-coverage
-    error.  Same contract as streaming's Bloom/LSH log reads."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", e.getErrorClass)()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return None
-
-
 def _committed_rows(spark: SparkSession, out_dir: str, run_id: str) -> list[tuple]:
     """``(bucket, n_docs)`` of EVERY committed lineage row of ``run_id``,
     duplicates included (one row per bucket per committing attempt)."""
-    lineage = _read_parquet_or_none(spark, _lineage_path(out_dir))
+    lineage = read_parquet_or_none(spark, _lineage_path(out_dir))
     if lineage is None:
         return []
     return [
@@ -96,7 +79,7 @@ def committed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_parquet_or_none(spark, _lineage_path(out_dir))
+    return read_parquet_or_none(spark, _lineage_path(out_dir))
 
 
 class _CounterSums(AccumulatorParam):

@@ -34,7 +34,6 @@ span-sequence equality; only the payload bytes behind ``media_ref`` change.
 
 from __future__ import annotations
 
-import string
 from typing import Iterator
 
 import numpy as np
@@ -42,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.config import load_authorized_words
+from deidcm_spark.operators.textops import ascii_case
 from deidcm_spark.schema import (  # shared spec — one source of truth
     MEDIA_H as MEDIA_DEFAULT_H,
     MEDIA_W as MEDIA_DEFAULT_W,
@@ -486,13 +486,9 @@ def _gated_rects(
         F.greatest(ey1, ey2).alias("yb"),
     )
     word = F.col("word")
-    # ASCII words (the usual case) upper-case through translate: Spark's
-    # upper() maps case with ICU, whose first use in a process costs
-    # ~1.5 s (measured in the first redact_media job, 4-core host)
-    upper = F.when(
-        F.length(word) == F.octet_length(word),
-        F.translate(word, string.ascii_lowercase, string.ascii_uppercase),
-    ).otherwise(F.upper(word))
+    # ASCII words (the usual case) never start ICU (ascii_case): its first
+    # use cost ~1.5 s of the first redact_media job, 4-core host
+    upper = F.expr(ascii_case("word", upper=True))
     word_ok = (F.length(word) > 1) & ~upper.isin(words)
     return (
         boxes.groupBy("media_ref")

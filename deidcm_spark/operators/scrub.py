@@ -38,6 +38,18 @@ own input; NULL text takes the ELSE branch and stays NULL.  Only one
 branch runs per row, so the pre-e-mail chain, written in both, is
 evaluated once.  The DuckDB dialect stays unguarded: the oracles built
 from it check the guard instead of checking themselves.
+
+**E-mail pattern (two dialects).**  A local part must not follow ``@`` or
+another local-part character.  RE2 (DuckDB) has no lookbehind, so its
+pattern captures the preceding character (or ``^``) and re-emits it;
+Java's takes the same test as a lookbehind, ``(?<![@A-Za-z0-9._%+-])``,
+and matches only the e-mail.  The matches are the same: a match ends on a
+domain character, itself a local-part character, so in both forms a
+match can never start right where the previous one ended, and the
+character before any other start is unconsumed.  On the 12k seed-1 web
+documents (local[4], guarded step alone, ``noop`` write, median of 6) the
+lookbehind took 0.18-0.19 s against 0.49-0.51 s, over a 0.07-0.09 s bare
+scan, with the same output.
 """
 
 from __future__ import annotations
@@ -64,15 +76,18 @@ TIME_RE = r"\b(\d{2}):(\d{2}):(\d{2})\b"
 # RE2 (the DuckDB oracle) has no lookbehind, so the preceding char is a
 # captured prefix group re-emitted in the replacement.
 EMAIL_RE = r"(^|[^@A-Za-z0-9._%+-])([A-Za-z0-9._%+-]+)@([A-Za-z0-9.-]+)"
+# the Spark dialect's form of the same matches (module docstring)
+EMAIL_RE_SPARK = r"(?<![@A-Za-z0-9._%+-])([A-Za-z0-9._%+-]+)@([A-Za-z0-9.-]+)"
 UID_RE = r"\b\d+(?:\.\d+){3,}\b"                   # dotted OID, >= 4 arcs
 
-# (pattern, spark_replacement, duckdb_replacement) applied in ORDER
-_SQL_STEPS: list[tuple[str, str, str]] = [
-    (DATE_ISO_RE, "$1-01-01", r"\1-01-01"),
-    (DATE_EU_RE, "01/01/$3", r"01/01/\3"),
-    (DATE_BARE_RE, "$10101", r"\10101"),
-    (TIME_RE, "00:00:00", "00:00:00"),
-    (EMAIL_RE, "$1[EMAIL]@$3", r"\1[EMAIL]@\3"),
+# (spark_pattern, spark_replacement, duckdb_pattern, duckdb_replacement)
+# applied in ORDER
+_SQL_STEPS: list[tuple[str, str, str, str]] = [
+    (DATE_ISO_RE, "$1-01-01", DATE_ISO_RE, r"\1-01-01"),
+    (DATE_EU_RE, "01/01/$3", DATE_EU_RE, r"01/01/\3"),
+    (DATE_BARE_RE, "$10101", DATE_BARE_RE, r"\10101"),
+    (TIME_RE, "00:00:00", TIME_RE, "00:00:00"),
+    (EMAIL_RE_SPARK, "[EMAIL]@$2", EMAIL_RE, r"\1[EMAIL]@\3"),
 ]
 
 
@@ -88,10 +103,10 @@ def scrub_text_expr(col: str, names: list[str], dialect: str = "spark") -> str:
     e-mail step sits under the ``@`` guard (module docstring)."""
     g = ", 'g'" if dialect == "duckdb" else ""
     e = col
-    for pat, spark_rep, duck_rep in _SQL_STEPS:
-        rep = spark_rep if dialect == "spark" else duck_rep
+    for spark_pat, spark_rep, duck_pat, duck_rep in _SQL_STEPS:
+        pat, rep = (spark_pat, spark_rep) if dialect == "spark" else (duck_pat, duck_rep)
         step = f"regexp_replace({e}, '{_pat_sql(pat, dialect)}', '{rep}'{g})"
-        if pat == EMAIL_RE and dialect == "spark":
+        if pat == EMAIL_RE_SPARK:
             # one CASE level: the chain so far is written twice but
             # evaluated once per row
             step = f"CASE WHEN instr({col}, '@') > 0 THEN {step} ELSE {e} END"

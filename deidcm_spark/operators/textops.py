@@ -13,17 +13,38 @@ path.  Each operator has an exactly-matching ANSI-SQL oracle (see
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from deidcm_spark.schema import local_frame
 
-TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
+
+def ascii_case(x: str, upper: bool = False) -> str:
+    """``lower(x)`` (``upper(x)`` when ``upper``) as Spark SQL that maps
+    ASCII text through ``translate``.  Spark's case mapping goes through
+    ICU, and its first call in a JVM builds an ICU title-case table over
+    every code point: ~1.4 s of the first job that lower-cases, 4-core
+    host.  ``translate`` never reaches ICU.  ``length = octet_length``
+    holds exactly on ASCII text, where both mappings agree; any other
+    text (and NULL) takes ``lower``/``upper``."""
+    src, dst = string.ascii_uppercase, string.ascii_lowercase
+    fn = "lower"
+    if upper:
+        src, dst, fn = dst, src, "upper"
+    return (
+        f"CASE WHEN length({x}) = octet_length({x}) "
+        f"THEN translate({x}, '{src}', '{dst}') ELSE {fn}({x}) END"
+    )
+
+
+TOKENS = f"filter(split({ascii_case('text')}, '\\\\s+'), x -> x != '')"
 
 # whitespace-normalized exact-dedup fingerprint — ONE definition (Spark
 # dialect); dedup_exact, fingerprint() and the streaming dedup all key
 # off this, so a drift would silently de-synchronize batch and streaming
 # dedup decisions
-NORM_FP = "md5(trim(regexp_replace(lower(text), '\\\\s+', ' ')))"
+NORM_FP = f"md5(trim(regexp_replace({ascii_case('text')}, '\\\\s+', ' ')))"
 
 # word-3-gram shingles via slice+zip_with: tokens are referenced a CONSTANT
 # number of times per row.  The naive transform(sequence(...), i -> T[i]...)

@@ -143,6 +143,24 @@ def local_frame(spark, rows, schema):
     return spark.createDataFrame(table, schema)
 
 
+def read_parquet_or_none(spark, path: str):
+    """The parquet table at ``path``, or None when nothing exists there.
+
+    For append-only logs that a first run has not written yet (the lineage
+    log, streaming's Bloom and LSH logs).  ONLY a missing path means "no
+    log": a log that exists but cannot be read (corrupt, schema-less,
+    unreadable) raises, because treating it as empty would silently
+    re-admit everything it records.  The path is checked with Hadoop's
+    ``FileSystem.exists`` (~7 ms warm, local[4]) instead of failing a
+    read, which cost 0.08-0.09 s warm, ~0.14 s on a session's first call
+    and a ``FileNotFoundException`` stack trace logged at WARN."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
+        return None
+    return spark.read.parquet(path)
+
+
 # ---------------------------------------------------------------------------
 # shared media-fixture constants — single source of truth (corpus synthesis,
 # the SQL box corpus in duck_oracle, and the redaction operators all key off

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from deidcm_spark import _cds
+
 # Allocator / thread-pool profile for the Python workers (they inherit the
 # driver's environment in local mode; on a cluster these ride
 # spark.executorEnv.*).  Measured on the bench VM (see BENCH/BASELINE.md):
@@ -58,7 +60,11 @@ def get_spark(
     # Under `spark-submit run.py` the driver JVM already exists, so pass
     # them on the submit line (`--driver-java-options "$DRIVER_JAVA_OPTIONS"
     # --driver-memory 8g`) like tools/bench_common.py does — CLAUDE.md
-    # measured ParallelGC as load-bearing (>2x on the deid lane).
+    # measured ParallelGC as load-bearing (>2x on the deid lane).  The same
+    # holds for the class-data-sharing archive: such a session takes the
+    # "off" path, and a submit line that wants the archive passes
+    # `-XX:SharedArchiveFile=<cache>/<key>.jsa` in --driver-java-options
+    # itself (with SPARK_CONF_DIR at the same empty directory, see _cds).
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     apply_worker_env()
     local_dir = (
@@ -88,4 +94,22 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    # the class-data-sharing archive (_cds): its flags go after the final
+    # extraJavaOptions, the caller's included, and SPARK_CONF_DIR points at
+    # its empty directory only while the launcher reads it
+    cds = _cds.plan()
+    if cds.options:
+        opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
+        b = b.config("spark.driver.extraJavaOptions", f"{opts} {cds.options}")
+    saved = os.environ.get("SPARK_CONF_DIR")
+    if cds.conf_dir:
+        os.environ["SPARK_CONF_DIR"] = cds.conf_dir
+    try:
+        spark = b.getOrCreate()
+    finally:
+        if saved is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    _cds.after_launch(cds, spark)
+    return spark

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from deidcm_spark.operators.deidentify import deidentify_attributes
-from deidcm_spark.schema import DOCUMENTS_SCHEMA, local_frame
+from deidcm_spark.schema import DOCUMENTS_SCHEMA, local_frame, read_parquet_or_none
 
 
 def _idempotent_write(out: DataFrame, batch_id: int, out_dir: str) -> None:
@@ -406,24 +406,18 @@ def _bloom_ingest_batch(
     from deidcm_spark.operators.bloom import bloom_build, bloom_new_documents
     from deidcm_spark.operators.textops import NORM_FP
 
-    from pyspark.errors import AnalysisException
-
     if fp_sql is None:
         fp_sql = NORM_FP
     spark = batch_df.sparkSession
-    try:
-        prior = spark.read.parquet(filter_dir).filter(
-            F.col("batch_id") != int(batch_id)
-        ).groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
-    except AnalysisException as e:  # first batch ever: no log yet.  ONLY
-        # the path-not-found case may fall back to an empty filter — any
-        # other analysis failure (corrupt/schema-less/unreadable log) must
-        # FAIL the batch: silently probing an empty filter would re-admit
-        # every historical duplicate
-        cond = getattr(e, "getCondition", e.getErrorClass)()
-        if cond != "PATH_NOT_FOUND":
-            raise
+    # first batch ever: no log yet, so an empty filter.  A log that exists
+    # but cannot be read FAILS the batch: probing an empty filter would
+    # re-admit every historical duplicate
+    prior = read_parquet_or_none(spark, filter_dir)
+    if prior is None:
         prior = local_frame(spark, [], "word_idx bigint, bits bigint")
+    else:
+        prior = prior.filter(F.col("batch_id") != int(batch_id)).groupBy(
+            "word_idx").agg(F.bit_or("bits").alias("bits"))
 
     batch_df = batch_df.persist()
     try:
@@ -547,28 +541,24 @@ def _neardup_ingest_batch(
        does not hold.  (Bloom absorbs its whole batch because set bits
        are free; signatures are rows.)
     """
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Window, functions as F
 
     from deidcm_spark.operators.dedup import lsh_index_build, lsh_index_probe
 
     spark = batch_df.sparkSession
-    try:
+    # first batch ever: no log yet, so an empty index.  A log that exists
+    # but cannot be read FAILS the batch, or every historical near-dup
+    # would be re-admitted
+    prior = read_parquet_or_none(spark, index_dir)
+    if prior is None:
+        # empty index with the RIGHT schema (doc_id type follows the batch)
+        prior = lsh_index_build(batch_df.limit(0), hash_impl=hash_impl)
+    else:
         prior = (
-            spark.read.parquet(index_dir)
-            .filter(F.col("batch_id") != int(batch_id))
+            prior.filter(F.col("batch_id") != int(batch_id))
             .drop("batch_id")
             .distinct()
         )
-    except AnalysisException as e:  # first batch ever: no log yet.  ONLY
-        # path-not-found may fall back to an empty index — anything else
-        # (corrupt/unreadable log) must FAIL the batch, or every
-        # historical near-dup would be re-admitted
-        cond = getattr(e, "getCondition", e.getErrorClass)()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        # empty index with the RIGHT schema (doc_id type follows the batch)
-        prior = lsh_index_build(batch_df.limit(0), hash_impl=hash_impl)
 
     batch_df = batch_df.persist()
     try:

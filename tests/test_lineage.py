@@ -561,9 +561,11 @@ def test_retried_task_does_not_double_count(tmp_path, job):
 def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypatch):
     """A first input_bucketed attempt reconciles against the doc total the
     driver already holds (earlier attempts' lineage rows + this attempt's
-    accumulator): the lineage log is read once, at attempt start, and the
-    attempt runs at most 6 Spark jobs — the stored-bucket probe, the data
-    write, the lineage append and the source count (9 with a read-back)."""
+    accumulator): the absent lineage log is not read at all (an existence
+    check instead of a failed read), a second attempt reads it exactly
+    once, at attempt start, and the first attempt runs at most 6 Spark
+    jobs — the stored-bucket probe, the data write, the lineage append and
+    the source count (9 with a read-back)."""
     from deidcm_spark.lineage import prepare_bucketed_corpus
 
     prepare_bucketed_corpus(_docs(spark, 200), "bt_jobs_corpus", SALT, N_BUCKETS)
@@ -583,11 +585,16 @@ def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypa
                          n_buckets=N_BUCKETS, input_bucketed=True)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    monkeypatch.undo()
     assert s["processed"] == N_BUCKETS and s["reconciled_docs"] == 200
-    assert [p for p in reads if "_lineage" in p] == [f"{out}/_lineage"]
+    assert [p for p in reads if "_lineage" in p] == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= 6, n_jobs
+
+    again = run_deid_job(spark, spark.table("bt_jobs_corpus"), out, ORG_ROOT, SALT,
+                         n_buckets=N_BUCKETS, input_bucketed=True)
+    monkeypatch.undo()
+    assert again["processed"] == 0
+    assert [p for p in reads if "_lineage" in p] == [f"{out}/_lineage"]
 
 
 def test_bucketed_reconciliation_counts_duplicate_committed_rows(spark, tmp_path):

@@ -5,11 +5,13 @@ chain) and the shared kernel (UID stage)."""
 import duckdb
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
 from deidcm_spark.kernels import gen_dicom_uid
 from deidcm_spark.operators import scrub
+from deidcm_spark.schema import local_frame
 
 ORG = "9.9.9.9.9"
 
@@ -385,3 +387,15 @@ def test_email_guard_plan_shape(spark):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("instr(") == 1, plan
         assert plan.count("$1-01-01") <= 2, plan
+
+
+@given(st.lists(st.text(alphabet="@._%+-aZ09 !\n\tÉ", max_size=30), min_size=1, max_size=1000))
+@settings(max_examples=30, deadline=None)
+def test_email_lookbehind_matches_duckdb_prefix_group(spark, texts):
+    """The Spark chain's lookbehind e-mail pattern rewrites exactly what
+    DuckDB's prefix-group pattern does, on strings dense in local-part,
+    domain and separator characters, '@' runs and a non-ASCII letter."""
+    want = _duck_chain(texts, [])
+    df = local_frame(spark, list(enumerate(texts)), "doc_id long, text string")
+    got = {r["doc_id"]: r["text"] for r in scrub.scrub_text(df, []).collect()}
+    assert got == want

@@ -1,6 +1,7 @@
 """Semantic tests for the training-data operators (dedup / similarity / text)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from deidcm_spark.operators import dedup, similarity, textops
@@ -636,3 +637,26 @@ def test_quality_gate_rejects_null_text(spark):
     assert got[1]["keep"] is False and "too_few_tokens" in got[1]["reasons"]
     assert got[1]["reasons"] == got[2]["reasons"]
     assert got[1]["n_tokens"] == 0
+
+
+_case_texts = st.lists(
+    st.one_of(st.none(), st.text(alphabet=st.characters(max_codepoint=0x7F), max_size=24),
+              st.text(max_size=24)),
+    min_size=1, max_size=200,
+)
+
+
+@given(_case_texts)
+@settings(max_examples=25, deadline=None)
+def test_ascii_case_equals_lower_and_upper(spark, texts):
+    """textops.ascii_case (the ICU-free lower-casing of TOKENS and NORM_FP,
+    and media's upper-casing) equals Spark's lower() and upper() on
+    arbitrary Unicode text and NULL."""
+    from deidcm_spark.schema import local_frame
+
+    df = local_frame(spark, list(enumerate(texts)), "i int, t string")
+    differ = df.filter(
+        f"NOT ({textops.ascii_case('t')} <=> lower(t)) "
+        f"OR NOT ({textops.ascii_case('t', upper=True)} <=> upper(t))"
+    )
+    assert differ.collect() == []
