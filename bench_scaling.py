@@ -28,11 +28,13 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
-from tools.bench_common import replicate_docs, spark_submit_json  # noqa: E402
+from deidcm_spark.session import DRIVER_JAVA_OPTIONS, WORKER_ENV  # noqa: E402
 
 N_DOCS = int(os.environ.get("SCALING_N_DOCS", "2000000"))
 HTML_REPLICAS = int(os.environ.get("SCALING_HTML_REPLICAS", "64"))
@@ -57,9 +59,10 @@ WINNER_DIAG_SECTION = """\
 The r4 SCALING_HISTORY rows showed the BUCKETED winner-agg lane scaling
 0.243–0.35 at 8→32 while the shuffled variant held 0.447–0.459 — an
 apparent inversion worth attributing before claiming "bucketed wins at
-4N".  A controlled grid (r5, `tools/winner_diag_worker.py`: one FRESH
-pinned spark-submit process per cell, the same 20.48M-row fingerprint
-table in three layouts, two interleaved rounds) settles it:
+4N".  A controlled grid (r5, a one-off worker since removed from the
+tree: one FRESH pinned spark-submit process per cell, the same
+20.48M-row fingerprint table in three layouts, two interleaved rounds)
+settles it:
 
 | layout | scan tasks | 8c rows/s (best of 2) | 32c rows/s | 8→32 eff |
 |---|---|---|---|---|
@@ -98,6 +101,69 @@ FP_HOT = 200_000    # one boilerplate/crawler-trap fingerprint at ~1% mass
 FP_BUCKETS = 64
 LEVELS = [32, 8, 2]  # descending so the slowest (2c) runs last in each round
 CPU_PIN = {2: "0-1", 8: "0-7", 32: "0-31"}
+
+
+def pin_args(cores: int) -> list[str]:
+    """taskset prefix confining the child to exactly ``cores`` CPUs —
+    without it per-worker library thread pools leak onto idle cores and a
+    'local[8]' run secretly uses 32."""
+    return ["taskset", "-c", f"0-{cores - 1}"]
+
+
+def spark_submit_json(script: str, args: list[str], cores: int,
+                      timeout: int = 3600) -> dict:
+    """Run ``script`` under a pinned fresh spark-submit and return the first
+    JSON line it prints.  The launch recipe is measurement-critical: the
+    driver JVM options, 12g driver memory, tmpfs spark.local.dir and
+    WORKER_ENV."""
+    env = dict(os.environ, PYTHONPATH=REPO, **WORKER_ENV)
+    # same writability guard as session.get_spark
+    local_dir = (
+        "/dev/shm/spark-local"
+        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
+        else "/tmp/spark-local"
+    )
+    res = subprocess.run(
+        pin_args(cores)
+        + [
+            "spark-submit", "--master", f"local[{cores}]",
+            "--driver-java-options", DRIVER_JAVA_OPTIONS,
+            "--conf", "spark.driver.memory=12g",
+            "--conf", f"spark.local.dir={local_dir}",
+            script,
+        ]
+        + args,
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=timeout,
+    )
+    if res.returncode == 0:
+        # a nonzero-exit child is NEVER a sample, even if it printed a
+        # JSON-looking line before dying — a failed worker folded into the
+        # best-of-runs figure would publish a corrupt measurement
+        for line in res.stdout.splitlines():
+            if line.startswith("{"):
+                return json.loads(line)
+    raise RuntimeError(
+        f"bench child {script} local[{cores}] failed "
+        f"(exit {res.returncode}): "
+        f"{res.stdout[-500:]} {res.stderr[-1500:]}"
+    )
+
+
+def replicate_docs(base, n_replicas: int):
+    """Deterministically replicate a documents frame ``n_replicas``× by
+    offsetting doc_id per replica (same text distribution, bigger
+    cardinality so runtime >> startup).  Caller repartitions the result."""
+    from pyspark.sql import functions as F
+
+    out = base
+    for i in range(1, n_replicas):
+        out = out.unionByName(
+            base.select(
+                (F.col("doc_id") + F.lit(i * 10_000_000)).alias("doc_id"),
+                *[c for c in base.columns if c != "doc_id"],
+            )
+        )
+    return out
 
 
 def prepare_corpus() -> None:
@@ -163,10 +229,10 @@ def _corpus_marker() -> dict:
 
 
 def main() -> None:
-    # identity marker, not just _SUCCESS (the bench_worker MARKER pattern,
-    # r3 review finding 3): a stale corpus built with different
-    # SCALING_N_DOCS/HTML_REPLICAS/FP_ROWS would otherwise silently back
-    # evidence labeled with the CURRENT env values
+    # identity marker, not just _SUCCESS (r3 review finding 3): a stale
+    # corpus built with different SCALING_N_DOCS/HTML_REPLICAS/FP_ROWS
+    # would otherwise silently back evidence labeled with the CURRENT env
+    # values
     marker_ok = False
     if os.path.exists(SCALING_MARKER):
         try:
@@ -394,8 +460,8 @@ under-reports capability).  Deid corpus: {N_DOCS} span-form documents
 The zero-exchange columns are the `lineage.prepare_bucketed_corpus` /
 `prepare_bucketed_raw_corpus` paths: the corpus is stored clustered on the
 job's salted bucket function (the Iceberg `bucket(N, key)` ingest layout),
-so `run_deid_job(..., input_bucketed=True)` / `run_extract_job(...,
-input_bucketed=True)` never shuffle the payload — plan is
+so `run_deid_job` / `run_extract_job`, seeing the stored `bucket` column,
+never shuffle the payload — plan is
 scan → mapInArrow/mapInPandas → sink (asserted in tests/test_lineage.py).
 The extraction "shuffled" column times the not-pre-bucketed job shape
 (salted bucket column + repartition before the extractor).

@@ -1100,8 +1100,14 @@ def export_dcm(docs: DataFrame, out_dir: str,
     """Write one ``{doc_id}.dcm`` file per document, executor-side
     (foreachPartition — no driver collect; on a cluster ``out_dir`` is the
     shared filesystem, exactly how df2dicom writes its outdir).
-    ``transfer_syntax`` transcodes the whole corpus on the way out."""
+    ``transfer_syntax`` transcodes the whole corpus on the way out.
+
+    Each file is written under a hidden temporary name in ``out_dir`` and
+    renamed into place, so a killed, retried or speculative task never
+    leaves a truncated ``.dcm``: a name holds a previous file or the new
+    one, whole."""
     import os
+    import uuid
     from urllib.parse import quote
 
     rendered = render_dcm(docs, payloads, binary_vr, transfer_syntax)
@@ -1113,7 +1119,16 @@ def export_dcm(docs: DataFrame, out_dir: str,
             # non-alphanumeric byte ('a/b' and 'a_b' must not both map to
             # a_b.dcm — the last partition to write would silently win)
             safe = quote(row["doc_id"], safe="")
-            with open(os.path.join(out_dir, f"{safe}.dcm"), "wb") as f:
-                f.write(bytes(row["dcm"]))
+            # a unique name per attempt (open() keeps the umask mode that
+            # mkstemp's 0600 would not)
+            tmp = os.path.join(out_dir, f".{safe}.{uuid.uuid4().hex}.tmp")
+            f = open(tmp, "xb")
+            try:
+                with f:
+                    f.write(bytes(row["dcm"]))
+                os.replace(tmp, os.path.join(out_dir, f"{safe}.dcm"))
+            except BaseException:
+                os.unlink(tmp)
+                raise
 
     rendered.foreachPartition(write_partition)

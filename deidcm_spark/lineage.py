@@ -43,8 +43,8 @@ from deidcm_spark.operators.deidentify import deidentify_attributes
 from deidcm_spark.schema import (
     EXTRACT_LINEAGE_SCHEMA,
     LINEAGE_SCHEMA,
+    hadoop_path,
     local_frame,
-    read_parquet_or_none,
 )
 
 # per-bucket counters of a deid lineage row, in LINEAGE_SCHEMA order
@@ -63,7 +63,7 @@ def _data_path(out_dir: str) -> str:
 def _committed_rows(spark: SparkSession, out_dir: str, run_id: str) -> list[tuple]:
     """``(bucket, n_docs)`` of EVERY committed lineage row of ``run_id``,
     duplicates included (one row per bucket per committing attempt)."""
-    lineage = read_parquet_or_none(spark, _lineage_path(out_dir))
+    lineage = read_lineage(spark, out_dir)
     if lineage is None:
         return []
     return [
@@ -79,7 +79,23 @@ def committed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return read_parquet_or_none(spark, _lineage_path(out_dir))
+    """The lineage log, or None before the first commit.
+
+    ``_lineage`` is a hidden name to Spark's file index, which logs "All
+    paths were ignored" at WARN whenever it is read as a root path (with
+    or without ``basePath``).  The read therefore names the log's data
+    files, listed through the Hadoop FileSystem the read uses anyway.  As
+    in :func:`~deidcm_spark.schema.read_parquet_or_none`, only a missing
+    directory means "no log": an existing one without data files fails
+    schema inference and raises."""
+    fs, path = hadoop_path(spark, _lineage_path(out_dir))
+    if not fs.exists(path):
+        return None
+    files = [
+        st.getPath().toString() for st in fs.listStatus(path)
+        if not st.getPath().getName().startswith(("_", "."))
+    ]
+    return spark.read.parquet(*files)
 
 
 class _CounterSums(AccumulatorParam):
@@ -145,7 +161,7 @@ def prepare_bucketed_corpus(
     """One-time ingest shuffle: persist the corpus bucketed on the SAME
     salted bucket function the deid job partitions by (the sandbox stand-in
     for an Iceberg ``bucket(N, key)`` partition spec).  Every subsequent
-    ``run_deid_job(..., input_bucketed=True)`` — including every resume
+    ``run_deid_job`` over the stored table — including every resume
     attempt — then runs a ZERO-exchange plan: scan → mapInArrow → sink,
     the span payload never crosses a shuffle again."""
     from deidcm_spark.sources import write_bucketed
@@ -164,8 +180,8 @@ def prepare_bucketed_raw_corpus(
     the RAW (doc_id, text, lang, source) corpus on the extract job's bucket
     function.  doc_id is cast to string FIRST — the extractor's id domain —
     so the stored bucket matches what ``run_extract_job`` recomputes, and
-    ``run_extract_job(..., input_bucketed=True)`` runs the zero-exchange
-    plan: scan → html → mapInPandas → sink."""
+    ``run_extract_job`` over the stored table runs the zero-exchange plan:
+    scan → html → mapInPandas → sink."""
     prepare_bucketed_corpus(
         raw_documents.withColumn("doc_id", F.col("doc_id").cast("string")),
         table, salt, n_buckets,
@@ -173,18 +189,19 @@ def prepare_bucketed_raw_corpus(
 
 
 def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
-                    max_buckets_this_attempt, input_bucketed, kernel, tally,
+                    max_buckets_this_attempt, clustered, kernel, tally,
                     schema) -> tuple[dict, int | None]:
     """One attempt of the bucket-commit protocol; returns the summary dict
     and, if this attempt committed the last pending bucket, the run's
     committed document total (else None).
 
-    ``bucketed`` carries the job's ``bucket`` column.  ``kernel(todo,
-    observe)`` turns the pending rows into the output frame, still carrying
-    ``bucket``, and calls ``observe`` in the worker on every output batch;
-    ``tally(batch)`` maps one such batch to ``{bucket: [counter, ...]}`` in
-    the order of ``schema``'s counter columns (between ``bucket`` and
-    ``status``).
+    ``bucketed`` carries the job's ``bucket`` column; ``clustered`` says
+    its rows are already stored clustered on it, so the bucket repartition
+    is skipped.  ``kernel(todo, observe)`` turns the pending rows into the
+    output frame, still carrying ``bucket``, and calls ``observe`` in the
+    worker on every output batch; ``tally(batch)`` maps one such batch to
+    ``{bucket: [counter, ...]}`` in the order of ``schema``'s counter
+    columns (between ``bucket`` and ``status``).
 
     An attempt is one data-writing Spark action plus one single-file append
     of a driver-local lineage table.  The counters are summed through an
@@ -211,7 +228,7 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
         return summary, None
 
     todo = bucketed.filter(F.col("bucket").isin(pending))
-    if not input_bucketed:
+    if not clustered:
         # salted repartition happens here: one shuffle, partitioned by bucket
         # so the dynamic-overwrite write aligns with processing partitions.
         # No more partitions than cores: hashing N buckets into N partitions
@@ -268,7 +285,6 @@ def run_deid_job(
     max_buckets_this_attempt: int | None = None,
     date_mode: str = "first_day_year",
     date_offset: int = 100000,
-    input_bucketed: bool = False,
 ) -> dict:
     """Process all not-yet-committed buckets; returns a summary dict.
 
@@ -276,31 +292,27 @@ def run_deid_job(
     commits only the first K pending buckets and stops, simulating a crash
     partway through the corpus.
 
-    ``input_bucketed=True`` declares that ``documents`` is already stored
-    clustered on this job's bucket function (written by
+    A ``documents`` frame that carries a ``bucket`` column is taken as
+    stored clustered on this job's bucket function (written by
     :func:`prepare_bucketed_corpus` with the same salt/n_buckets): the
     repartition exchange — the single shuffle of the full span payload —
     is skipped, and the plan is scan → filter → mapInArrow → sink.  At
     32 local cores that shuffle is the measured kernel-time bottleneck
     (BENCH/BASELINE.md); on a real cluster it is the network-heavy stage.
+    A stored bucket column that is not this job's bucket function raises.
 
     An attempt is one data-writing Spark action plus one single-file append
     of a driver-local lineage table (:func:`_commit_buckets`); the counters
     are tallied per bucket on the Arrow kernel's output batches.
     """
-    if input_bucketed and "bucket" not in documents.columns:
-        raise ValueError(
-            "input_bucketed=True requires a stored 'bucket' column "
-            "(prepare_bucketed_corpus writes one); refusing to silently "
-            "run the unclustered plan"
-        )
+    clustered = "bucket" in documents.columns
     bucketed = (
-        documents if input_bucketed
+        documents if clustered
         else documents.withColumn("bucket", bucket_expr(salt, n_buckets))
     )
 
     def kernel(todo: DataFrame, observe) -> DataFrame:
-        if input_bucketed:
+        if clustered:
             # the stored bucket column must be THIS job's bucket function —
             # a different salt/n_buckets would silently mark out-of-range
             # buckets "complete" on resume.  Two-level defense: a cheap
@@ -318,8 +330,8 @@ def run_deid_job(
             )
             if probe:
                 raise ValueError(
-                    f"input_bucketed=True but the stored bucket column does not "
-                    f"match pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
+                    "the stored bucket column does not match "
+                    f"pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
                     f"re-run prepare_bucketed_corpus with this job's salt/n_buckets"
                 )
         return deidentify_attributes(
@@ -329,7 +341,7 @@ def run_deid_job(
 
     summary, committed_docs = _commit_buckets(
         spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
-        input_bucketed, kernel, _bucket_counts, LINEAGE_SCHEMA,
+        clustered, kernel, _bucket_counts, LINEAGE_SCHEMA,
     )
 
     # completion reconciliation: once every bucket is committed, the
@@ -337,7 +349,7 @@ def run_deid_job(
     # this attempt's) must equal the source count (a metadata-cheap parquet
     # count) — catches rows whose stored bucket fell outside range(n_buckets)
     # and was therefore never selected by any attempt
-    if input_bucketed and committed_docs is not None:
+    if clustered and committed_docs is not None:
         src_docs = documents.count()
         if committed_docs != src_docs:
             raise ValueError(
@@ -361,7 +373,6 @@ def run_extract_job(
     n_buckets: int = 32,
     run_id: str = "run0",
     max_buckets_this_attempt: int | None = None,
-    input_bucketed: bool = False,
 ) -> dict:
     """Resumable main-content extraction (north_rule lane) under the same
     bucket-commit protocol as :func:`run_deid_job` (:func:`_commit_buckets`):
@@ -370,9 +381,10 @@ def run_extract_job(
     extractor's output batches.  ``raw_documents`` = (doc_id, text, lang,
     source).
 
-    ``input_bucketed=True`` — same contract as ``run_deid_job``: the input
-    is stored clustered on this job's bucket function (string-cast doc_id),
-    so the repartition exchange is skipped.
+    An input that carries a ``bucket`` column is taken as stored clustered
+    on this job's bucket function (string-cast doc_id, see
+    :func:`prepare_bucketed_raw_corpus`), so the repartition exchange is
+    skipped.
     """
     from deidcm_spark.operators import extract
 
@@ -380,9 +392,10 @@ def run_extract_job(
     # the bucket is hashed from that string.  A STORED bucket column is
     # never trusted here — it may have been hashed from the pre-cast value
     # (long doc_id).  Recomputing keeps the filtered and the written bucket
-    # equal unconditionally; input_bucketed then only skips the repartition
-    # (zero-exchange still holds when the corpus was prepared from
-    # string-cast ids).
+    # equal unconditionally; a stored bucket column then only skips the
+    # repartition (zero-exchange still holds when the corpus was prepared
+    # from string-cast ids).
+    clustered = "bucket" in raw_documents.columns
     bucketed = raw_documents.withColumn(
         "doc_id", F.col("doc_id").cast("string")
     ).withColumn("bucket", bucket_expr(salt, n_buckets))
@@ -395,6 +408,6 @@ def run_extract_job(
 
     summary, _ = _commit_buckets(
         spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
-        input_bucketed, kernel, _extract_counts, EXTRACT_LINEAGE_SCHEMA,
+        clustered, kernel, _extract_counts, EXTRACT_LINEAGE_SCHEMA,
     )
     return summary

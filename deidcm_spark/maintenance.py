@@ -8,9 +8,9 @@ that job for the parquet-emulation layout this repo uses.
 
 Sizing reads the actual on-disk bytes through the Hadoop FileSystem API
 (works for any scheme Spark can reach, not just ``file://``), targets
-``target_bytes`` per output file, and rewrites with ``repartition(n)``
-— a full shuffle, which is the point: compaction exists to pay one
-clean rewrite so every later scan is cheap.  The rewrite lands in a NEW
+``target_bytes`` per output file, and rewrites with a repartition — a
+full shuffle, which is the point: compaction exists to pay one clean
+rewrite so every later scan is cheap.  The rewrite lands in a NEW
 directory (the caller swaps it in, or an Iceberg commit would make the
 swap transactional) — compaction never overwrites its own input.
 """
@@ -21,13 +21,13 @@ import math
 
 from pyspark.sql import SparkSession
 
+from deidcm_spark.schema import hadoop_path
+
 
 def dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under ``path`` via the Hadoop FS API —
     counts data files only (skips _SUCCESS/_metadata/dot files)."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, p = hadoop_path(spark, path)
     it = fs.listFiles(p, True)
     n, total = 0, 0
     while it.hasNext():
@@ -59,7 +59,12 @@ def compact_parquet(
     rewritten with the same partition columns — a flat rewrite bakes the
     partition values into root-level data files, and the next
     micro-batch's partitioned append makes the directory unreadable
-    (mixed layouts) besides breaking replay's per-batch overwrite."""
+    (mixed layouts) besides breaking replay's per-batch overwrite.
+
+    With ``partition_by`` each partition value goes to one task, which
+    starts a new file every ~``target_bytes`` (``maxRecordsPerFile`` from
+    the mean on-disk row size): a value below target is one file, and a
+    hot value above it is several, written by that one task."""
     if in_dir.rstrip("/") == out_dir.rstrip("/"):
         raise ValueError("compaction must write to a NEW directory")
     files_in, total = dir_stats(spark, in_dir)
@@ -72,11 +77,12 @@ def compact_parquet(
                 f"partition_by columns {missing} not in the table "
                 f"(columns: {df.columns})"
             )
-        # spread within each partition value; repartition by the partition
-        # keys alone would funnel each value through one task
-        df.repartition(n_out).write.mode("overwrite").partitionBy(
-            *partition_by
-        ).parquet(out_dir)
+        # a round-robin repartition(n_out) would put every value in every
+        # task: up to n_out files per value, however small the value
+        rows_per_file = max(1, target_bytes * df.count() // max(total, 1))
+        df.repartition(n_out, *partition_by).write.mode("overwrite").option(
+            "maxRecordsPerFile", rows_per_file
+        ).partitionBy(*partition_by).parquet(out_dir)
     else:
         df.repartition(n_out).write.mode("overwrite").parquet(out_dir)
     files_out, bytes_out = dir_stats(spark, out_dir)

@@ -31,7 +31,7 @@ import itertools
 from pyspark.sql import DataFrame, functions as F
 
 from deidcm_spark.operators.textops import NORM_FP, SHINGLES, TOKENS
-from deidcm_spark.schema import local_frame
+from deidcm_spark.schema import hadoop_path, local_frame
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -548,8 +548,8 @@ def _release_local_checkpoint(df: DataFrame) -> None:
 def delete_path(spark, path: str) -> None:
     """Recursively delete ``path`` through the Hadoop FileSystem API (any
     scheme Spark can reach); a missing path is a no-op."""
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(p, True)
+    fs, p = hadoop_path(spark, path)
+    fs.delete(p, True)
 
 
 def _round_checkpoints(spark, checkpoint_dir: str | None):

@@ -92,10 +92,6 @@ def _sql_list(words: list[str]) -> str:
     return "array(" + ", ".join(f"'{w}'" for w in words) + ")"
 
 
-def with_tokens(df: DataFrame) -> DataFrame:
-    return df.withColumn("tokens", F.expr(TOKENS))
-
-
 def _tokenized(df: DataFrame) -> DataFrame:
     """Layered-projection base: materialize the token array ONCE as a
     column so every signal expression reads it instead of re-inlining the

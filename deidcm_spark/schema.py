@@ -143,19 +143,27 @@ def local_frame(spark, rows, schema):
     return spark.createDataFrame(table, schema)
 
 
+def hadoop_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path``, resolved with the session's
+    Hadoop configuration — the one Spark's own reads use."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf), jpath
+
+
 def read_parquet_or_none(spark, path: str):
     """The parquet table at ``path``, or None when nothing exists there.
 
-    For append-only logs that a first run has not written yet (the lineage
-    log, streaming's Bloom and LSH logs).  ONLY a missing path means "no
-    log": a log that exists but cannot be read (corrupt, schema-less,
-    unreadable) raises, because treating it as empty would silently
-    re-admit everything it records.  The path is checked with Hadoop's
-    ``FileSystem.exists`` (~7 ms warm, local[4]) instead of failing a
-    read, which cost 0.08-0.09 s warm, ~0.14 s on a session's first call
-    and a ``FileNotFoundException`` stack trace logged at WARN."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    For append-only logs that a first run has not written yet (streaming's
+    Bloom and LSH logs; ``lineage.read_lineage`` follows the same rule).
+    ONLY a missing path means "no log": a log that exists but cannot be
+    read (corrupt, schema-less, unreadable) raises, because treating it as
+    empty would silently re-admit everything it records.  The path is
+    checked with Hadoop's ``FileSystem.exists`` (~7 ms warm, local[4])
+    instead of failing a read, which cost 0.08-0.09 s warm, ~0.14 s on a
+    session's first call and a ``FileNotFoundException`` stack trace
+    logged at WARN."""
+    fs, jpath = hadoop_path(spark, path)
     if not fs.exists(jpath):
         return None
     return spark.read.parquet(path)

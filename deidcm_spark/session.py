@@ -59,7 +59,7 @@ def get_spark(
     # effect when THIS call launches the JVM (python script / pytest).
     # Under `spark-submit run.py` the driver JVM already exists, so pass
     # them on the submit line (`--driver-java-options "$DRIVER_JAVA_OPTIONS"
-    # --driver-memory 8g`) like tools/bench_common.py does — CLAUDE.md
+    # --driver-memory 8g`) like bench_scaling.py does — CLAUDE.md
     # measured ParallelGC as load-bearing (>2x on the deid lane).  The same
     # holds for the class-data-sharing archive: such a session takes the
     # "off" path, and a submit line that wants the archive passes

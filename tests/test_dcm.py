@@ -251,17 +251,29 @@ def test_export_dcm_files(spark, tmp_path):
     from deidcm_spark.corpus import synth_documents
     from deidcm_spark.dcm import export_dcm
 
+    import os
+    from urllib.parse import quote
+
     out_dir = str(tmp_path / "dcm_out")
     docs = synth_documents(spark, 10, seed=3, tags_per_doc=8, media_rate=0.0)
+    # a file from an earlier export, hard-linked from outside out_dir: it is
+    # replaced by a rename, never truncated and rewritten in place
+    old = b"stale " * 100_000
+    stale = os.path.join(out_dir, quote(docs.first()["doc_id"], safe="") + ".dcm")
+    os.makedirs(out_dir)
+    with open(stale, "wb") as f:
+        f.write(old)
+    os.link(stale, tmp_path / "stale_link")
     export_dcm(docs, out_dir, binary_vr="text")
-    import os
 
-    files = sorted(os.listdir(out_dir))
+    files = sorted(os.listdir(out_dir))  # no temporary file remains
     assert len(files) == 10 and all(f.endswith(".dcm") for f in files)
-    with open(os.path.join(out_dir, files[0]), "rb") as f:
-        data = f.read()
-    assert data[128:132] == b"DICM"
-    assert parse_part10(data, binary_vr="text")["spans"]
+    assert (tmp_path / "stale_link").read_bytes() == old
+    for name in files:
+        with open(os.path.join(out_dir, name), "rb") as f:
+            data = f.read()
+        assert data[128:132] == b"DICM"
+        assert parse_part10(data, binary_vr="text")["spans"]
 
 
 def test_dcm_files_full_circle(spark, tmp_path):

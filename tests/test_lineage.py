@@ -95,8 +95,9 @@ def test_output_equals_direct_pipeline(spark, tmp_path):
 
 
 def test_bucketed_input_zero_exchange_same_result(spark, tmp_path):
-    """prepare_bucketed_corpus + input_bucketed=True: the deid stage plan
-    has NO Exchange (the span payload never shuffles), and the committed
+    """prepare_bucketed_corpus, then a job over the stored table (its
+    ``bucket`` column marks it clustered): the deid stage plan has NO
+    Exchange (the span payload never shuffles), and the committed
     output equals the shuffled path byte for byte."""
     from deidcm_spark.lineage import bucket_expr, prepare_bucketed_corpus
     from deidcm_spark.operators.deidentify import deidentify_attributes as deid
@@ -118,8 +119,7 @@ def test_bucketed_input_zero_exchange_same_result(spark, tmp_path):
     # end-to-end: bucketed job == shuffled job
     d1 = str(tmp_path / "bucketed_out")
     d2 = str(tmp_path / "shuffled_out")
-    s1 = run_deid_job(spark, bucketed, d1, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
-                      input_bucketed=True)
+    s1 = run_deid_job(spark, bucketed, d1, ORG_ROOT, SALT, n_buckets=N_BUCKETS)
     s2 = run_deid_job(spark, docs, d2, ORG_ROOT, SALT, n_buckets=N_BUCKETS)
     assert s1["processed"] == s2["processed"] == N_BUCKETS
     assert _snapshot(read_output(spark, d1)) == _snapshot(read_output(spark, d2))
@@ -132,8 +132,8 @@ def test_bucketed_input_zero_exchange_same_result(spark, tmp_path):
 
 
 def test_extract_job_bucketed_zero_exchange(spark, tmp_path):
-    """run_extract_job(input_bucketed=True) over a pre-bucketed raw corpus:
-    same committed output as the shuffled path."""
+    """run_extract_job over a pre-bucketed raw corpus: same committed
+    output as the shuffled path."""
     from deidcm_spark.lineage import (
         prepare_bucketed_raw_corpus,
         run_extract_job,
@@ -147,7 +147,7 @@ def test_extract_job_bucketed_zero_exchange(spark, tmp_path):
     d1 = str(tmp_path / "ex_bucketed")
     d2 = str(tmp_path / "ex_shuffled")
     s1 = run_extract_job(spark, spark.table("bt_extract_corpus"), d1, SALT,
-                         n_buckets=N_BUCKETS, input_bucketed=True)
+                         n_buckets=N_BUCKETS)
     s2 = run_extract_job(spark, raw, d2, SALT, n_buckets=N_BUCKETS)
     assert s1["processed"] == s2["processed"] == N_BUCKETS
     assert _snapshot(read_output(spark, d1)) == _snapshot(read_output(spark, d2))
@@ -163,27 +163,23 @@ def test_bucketed_crash_resume_and_guards(spark, tmp_path):
 
     # crash after 3 buckets, then resume — completion reconciles doc totals
     s1 = run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
-                      input_bucketed=True, max_buckets_this_attempt=3)
+                      max_buckets_this_attempt=3)
     assert s1["processed"] == 3 and "reconciled_docs" not in s1
-    s2 = run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
-                      input_bucketed=True)
+    s2 = run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS)
     assert s2["committed_before"] == 3 and s2["processed"] == N_BUCKETS - 3
     assert s2["reconciled_docs"] == 100
     assert _snapshot(read_output(spark, out)) == _snapshot(
         deidentify_attributes(docs, ORG_ROOT, SALT)
     )
 
-    # guard: input_bucketed without a bucket column refuses
-    with pytest.raises(ValueError, match="bucket"):
-        run_deid_job(spark, docs, str(tmp_path / "x1"), ORG_ROOT, SALT,
-                     n_buckets=N_BUCKETS, input_bucketed=True)
-    # guard: stored bucket from a DIFFERENT salt fails the probe
+    # guard: a bucket column from a DIFFERENT salt fails the probe instead
+    # of being recomputed
     from deidcm_spark.lineage import bucket_expr
 
     wrong = docs.withColumn("bucket", bucket_expr("other_salt", N_BUCKETS))
     with pytest.raises(ValueError, match="does not"):
         run_deid_job(spark, wrong, str(tmp_path / "x2"), ORG_ROOT, SALT,
-                     n_buckets=N_BUCKETS, input_bucketed=True)
+                     n_buckets=N_BUCKETS)
 
 
 def test_lineage_read_fallback_only_on_path_not_found(spark, tmp_path):
@@ -303,8 +299,7 @@ def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, job, case):
     elif case == "bucketed":
         prepare = prepare_bucketed_corpus if job == "deid" else prepare_bucketed_raw_corpus
         prepare(docs, f"bt_counters_{job}", SALT, N_BUCKETS)
-        s = _run(spark, job, spark.table(f"bt_counters_{job}"), out,
-                 input_bucketed=True)
+        s = _run(spark, job, spark.table(f"bt_counters_{job}"), out)
         if job == "deid":
             assert s["reconciled_docs"] == 120
     elif case == "resumed":
@@ -559,8 +554,8 @@ def test_retried_task_does_not_double_count(tmp_path, job):
 
 
 def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypatch):
-    """A first input_bucketed attempt reconciles against the doc total the
-    driver already holds (earlier attempts' lineage rows + this attempt's
+    """A first attempt over a pre-bucketed table reconciles against the doc
+    total the driver already holds (earlier attempts' lineage rows + this attempt's
     accumulator): the absent lineage log is not read at all (an existence
     check instead of a failed read), a second attempt reads it exactly
     once, at attempt start, and the first attempt runs at most 6 Spark
@@ -575,26 +570,29 @@ def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypa
     real = reader.parquet
     monkeypatch.setattr(
         reader, "parquet",
-        lambda self, *paths, **kw: reads.extend(map(str, paths)) or real(self, *paths, **kw),
+        lambda self, *paths, **kw: reads.append(paths) or real(self, *paths, **kw),
     )
     sc = spark.sparkContext
     group = "bucketed_first_attempt"
-    sc.setJobGroup(group, "first input_bucketed attempt")
+    sc.setJobGroup(group, "first attempt over a pre-bucketed table")
     try:
         s = run_deid_job(spark, spark.table("bt_jobs_corpus"), out, ORG_ROOT, SALT,
-                         n_buckets=N_BUCKETS, input_bucketed=True)
+                         n_buckets=N_BUCKETS)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert s["processed"] == N_BUCKETS and s["reconciled_docs"] == 200
-    assert [p for p in reads if "_lineage" in p] == []
+    assert [p for p in reads if "_lineage" in str(p)] == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= 6, n_jobs
 
     again = run_deid_job(spark, spark.table("bt_jobs_corpus"), out, ORG_ROOT, SALT,
-                         n_buckets=N_BUCKETS, input_bucketed=True)
+                         n_buckets=N_BUCKETS)
     monkeypatch.undo()
     assert again["processed"] == 0
-    assert [p for p in reads if "_lineage" in p] == [f"{out}/_lineage"]
+    # one read, naming the log's one data file
+    (lineage_read,) = [p for p in reads if "_lineage" in str(p)]
+    assert len(lineage_read) == 1
+    assert lineage_read[0].startswith(f"file:{out}/_lineage/part-"), lineage_read
 
 
 def test_bucketed_reconciliation_counts_duplicate_committed_rows(spark, tmp_path):
@@ -611,12 +609,11 @@ def test_bucketed_reconciliation_counts_duplicate_committed_rows(spark, tmp_path
     bucketed = spark.table("bt_dup_corpus")
     out = str(tmp_path / "dup")
     run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
-                 input_bucketed=True, max_buckets_this_attempt=3)
+                 max_buckets_this_attempt=3)
     rows = pq.read_table(f"{out}/_lineage").to_pylist()
     dup = max(rows, key=lambda r: r["n_docs"])
     assert dup["n_docs"] > 0
     local_frame(spark, [tuple(dup[f.name] for f in LINEAGE_SCHEMA.fields)],
                 LINEAGE_SCHEMA).write.mode("append").parquet(f"{out}/_lineage")
     with pytest.raises(ValueError, match=f"committed {100 + dup['n_docs']} documents"):
-        run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
-                     input_bucketed=True)
+        run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS)

@@ -250,3 +250,35 @@ def test_compaction_preserves_partition_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="partition_by"):
         compact_parquet(spark, src, str(tmp_path / "x"),
                         partition_by=["nope"])
+
+
+def test_partitioned_compaction_writes_one_file_per_small_value(spark, tmp_path):
+    """With partition_by, a value below target_bytes is rewritten as ONE
+    file even when the table needs several output tasks, so the rewrite
+    never writes more files than it read; a value above target splits
+    into files of ~target_bytes."""
+    src = str(tmp_path / "many_src")
+    n_values, n_rows = 24, 4800
+    spark.range(n_rows).select(
+        F.col("id"), (F.col("id") % n_values).alias("batch_id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("pad"),
+    ).repartition(3).write.partitionBy("batch_id").parquet(src)
+    files_in, _ = dir_stats(spark, src)
+    value_bytes = max(dir_stats(spark, f"{src}/batch_id={v}")[1]
+                      for v in range(n_values))
+
+    def files_per_value(target):
+        dst = str(tmp_path / f"many_dst_{target}")
+        out = compact_parquet(spark, src, dst, target_bytes=target,
+                              partition_by=["batch_id"])
+        assert spark.read.parquet(dst).count() == n_rows
+        return out, [dir_stats(spark, f"{dst}/batch_id={v}")[0]
+                     for v in range(n_values)]
+
+    out, per_value = files_per_value(2 * value_bytes)
+    assert out["target_files"] > 1
+    assert per_value == [1] * n_values
+    assert out["files_out"] == n_values < files_in
+    # every value twice the target: split, not funnelled into one file
+    _, per_value = files_per_value(value_bytes // 2)
+    assert all(2 <= n <= 3 for n in per_value), per_value

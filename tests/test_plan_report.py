@@ -1,84 +1,9 @@
-"""Round-4 artifact-contract tests.
-
-The driver records only the LAST 2000 chars of bench.py stdout;
-BENCH_r03.json came back `parsed: null` because the final JSON line was
-2,695 chars.  bench.compact_headline is the fix — these tests pin the
-budget so the artifact can never silently regress again.
-"""
+"""tools/plan_report.py: final-plan-only operator counting (r3 VERDICT
+item #4)."""
 
 from __future__ import annotations
 
-import json
-
-import bench
-
-
-# the r3 headline lane set (26 queries) with representative magnitudes —
-# worst case for width: every timing 3-decimal and >1s.
-R3_LANES = [
-    "deid_synth", "deid_synth_noshuffle", "extract_bulk", "media_redaction",
-    "deid_ingest_testdata", "q1_pricing_summary",
-    "join_customer_nation_region", "anti_join_customers_without_orders",
-    "events_rollup", "rule_classification", "minhash_signatures",
-    "lsh_candidate_pairs", "dedup_exact", "text_stats", "simhash",
-    "ann_threshold", "media_redaction_plan", "html_strip_tags",
-    "extract_main_content", "layout_parse", "phi_scrub", "dataset_split",
-    "gopher_repetition", "passage_dedup", "decontaminate",
-    "events_asof_join",
-]
-
-EXTRAS = {
-    "deid_noshuffle_docs_per_sec": 40080.2,
-    "deid_docs_per_sec": 16949.2,
-    "extract_docs_per_sec": 68906.1,
-    "n_workers": 2,
-    # BENCH/-only extras that must NOT leak into the headline line
-    "minhash_signatures_fast_sec": 1.16,
-    "worker_spread_pct": {n: 99.9 for n in R3_LANES},
-    "method": "x" * 400,
-}
-
-
-def _queries(names):
-    return {n: round(1.234 + 0.001 * i, 3) for i, n in enumerate(names)}
-
-
-def test_headline_under_driver_cap():
-    line = bench.compact_headline(
-        12.345, _queries(R3_LANES), EXTRAS, 0.1, 32)
-    assert len(line) <= bench.HEADLINE_BUDGET
-    assert "\n" not in line
-    obj = json.loads(line)
-    assert obj["metric"] == "total_headline_sec"
-    assert set(obj["queries"]) == set(R3_LANES)
-    # the three throughput figures survive; the bulky extras do not
-    assert obj["extras"]["deid_docs_per_sec"] == 16949.2
-    assert "worker_spread_pct" not in obj["extras"]
-    assert "method" not in obj["extras"]
-
-
-def test_headline_grows_gracefully():
-    # 2x the lane count still fits (extras dropped / decimals coarsened
-    # before any truncation)
-    many = R3_LANES + [f"future_lane_{i:02d}_extra_long_name" for i in range(26)]
-    line = bench.compact_headline(99.9, _queries(many), EXTRAS, 0.1, 32)
-    assert len(line) <= bench.HEADLINE_BUDGET
-    json.loads(line)
-
-
-def test_headline_truncates_rather_than_overflow():
-    huge = [f"pathological_query_name_{i:03d}_{'x' * 40}" for i in range(80)]
-    line = bench.compact_headline(99.9, _queries(huge), EXTRAS, 0.1, 32)
-    assert len(line) <= bench.HEADLINE_BUDGET
-    obj = json.loads(line)
-    assert obj["queries"].get("queries_truncated") is True
-    # priority order preserved: earliest lanes survive truncation
-    assert huge[0] in obj["queries"]
-
-
-# ---------------------------------------------------------------------------
-# plan_report final-plan-only counting (r3 VERDICT item #4)
-# ---------------------------------------------------------------------------
+from tools import plan_report
 
 # A condensed executed-AQE explain("formatted"): nested cached plan with its
 # own Final/Initial sections, a top-level Initial section whose replaced
@@ -166,11 +91,6 @@ Keys [1]: [k#1L]
 
 
 def test_plan_report_counts_final_plan_only():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import plan_report
-
     ids = plan_report.final_plan_ids(_AQE_PLAN)
     # Initial-plan-only nodes excluded, at BOTH nesting levels
     assert {13, 14, 28, 29, 30, 33, 34}.isdisjoint(ids)
@@ -184,8 +104,6 @@ def test_plan_report_counts_final_plan_only():
 
 
 def test_plan_report_handles_plain_plans():
-    import plan_report
-
     plain = """== Physical Plan ==
 * HashAggregate (3)
 +- Exchange (2)
