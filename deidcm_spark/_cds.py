@@ -19,10 +19,11 @@ session takes:
   into place.  No session waits for it; the interpreter's exit does.
 * **off** - nothing is added, and the reason is logged: the driver JVM
   already runs (``spark-submit``, or an earlier session of this process),
-  the caller set ``SPARK_CONF_DIR``, ``$SPARK_HOME/conf`` holds more than
-  ``*.template`` files, another process is building the archive, or an
-  earlier build failed (its log is ``<cache>/<key>.dump.log``; delete
-  ``<key>.failed`` to try again).
+  its options start Flight Recorder or load an agent
+  (:data:`_CRASHES_WITH_ARCHIVE`), the caller set ``SPARK_CONF_DIR``,
+  ``$SPARK_HOME/conf`` holds more than ``*.template`` files, another
+  process is building the archive, or an earlier build failed (its log is
+  ``<cache>/<key>.dump.log``; delete ``<key>.failed`` to try again).
 
 JDK 17 refuses to archive a classpath that holds a non-empty directory, and
 Spark's launcher puts ``SPARK_CONF_DIR`` (default ``$SPARK_HOME/conf``)
@@ -57,6 +58,14 @@ log = logging.getLogger(__name__)
 DUMP_TIMEOUT_S = 600
 # the header of a static archive starts with this magic (little-endian)
 _MAGIC = (0xF00BABA2).to_bytes(4, "little")
+# Driver options under which a mapped archive kills the JVM: on JDK 17.0.20
+# a class-file load hook (Flight Recorder's, or a java agent's
+# transformer's) meets the first archived class and the JVM dies with
+# SIGSEGV in KlassFactory::check_shared_class_file_load_hook.  Reproduced
+# with -XX:StartFlightRecording and with a -javaagent that adds a
+# transformer; a -javaagent without one and -agentlib:jdwp ran, but any
+# agent may add a hook, so every agent turns the archive off.
+_CRASHES_WITH_ARCHIVE = ("-XX:StartFlightRecording", "-javaagent:", "-agentlib:", "-agentpath:")
 
 
 @dataclass
@@ -109,13 +118,30 @@ def _is_archive(path: str) -> bool:
         return False
 
 
-def plan() -> Plan:
-    """The path the next driver-JVM launch takes (module docstring)."""
+def _archive_crasher(options: str) -> str | None:
+    """The first option in ``options`` or the JVM's option variables that a
+    mapped archive does not survive (:data:`_CRASHES_WITH_ARCHIVE`)."""
+    text = " ".join((options, os.environ.get("JAVA_TOOL_OPTIONS", ""),
+                     os.environ.get("JDK_JAVA_OPTIONS", "")))
+    try:
+        args = shlex.split(text)
+    except ValueError:
+        args = text.split()
+    return next((a for a in args if a.startswith(_CRASHES_WITH_ARCHIVE)), None)
+
+
+def plan(driver_options: str) -> Plan:
+    """The path the next driver-JVM launch takes (module docstring), given
+    the driver's final Java options."""
     from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return Plan("off", "the driver JVM already runs")
+    crasher = _archive_crasher(driver_options)
+    if crasher:
+        return Plan("off", f"{crasher.split('=')[0]} may hook class loading, "
+                           "which a mapped archive does not survive")
     cache = cache_dir()
     conf_dir = os.path.join(cache, "conf")
     if os.environ.get("SPARK_CONF_DIR", conf_dir) != conf_dir:

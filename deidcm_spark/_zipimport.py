@@ -13,9 +13,12 @@ a few ms of actual UDF work.
 invalidation only drops the archive's entry from
 ``zipimport._zip_directory_cache`` and the next lookup re-reads it, so an
 archive that changed is still seen and one that did not costs nothing.
-Importing ``deidcm_spark`` installs it, so every task after a worker's first
-runs with it.  On a Python whose ``zipimporter`` already has ``_get_files``
-(the lazy implementation) it does nothing.
+Importing ``deidcm_spark`` installs it.  The workers of a
+``session.get_spark`` session fork from ``deidcm_spark._daemon``, which has
+imported the package, so every task runs with it, a worker's first included
+(under PySpark's stock daemon, every task after a worker's first).  On a
+Python whose ``zipimporter`` already has ``_get_files`` (the lazy
+implementation) it does nothing.
 """
 
 from __future__ import annotations

@@ -36,6 +36,11 @@ WORKER_ENV = {
     "OMP_NUM_THREADS": "1",
 }
 
+# Where the driver imported this package from: a checkout or a --py-files
+# archive.  The workers' daemon (_daemon) imports the package when it
+# starts, before any task has put --py-files archives on sys.path.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Driver JVM profile: ParallelGC beats G1 by >2x on this allocation pattern
 # (short-lived Arrow batch buffers, 32 allocating task threads).
 DRIVER_JAVA_OPTIONS = "-XX:+UseParallelGC"
@@ -65,6 +70,8 @@ def get_spark(
     # "off" path, and a submit line that wants the archive passes
     # `-XX:SharedArchiveFile=<cache>/<key>.jsa` in --driver-java-options
     # itself (with SPARK_CONF_DIR at the same empty directory, see _cds).
+    # The Python daemon module and the workers' PYTHONPATH are session
+    # confs: they hold under spark-submit too.
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     apply_worker_env()
     local_dir = (
@@ -91,15 +98,19 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # workers fork from a daemon that has numpy/pandas/pyarrow loaded
+        # and frozen (_daemon): one shared copy instead of one per worker
+        .config("spark.python.daemon.module", "deidcm_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     # the class-data-sharing archive (_cds): its flags go after the final
     # extraJavaOptions, the caller's included, and SPARK_CONF_DIR points at
     # its empty directory only while the launcher reads it
-    cds = _cds.plan()
+    opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
+    cds = _cds.plan(opts)
     if cds.options:
-        opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         b = b.config("spark.driver.extraJavaOptions", f"{opts} {cds.options}")
     saved = os.environ.get("SPARK_CONF_DIR")
     if cds.conf_dir:

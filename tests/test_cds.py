@@ -3,7 +3,7 @@
 Launch behaviour runs in fresh interpreters against a temporary
 ``XDG_CACHE_HOME``: the first one records its class list and builds the
 archive at exit, the second maps it.  The "off" rules are checked on
-``_cds.plan()`` in this process, which launches nothing."""
+``_cds.plan(driver_options)`` in this process, which launches nothing."""
 
 import json
 import os
@@ -14,6 +14,7 @@ import sys
 import pytest
 
 from deidcm_spark import _cds
+from deidcm_spark.session import DRIVER_JAVA_OPTIONS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -131,38 +132,55 @@ def fresh(tmp_path, monkeypatch):
     (home / "conf" / "spark-defaults.conf.template").write_text("")
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.setattr("pyspark.find_spark_home._find_spark_home", lambda: str(home))
-    for k in ("SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT"):
+    for k in ("SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
         monkeypatch.delenv(k, raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     return home
 
 
 def test_plan_records_when_no_archive_exists(fresh, tmp_path, monkeypatch):
-    p = _cds.plan()
+    p = _cds.plan(DRIVER_JAVA_OPTIONS)
     assert p.mode == "recording"
     assert p.conf_dir == str(tmp_path / "cache" / "deidcm_spark" / "cds" / "conf")
     assert p.options == f"-XX:DumpLoadedClassList={p.class_list}"
     # its own empty conf dir, left in the environment, is not the caller's
     monkeypatch.setenv("SPARK_CONF_DIR", p.conf_dir)
-    assert _cds.plan().mode == "recording"
+    assert _cds.plan(DRIVER_JAVA_OPTIONS).mode == "recording"
+    # an agent named only inside another option's value loads nothing
+    assert _cds.plan(f"{DRIVER_JAVA_OPTIONS} -Dnote=-javaagent:x.jar").mode == "recording"
 
 
 def test_plan_key_follows_the_jars(fresh):
-    before = _cds.plan().base
+    before = _cds.plan(DRIVER_JAVA_OPTIONS).base
     os.utime(fresh / "jars" / "a.jar", ns=(0, 0))
-    assert _cds.plan().base != before
+    assert _cds.plan(DRIVER_JAVA_OPTIONS).base != before
 
 
-@pytest.mark.parametrize("case", ["conf_dir", "conf_file", "jvm", "building", "failed"])
+@pytest.mark.parametrize("case", [
+    "conf_dir", "conf_file", "jvm", "building", "failed",
+    "flight_recorder", "javaagent", "agentlib", "tool_options",
+])
 def test_plan_adds_no_flag(fresh, monkeypatch, case):
-    if case == "conf_dir":
+    # Flight Recorder and a java agent's class-file transformer crashed a
+    # driver JVM that mapped the archive (SIGSEGV in
+    # KlassFactory::check_shared_class_file_load_hook, JDK 17.0.20)
+    options = DRIVER_JAVA_OPTIONS
+    if case == "flight_recorder":
+        options += " -XX:StartFlightRecording=filename=rec.jfr,settings=profile"
+    elif case == "javaagent":
+        options += " '-javaagent:agents/agent.jar=mode=transform'"
+    elif case == "agentlib":
+        options += " -agentlib:jdwp=transport=dt_socket,server=y,suspend=n"
+    elif case == "tool_options":
+        monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-javaagent:agents/agent.jar")
+    elif case == "conf_dir":
         monkeypatch.setenv("SPARK_CONF_DIR", str(fresh / "conf"))
     elif case == "conf_file":
         (fresh / "conf" / "spark-defaults.conf").write_text("spark.x 1\n")
     elif case == "jvm":
         monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     else:
-        base = _cds.plan().base
+        base = _cds.plan(options).base
         open(base + (".lock" if case == "building" else ".failed"), "w").close()
-    p = _cds.plan()
+    p = _cds.plan(options)
     assert (p.mode, p.options, p.conf_dir) == ("off", "", ""), p
