@@ -1136,7 +1136,7 @@ def deid_pipeline(spark, sf_dir):
     media_ref) sequence) — hash-checked against the independent oracle's
     fingerprints of the same deterministic corpus."""
     docs = synth_documents(spark, 300, seed=13, media_rate=0.2, skew=0.05)
-    out = deidentify_attributes(docs, ORG_ROOT, SALT, num_partitions=8)
+    out = deidentify_attributes(docs, ORG_ROOT, SALT)
     return out.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
@@ -1179,7 +1179,7 @@ def _deid_recipe_cases_sql() -> str:
 
 def deid_ingest_testdata(spark, sf_dir):
     spans = documents_to_spans(_load(spark, sf_dir, "documents"))
-    out = deidentify_attributes(spans, ORG_ROOT, SALT, num_partitions=8, with_metrics=True)
+    out = deidentify_attributes(spans, ORG_ROOT, SALT, with_metrics=True)
     return out.select(
         "doc_id", F.size("spans").alias("n_spans_out"),
         "n_removed", "n_erased", "n_pseudonymized", "n_kept",

@@ -7,9 +7,14 @@ Subcommands map 1:1 to the engine's lanes, each resumable where the lane
 supports it:
 
   deid     span-form documents → de-identified documents (+ metrics cols)
-           [--resume: bucket-committed lineage job, lineage.run_deid_job]
+           as a bucket-committed, resumable job (lineage.run_deid_job):
+           <output>/data (hive bucket= partitions) + <output>/_lineage;
+           a rerun commits only the missing buckets, one under other
+           settings raises (<output>/_settings.json)
   extract  raw (doc_id, text, lang, source) documents → interleaved
-           main-content span table [--resume via lineage.run_extract_job]
+           main-content span table, same layout and resume
+           (lineage.run_extract_job); its <output>/data feeds deid with
+           no shuffle under the same --salt/--buckets
   scrub    raw documents → PHI-scrubbed text (dates/times/emails/names/UIDs)
   dedup    raw documents → verified near-dup pairs + KEEP/DROP decisions
   semdedup embeddings → SemDeDup KEEP/DROP decisions + persisted codebook
@@ -66,7 +71,7 @@ Examples:
   spark-submit --master local[32] --py-files deidcm_spark.zip \\
       --driver-java-options "-XX:+UseParallelGC" --driver-memory 8g \\
       -m deidcm_spark deid --input in.parquet --output out/ \\
-      --org-root 9.9.9.9.9 --salt s1 --resume
+      --org-root 9.9.9.9.9 --salt s1 --buckets 32
 
 (For ``spark-submit`` + ``-m`` on Spark versions without module support,
 an equivalent one-line driver script works: ``from deidcm_spark.__main__
@@ -95,7 +100,7 @@ from deidcm_spark.pipeline import write_stage
 # test_cli_write_stage.py rejects any other `.write` in this module.
 
 
-def _spark(app: str, shuffle_partitions: int):
+def _spark(app: str, shuffle_partitions: int = 32):
     from deidcm_spark.session import get_spark
 
     return get_spark(app_name=app, shuffle_partitions=shuffle_partitions)
@@ -116,41 +121,24 @@ def _write_counted(spark, df, path: str) -> int:
 
 
 def cmd_deid(args) -> dict:
-    spark = _spark("deidcm_deid", args.shuffle_partitions)
-    docs = spark.read.parquet(args.input)
-    if args.resume:
-        from deidcm_spark import lineage
+    from deidcm_spark import lineage
 
-        summary = lineage.run_deid_job(
-            spark, docs, args.output, args.org_root, args.salt,
-            n_buckets=args.buckets, run_id=args.run_id,
-            date_mode=args.date_mode, date_offset=args.date_offset,
-        )
-        return summary
-    from deidcm_spark.operators.deidentify import deidentify_attributes
-
-    out = deidentify_attributes(
-        docs, args.org_root, args.salt,
-        num_partitions=args.shuffle_partitions, with_metrics=True,
+    spark = _spark("deidcm_deid")
+    return lineage.run_deid_job(
+        spark, spark.read.parquet(args.input), args.output, args.org_root,
+        args.salt, n_buckets=args.buckets, run_id=args.run_id,
         date_mode=args.date_mode, date_offset=args.date_offset,
     )
-    return {"docs": _write_counted(spark, out, args.output)}
 
 
 def cmd_extract(args) -> dict:
-    spark = _spark("deidcm_extract", args.shuffle_partitions)
-    docs = spark.read.parquet(args.input)
-    if args.resume:
-        from deidcm_spark import lineage
+    from deidcm_spark import lineage
 
-        return lineage.run_extract_job(
-            spark, docs, args.output, args.salt,
-            n_buckets=args.buckets, run_id=args.run_id,
-        )
-    from deidcm_spark.operators import extract
-
-    out = extract.extract_main_content(extract.with_html(docs))
-    return {"docs": _write_counted(spark, out, args.output)}
+    spark = _spark("deidcm_extract")
+    return lineage.run_extract_job(
+        spark, spark.read.parquet(args.input), args.output, args.salt,
+        n_buckets=args.buckets, run_id=args.run_id,
+    )
 
 
 def cmd_scrub(args) -> dict:
@@ -978,17 +966,17 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="deidcm_spark")
     sub = p.add_subparsers(dest="command", required=True)
 
-    def common(sp, org_root=False):
+    def common(sp, org_root=False, shuffles=True):
         sp.add_argument("--input", required=True)
         sp.add_argument("--output", required=True)
-        sp.add_argument("--shuffle-partitions", type=int, default=32)
+        if shuffles:  # the bucket-commit jobs size their one exchange themselves
+            sp.add_argument("--shuffle-partitions", type=int, default=32)
         sp.add_argument("--salt", default="deidcm_spark")
         if org_root:
             sp.add_argument("--org-root", required=True)
 
     d = sub.add_parser("deid")
-    common(d, org_root=True)
-    d.add_argument("--resume", action="store_true")
+    common(d, org_root=True, shuffles=False)
     d.add_argument("--buckets", type=int, default=32)
     d.add_argument("--run-id", default="run0")
     d.add_argument("--date-mode", default="first_day_year",
@@ -997,8 +985,7 @@ def build_parser() -> argparse.ArgumentParser:
     d.set_defaults(fn=cmd_deid)
 
     e = sub.add_parser("extract")
-    common(e)
-    e.add_argument("--resume", action="store_true")
+    common(e, shuffles=False)
     e.add_argument("--buckets", type=int, default=32)
     e.add_argument("--run-id", default="run0")
     e.set_defaults(fn=cmd_extract)

@@ -21,7 +21,8 @@ missing buckets are recomputed.
 
 Both jobs (:func:`run_deid_job`, :func:`run_extract_job`) run this protocol
 through :func:`_commit_buckets` and supply only their kernel and its
-per-batch tally.  The bucket counters come from the write job itself: the
+per-batch tally; what an input's stored ``bucket`` column means is decided
+there too, once for both.  The bucket counters come from the write job itself: the
 kernel carries ``bucket`` through, each output batch is tallied per bucket
 in the worker and the tallies are summed on the driver through an
 accumulator.  Step 1 is therefore ONE data-writing Spark action, and step 2
@@ -32,6 +33,8 @@ runs in the write job's result stage.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 import pyarrow as pa
@@ -96,6 +99,25 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
         if not st.getPath().getName().startswith(("_", "."))
     ]
     return spark.read.parquet(*files)
+
+
+def _check_settings(spark, fs, path, settings: dict) -> bool:
+    """Raise if the output's recorded settings (``path``) differ from
+    ``settings``; return whether a record exists."""
+    if not fs.exists(path):
+        return False
+    stream = fs.open(path)
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    differ = sorted(k for k, v in json.loads(text).items() if settings.get(k) != v)
+    if differ:
+        raise ValueError(
+            f"{path} records other {', '.join(differ)} for this output — rerun"
+            " with the same settings, or write to a new output directory"
+        )
+    return True
 
 
 class _CounterSums(AccumulatorParam):
@@ -179,7 +201,7 @@ def prepare_bucketed_raw_corpus(
     """Extraction-lane analogue of :func:`prepare_bucketed_corpus`: cluster
     the RAW (doc_id, text, lang, source) corpus on the extract job's bucket
     function.  doc_id is cast to string FIRST — the extractor's id domain —
-    so the stored bucket matches what ``run_extract_job`` recomputes, and
+    so the stored bucket is the one ``run_extract_job`` hashes, and
     ``run_extract_job`` over the stored table runs the zero-exchange plan:
     scan → html → mapInPandas → sink."""
     prepare_bucketed_corpus(
@@ -188,20 +210,27 @@ def prepare_bucketed_raw_corpus(
     )
 
 
-def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
-                    max_buckets_this_attempt, clustered, kernel, tally,
-                    schema) -> tuple[dict, int | None]:
-    """One attempt of the bucket-commit protocol; returns the summary dict
-    and, if this attempt committed the last pending bucket, the run's
-    committed document total (else None).
+def _commit_buckets(spark, documents, out_dir, run_id, salt, n_buckets,
+                    max_buckets_this_attempt, kernel, tally,
+                    schema, settings) -> dict:
+    """One attempt of the bucket-commit protocol; returns the summary dict.
+    The attempt that commits the last pending bucket adds ``docs``, the
+    run's committed document total.
 
-    ``bucketed`` carries the job's ``bucket`` column; ``clustered`` says
-    its rows are already stored clustered on it, so the bucket repartition
-    is skipped.  ``kernel(todo, observe)`` turns the pending rows into the
-    output frame, still carrying ``bucket``, and calls ``observe`` in the
-    worker on every output batch; ``tally(batch)`` maps one such batch to
-    ``{bucket: [counter, ...]}`` in the order of ``schema``'s counter
-    columns (between ``bucket`` and ``status``).
+    ``documents`` without a ``bucket`` column gets ``bucket_expr(salt,
+    n_buckets)`` and one repartition on it.  A stored ``bucket`` column
+    (:func:`prepare_bucketed_corpus`, or another lane's ``data/``) is
+    trusted as that function: pending buckets are filtered on it, so a
+    resume prunes and nothing shuffles.  It is guarded twice, here only:
+    each attempt with pending buckets runs a 1k-row probe (a wholesale
+    mismatch), and the completing attempt reconciles the committed total
+    with the source count (a partial one, e.g. two prepares unioned).
+
+    ``kernel(todo, observe)`` turns the pending rows into the output frame,
+    still carrying ``bucket``, and calls ``observe`` in the worker on every
+    output batch; ``tally(batch)`` maps one such batch to ``{bucket:
+    [counter, ...]}`` in the order of ``schema``'s counter columns (between
+    ``bucket`` and ``status``).
 
     An attempt is one data-writing Spark action plus one single-file append
     of a driver-local lineage table.  The counters are summed through an
@@ -214,9 +243,23 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
     The document total sums every committed row of the run — the rows read
     at attempt start plus this attempt's — without deduplicating buckets,
     so a bucket committed twice shows up as a surplus.
+
+    The first attempt that writes to ``out_dir`` records ``settings`` (the
+    kernel's, plus n_buckets, the input file set's hash and the salt's
+    SHA-256) in ``_settings.json``; any later attempt, of any run_id, under
+    other settings raises, even with nothing pending, instead of resuming
+    another run or leaving another bucket layout's partitions in ``data/``.
     """
     if n_buckets < 1:  # range(0) would leave nothing pending: a silent no-op
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    # the input's file set, hashed in the JVM (it may hold millions of paths)
+    files = spark._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        documents._jdf.inputFiles())
+    settings = {**settings, "n_buckets": n_buckets,
+                "input_files": files.toSet().hashCode(),
+                "salt_sha256": hashlib.sha256(salt.encode()).hexdigest()}
+    fs, settings_path = hadoop_path(spark, os.path.join(out_dir, "_settings.json"))
+    recorded = _check_settings(spark, fs, settings_path, settings)
     prior = _committed_rows(spark, out_dir, run_id)
     done = {b for b, _ in prior}
     pending = sorted(set(range(n_buckets)) - done)
@@ -225,16 +268,40 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
         pending = pending[:max_buckets_this_attempt]
     summary = {"run_id": run_id, "committed_before": len(done), "processed": 0}
     if not pending:
-        return summary, None
+        return summary
 
-    todo = bucketed.filter(F.col("bucket").isin(pending))
-    if not clustered:
+    clustered = "bucket" in documents.columns
+    if clustered:
+        probe = (
+            documents.limit(1000)
+            .withColumn("_b2", bucket_expr(salt, n_buckets))
+            .filter(F.col("bucket") != F.col("_b2"))
+            .count()
+        )
+        if probe:
+            raise ValueError(
+                "the stored bucket column does not match "
+                f"pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
+                f"re-run prepare_bucketed_corpus with this job's salt/n_buckets"
+            )
+        todo = documents.filter(F.col("bucket").isin(pending))
+    else:
         # salted repartition happens here: one shuffle, partitioned by bucket
         # so the dynamic-overwrite write aligns with processing partitions.
         # No more partitions than cores: hashing N buckets into N partitions
         # leaves some empty, and an empty Python task still costs ~0.1 s
         n_parts = min(len(pending), spark.sparkContext.defaultParallelism)
-        todo = todo.repartition(n_parts, "bucket")
+        todo = (
+            documents.withColumn("bucket", bucket_expr(salt, n_buckets))
+            .filter(F.col("bucket").isin(pending))
+            .repartition(n_parts, "bucket")
+        )
+    if not recorded:  # before the first write, so any output has a record
+        stream = fs.create(settings_path, False)
+        try:
+            stream.write(bytearray(json.dumps(settings, sort_keys=True).encode()))
+        finally:
+            stream.close()
 
     acc = spark.sparkContext.accumulator({}, _CounterSums())
     try:
@@ -269,9 +336,22 @@ def _commit_buckets(spark, bucketed, out_dir, run_id, n_buckets,
     )
     summary["processed"] = len(pending)
     if len(pending) < n_pending:
-        return summary, None
+        return summary
     # n_docs is the first counter of both lineage schemas
-    return summary, sum(n for _, n in prior) + sum(r[2] for r in rows)
+    docs = sum(n for _, n in prior) + sum(r[2] for r in rows)
+    # completion reconciliation (stored column only; a computed bucket
+    # covers every row by construction): rows whose stored bucket fell
+    # outside range(n_buckets) were never selected by any attempt
+    if clustered:
+        src_docs = documents.count()
+        if docs != src_docs:
+            raise ValueError(
+                f"bucketed run committed {docs} documents but the "
+                f"source has {src_docs} — the stored bucket column does not "
+                f"cover range({n_buckets}) for every row (mixed prepares?)"
+            )
+    summary["docs"] = int(docs)
+    return summary
 
 
 def run_deid_job(
@@ -292,73 +372,28 @@ def run_deid_job(
     commits only the first K pending buckets and stops, simulating a crash
     partway through the corpus.
 
-    A ``documents`` frame that carries a ``bucket`` column is taken as
-    stored clustered on this job's bucket function (written by
-    :func:`prepare_bucketed_corpus` with the same salt/n_buckets): the
-    repartition exchange — the single shuffle of the full span payload —
-    is skipped, and the plan is scan → filter → mapInArrow → sink.  At
-    32 local cores that shuffle is the measured kernel-time bottleneck
+    A stored ``bucket`` column (:func:`_commit_buckets`) skips the one
+    shuffle of the full span payload: scan → filter → mapInArrow → sink.
+    At 32 local cores that shuffle is the measured kernel-time bottleneck
     (BENCH/BASELINE.md); on a real cluster it is the network-heavy stage.
-    A stored bucket column that is not this job's bucket function raises.
 
     An attempt is one data-writing Spark action plus one single-file append
     of a driver-local lineage table (:func:`_commit_buckets`); the counters
     are tallied per bucket on the Arrow kernel's output batches.
     """
-    clustered = "bucket" in documents.columns
-    bucketed = (
-        documents if clustered
-        else documents.withColumn("bucket", bucket_expr(salt, n_buckets))
-    )
 
     def kernel(todo: DataFrame, observe) -> DataFrame:
-        if clustered:
-            # the stored bucket column must be THIS job's bucket function —
-            # a different salt/n_buckets would silently mark out-of-range
-            # buckets "complete" on resume.  Two-level defense: a cheap
-            # 1k-row probe fails fast on a wholesale mismatch here, and
-            # after the LAST bucket commits the lineage totals are
-            # reconciled against the source count (below) — which catches
-            # even a partially mis-bucketed corpus (e.g. two prepares
-            # unioned) with one metadata-cheap count instead of a
-            # full-corpus validation scan per attempt.
-            probe = (
-                documents.limit(1000)
-                .withColumn("_b2", bucket_expr(salt, n_buckets))
-                .filter(F.col("bucket") != F.col("_b2"))
-                .count()
-            )
-            if probe:
-                raise ValueError(
-                    "the stored bucket column does not match "
-                    f"pmod(xxhash64(doc_id, {salt!r}), {n_buckets}) — "
-                    f"re-run prepare_bucketed_corpus with this job's salt/n_buckets"
-                )
         return deidentify_attributes(
             todo, org_root, salt, with_metrics=True,
             date_mode=date_mode, date_offset=date_offset, observe=observe,
         )
 
-    summary, committed_docs = _commit_buckets(
-        spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
-        clustered, kernel, _bucket_counts, LINEAGE_SCHEMA,
+    return _commit_buckets(
+        spark, documents, out_dir, run_id, salt, n_buckets,
+        max_buckets_this_attempt, kernel, _bucket_counts, LINEAGE_SCHEMA,
+        {"job": "deid", "org_root": org_root, "date_mode": date_mode,
+         "date_offset": date_offset},
     )
-
-    # completion reconciliation: once every bucket is committed, the
-    # lineage doc total (known on the driver: earlier attempts' rows plus
-    # this attempt's) must equal the source count (a metadata-cheap parquet
-    # count) — catches rows whose stored bucket fell outside range(n_buckets)
-    # and was therefore never selected by any attempt
-    if clustered and committed_docs is not None:
-        src_docs = documents.count()
-        if committed_docs != src_docs:
-            raise ValueError(
-                f"bucketed run committed {committed_docs} documents but the "
-                f"source has {src_docs} — the stored bucket column does not "
-                f"cover range({n_buckets}) for every row (mixed prepares?)"
-            )
-        summary["reconciled_docs"] = int(committed_docs)
-    return summary
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -381,24 +416,11 @@ def run_extract_job(
     extractor's output batches.  ``raw_documents`` = (doc_id, text, lang,
     source).
 
-    An input that carries a ``bucket`` column is taken as stored clustered
-    on this job's bucket function (string-cast doc_id, see
-    :func:`prepare_bucketed_raw_corpus`), so the repartition exchange is
-    skipped.
+    doc_id is cast to string first, the extractor's id domain: a stored
+    ``bucket`` column hashed from a long doc_id fails the probe
+    (:func:`prepare_bucketed_raw_corpus` hashes the string).
     """
     from deidcm_spark.operators import extract
-
-    # cast doc_id to string FIRST: the extractor emits string doc_ids, and
-    # the bucket is hashed from that string.  A STORED bucket column is
-    # never trusted here — it may have been hashed from the pre-cast value
-    # (long doc_id).  Recomputing keeps the filtered and the written bucket
-    # equal unconditionally; a stored bucket column then only skips the
-    # repartition (zero-exchange still holds when the corpus was prepared
-    # from string-cast ids).
-    clustered = "bucket" in raw_documents.columns
-    bucketed = raw_documents.withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    ).withColumn("bucket", bucket_expr(salt, n_buckets))
 
     def kernel(todo: DataFrame, observe) -> DataFrame:
         html = todo.select(
@@ -406,8 +428,8 @@ def run_extract_job(
         )
         return extract.extract_main_content(html, observe=observe)
 
-    summary, _ = _commit_buckets(
-        spark, bucketed, out_dir, run_id, n_buckets, max_buckets_this_attempt,
-        clustered, kernel, _extract_counts, EXTRACT_LINEAGE_SCHEMA,
+    return _commit_buckets(
+        spark, raw_documents.withColumn("doc_id", F.col("doc_id").cast("string")),
+        out_dir, run_id, salt, n_buckets, max_buckets_this_attempt, kernel,
+        _extract_counts, EXTRACT_LINEAGE_SCHEMA, {"job": "extract"},
     )
-    return summary

@@ -2,12 +2,16 @@
 
 The reference's equivalent is an O(rows × cols) driver-side interpreter loop
 with per-cell ``.loc`` writes (``deidcm/dicom/deid_mammogram.py:301-310``).
-Here the whole lane is a single executor-side stage:
+Here the whole lane is a single row-local executor-side stage:
 
-    documents ──repartition(xxhash64(doc_id, salt))──▶ MapInArrow(
+    documents ──▶ MapInArrow(
         deidentify_record_batch: classify each text span against the rule
         table, apply RETIRER/EFFACER/PSEUDONYMISER/CONSERVER, append the
         PatientIdentityRemoved marker span) ──▶ sink
+
+It plans no exchange of its own.  The salted bucket repartition that
+spreads hot studies belongs to the bucket-commit job
+(``lineage.run_deid_job``), which skips it over a stored ``bucket`` column.
 
 Span semantics vs the reference (deid_mammogram.py:321-340, 407-438):
 
@@ -36,7 +40,7 @@ kernel's closure exactly like a broadcast variable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from deidcm_spark.operators.deidentify_arrow import (  # noqa: F401 (re-export)
@@ -49,7 +53,6 @@ def deidentify_attributes(
     df: DataFrame,
     org_root: str,
     salt: str = "deidcm_spark",
-    num_partitions: int | None = None,
     with_metrics: bool = False,
     date_mode: str = "first_day_year",
     date_offset: int = 100000,
@@ -58,12 +61,9 @@ def deidentify_attributes(
     """Spark-native analogue of the reference's ``deidentify_attributes``
     (deid_mammogram.py:270-312): documents in, de-identified documents out.
 
-    Explicit salted repartition on ``xxhash64(doc_id, salt)`` defeats
-    hot-study skew (many spans under few doc_id prefixes): the hash spreads
-    lexicographically adjacent ids, the salt de-correlates reruns.
-
-    The kernel is the vectorized ``mapInArrow`` batch function in
-    operators/deidentify_arrow.py (no per-span Python objects).
+    One row-local ``mapInArrow`` stage that keeps the input's partitioning;
+    its batch function is in operators/deidentify_arrow.py (no per-span
+    Python objects).
     ``date_mode`` is ``'first_day_year'`` (the reference's active DA/DT
     coarsening) or ``'offset'`` (shift by ``date_offset`` days).
 
@@ -73,8 +73,6 @@ def deidentify_attributes(
     """
     if date_mode not in ("first_day_year", "offset"):
         raise ValueError(f"unknown date_mode {date_mode!r}")
-    if num_partitions:
-        df = df.repartition(num_partitions, F.xxhash64("doc_id", F.lit(salt)))
     passthrough = [c for c in df.columns if c not in ("doc_id", "spans")]
     counters = ["n_removed", "n_erased", "n_pseudonymized", "n_kept"]
     out_schema = StructType(

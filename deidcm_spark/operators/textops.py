@@ -585,6 +585,8 @@ def pack_shards(
     ``bpe.bpe_token_count`` (the whitespace tokenizer stays the default:
     it is the contract query's oracle-pinned spec).
     """
+    if capacity_tokens < 1:
+        raise ValueError(f"capacity_tokens must be >= 1, got {capacity_tokens}")
     pre = _prefix_tokens(df, token_col, block_size, max_blocks)
     return pre.select(
         "doc_id",
@@ -738,6 +740,8 @@ def pack_sequences(
     topically-related documents land adjacent in the stream, so they
     share training sequences.
     """
+    if seq_len < 1:
+        raise ValueError(f"seq_len must be >= 1, got {seq_len}")
     pre = _prefix_tokens(
         df, token_col, block_size, max_blocks, order, seed, keys
     )

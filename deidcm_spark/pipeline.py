@@ -1,4 +1,5 @@
-"""Top-level composed pipelines — the two north-star flows as one call each.
+"""Top-level composed pipelines — scrub → extract and the curation flow as
+one call each — and where the structured lane runs.
 
 **Free-text lane** (web-style interleaved content):
 
@@ -16,11 +17,11 @@
 **Structured lane** (attribute-encoded spans, the reference's pipeline):
 
     raw documents → ingest.documents_to_spans (recipe-tagged span form)
-      → salted repartition → recipe de-identification (deidentify.py,
-        Arrow kernel; marker span appended)
+      → lineage.run_deid_job (salted bucket repartition, unless the input
+        carries a stored ``bucket`` column → recipe de-identification,
+        deidentify.py's Arrow kernel → bucket commit)
 
-Both compositions are narrow chains — the only shuffle anywhere is the
-mandated salted repartition before the deid kernel.  Resumable variants:
+scrub_extract is a narrow chain with no shuffle.  Resumable lanes:
 lineage.run_extract_job / run_deid_job; incremental: streaming.*.
 """
 
@@ -28,9 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from deidcm_spark.ingest import documents_to_spans
 from deidcm_spark.operators import extract, scrub
-from deidcm_spark.operators.deidentify import deidentify_attributes
 
 
 def scrub_extract(
@@ -41,21 +40,6 @@ def scrub_extract(
     """(doc_id, text, lang, source) → PHI-scrubbed main-content spans."""
     scrubbed = scrub.scrub_documents(raw_documents, org_root, names)
     return extract.extract_main_content(extract.with_html(scrubbed))
-
-
-def ingest_deidentify(
-    raw_documents: DataFrame,
-    org_root: str,
-    salt: str = "deidcm_spark",
-    num_partitions: int | None = None,
-    with_metrics: bool = False,
-) -> DataFrame:
-    """(doc_id, text, lang, source) → de-identified attribute-span table."""
-    spans = documents_to_spans(raw_documents)
-    return deidentify_attributes(
-        spans, org_root, salt,
-        num_partitions=num_partitions, with_metrics=with_metrics,
-    )
 
 
 def curate(
@@ -112,6 +96,8 @@ def curate(
 
     from deidcm_spark.operators import dedup, spandedup, textops
 
+    if seq_len < 1:  # before the first stage write, not at the pack stage
+        raise ValueError(f"seq_len must be >= 1, got {seq_len}")
     n_rows = F.count(F.lit(1))
     base = docs.select("doc_id", "text")
 

@@ -1,6 +1,9 @@
 """The spark-submit job main (``python -m deidcm_spark``): each subcommand
-end-to-end in-process, including the resumable paths."""
+end-to-end in-process, the bucket-committed deid and extract jobs
+included."""
 
+import contextlib
+import io
 import json
 
 import pytest
@@ -15,34 +18,87 @@ def _run(capsys, argv):
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
-def test_cli_ingest_then_deid(tmp_path, capsys, spark):
-    spans = str(tmp_path / "spans")
+@pytest.fixture(scope="module")
+def ingested(spark, tmp_path_factory):
+    """The sf0.001 documents in span form: the ``ingest`` command's output
+    path and the summary it printed."""
+    path = str(tmp_path_factory.mktemp("cli_spans") / "spans")
+    printed = io.StringIO()
+    with contextlib.redirect_stdout(printed):
+        main(["ingest", "--input", f"{SF}/documents.parquet", "--output", path])
+    return path, json.loads(printed.getvalue().strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def spans(ingested):
+    return ingested[0]
+
+
+def _deid(spans, out, *extra):
+    return ["deid", "--input", spans, "--output", out, "--org-root", "9.9.9.9.9",
+            *extra]
+
+
+def test_cli_ingest_then_deid(tmp_path, capsys, spark, ingested):
+    """deid is the bucket-committed job: <out>/data holds the documents in
+    hive ``bucket=`` partitions, and ``export`` reads that directory."""
+    import os
+
+    spans, summary = ingested
+    assert summary["docs"] == 500
     out = str(tmp_path / "deid")
-    r = _run(capsys, ["ingest", "--input", f"{SF}/documents.parquet", "--output", spans])
-    assert r["docs"] == 500
-    r = _run(capsys, [
-        "deid", "--input", spans, "--output", out, "--org-root", "9.9.9.9.9",
-        "--shuffle-partitions", "8",
-    ])
-    assert r["docs"] == 500
-    back = spark.read.parquet(out)
+    r = _run(capsys, _deid(spans, out, "--buckets", "8"))
+    assert r["processed"] == 8 and r["docs"] == 500
+    back = spark.read.parquet(f"{out}/data")
+    assert back.count() == 500
     assert back.filter("n_removed > 0").count() > 0
+    parts = [p for p in os.listdir(f"{out}/data") if not p.startswith(("_", "."))]
+    assert sorted(parts) == sorted(f"bucket={b}" for b in range(8))
+    exported = str(tmp_path / "exported")
+    _run(capsys, ["export", "--input", f"{out}/data", "--output", exported])
+    meta = spark.read.option("header", True).csv(os.path.join(exported, "meta"))
+    assert meta.count() == 500
 
 
-def test_cli_deid_resume(tmp_path, capsys, spark):
-    spans = str(tmp_path / "spans")
+def test_cli_deid_resume(tmp_path, capsys, spark, spans):
     out = str(tmp_path / "deid_resume")
-    _run(capsys, ["ingest", "--input", f"{SF}/documents.parquet", "--output", spans])
-    r = _run(capsys, [
-        "deid", "--input", spans, "--output", out, "--org-root", "9.9.9.9.9",
-        "--resume", "--buckets", "8",
-    ])
+    r = _run(capsys, _deid(spans, out, "--buckets", "8"))
     assert r["processed"] == 8
-    r2 = _run(capsys, [
-        "deid", "--input", spans, "--output", out, "--org-root", "9.9.9.9.9",
-        "--resume", "--buckets", "8",
-    ])
-    assert r2["processed"] == 0 and r2["committed_before"] == 8
+    r2 = _run(capsys, _deid(spans, out, "--buckets", "8"))
+    assert r2 == {"run_id": "run0", "committed_before": 8, "processed": 0}
+
+
+@pytest.mark.parametrize("changed", [
+    ["--buckets", "16"], ["--buckets", "8", "--salt", "other"],
+    ["--buckets", "8", "--date-mode", "offset"],
+])
+def test_cli_deid_rerun_with_other_settings_raises(tmp_path, capsys, spark, spans,
+                                                   changed):
+    """A rerun into the same --output under another bucket count, salt or
+    date rule would resume (or report complete) a run it did not start:
+    it raises and leaves the output as it was."""
+    import os
+
+    out = str(tmp_path / "deid_settings")
+    _run(capsys, _deid(spans, out, "--buckets", "8"))
+    before = sorted(os.listdir(f"{out}/data"))
+    with pytest.raises(ValueError, match="records other"):
+        main(_deid(spans, out, *changed))
+    assert sorted(os.listdir(f"{out}/data")) == before
+
+
+def test_cli_extract_then_deid(tmp_path, capsys, spark):
+    """extract's <out>/data carries the stored bucket column: deid with the
+    same --buckets reads it as is, a different --buckets fails the
+    stored-bucket probe instead of committing a wrong bucket layout."""
+    ex = str(tmp_path / "extract")
+    r = _run(capsys, ["extract", "--input", f"{SF}/documents.parquet", "--output", ex,
+                      "--buckets", "8"])
+    assert r["processed"] == 8 and r["docs"] == 500
+    r = _run(capsys, _deid(f"{ex}/data", str(tmp_path / "deid"), "--buckets", "8"))
+    assert r["processed"] == 8 and r["docs"] == 500
+    with pytest.raises(ValueError, match="stored bucket column does not match"):
+        main(_deid(f"{ex}/data", str(tmp_path / "deid16"), "--buckets", "16"))
 
 
 def test_cli_extract_and_scrub(tmp_path, capsys, spark):
@@ -57,12 +113,10 @@ def test_cli_extract_and_scrub(tmp_path, capsys, spark):
     assert r["docs"] == 500
 
 
-def test_cli_export(tmp_path, capsys, spark):
+def test_cli_export(tmp_path, capsys, spark, spans):
     import os
 
-    spans = str(tmp_path / "spans")
     out = str(tmp_path / "exported")
-    _run(capsys, ["ingest", "--input", f"{SF}/documents.parquet", "--output", spans])
     r = _run(capsys, ["export", "--input", spans, "--output", out])
     assert r["out_dir"] == out
     assert os.path.exists(os.path.join(out, "meta")) and os.path.exists(

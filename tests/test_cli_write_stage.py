@@ -10,6 +10,7 @@ import pytest
 from test_cli import SF
 
 from deidcm_spark.__main__ import main
+from deidcm_spark.ingest import documents_to_spans
 
 MAIN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     "deidcm_spark", "__main__.py")
@@ -67,6 +68,7 @@ def inputs(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("cli_jobs_in")
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.filter("lang = 'en'").write.parquet(str(d / "ref"))
+    documents_to_spans(docs).write.parquet(str(d / "spans"))
     base = docs.select("doc_id", "text").filter("doc_id < 50")
     base.unionByName(
         base.selectExpr("doc_id + 1000 as doc_id", "text")
@@ -83,8 +85,13 @@ _groups = itertools.count()
 
 # Spark jobs per command at sf0.001 (local[4], 8 shuffle partitions).
 # Before the move to write_stage: ppl 13, linededup 11, substrdedup 12,
-# packseq 14, report 9, urldedup 12, dedup 18.
+# packseq 14, report 9, urldedup 12, dedup 18.  extract and deid are the
+# bucket-commit jobs: the input's schema inference, the data write (its
+# bucket exchange and result stage), the lineage append.
 PINS = [
+    ("extract", 4, ["--buckets", "8"]),
+    ("deid", 4, ["--input", "{in}/spans", "--org-root", "9.9.9.9.9",
+                 "--buckets", "8"]),
     ("ppl", 8, ["--reference", "{in}/ref", "--buckets", "4096"]),
     ("linededup", 6, ["--min-line-chars", "5"]),
     ("substrdedup", 7, ["--window", "8"]),
@@ -98,7 +105,9 @@ PINS = [
 @pytest.mark.parametrize("cmd,pin,extra", PINS, ids=[p[0] for p in PINS])
 def test_cli_job_count(spark, inputs, tmp_path, capsys, cmd, pin, extra):
     extra = [a.replace("{in}", str(inputs)) for a in extra]
-    argv = [cmd, "--output", str(tmp_path / cmd), "--shuffle-partitions", "8"]
+    argv = [cmd, "--output", str(tmp_path / cmd)]
+    if cmd not in ("extract", "deid"):  # the bucket-commit jobs take no such option
+        argv += ["--shuffle-partitions", "8"]
     if "--input" not in extra:
         argv += ["--input", f"{SF}/documents.parquet"]
     sc = spark.sparkContext

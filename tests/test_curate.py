@@ -146,6 +146,16 @@ def test_curate_ledger_when_gate_keeps_nothing(spark, tmp_path):
         assert spark.read.parquet(f"{out}/{stage}").count() == 0, stage
 
 
+@pytest.mark.parametrize("seq_len", [0, -2])
+def test_curate_rejects_seq_len_below_one_before_any_write(spark, tmp_path, seq_len):
+    out = tmp_path / "out"
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    with _Actions() as acts, pytest.raises(ValueError, match="seq_len must be >= 1"):
+        curate(spark, docs, str(out), seq_len=seq_len)
+    assert acts.counts == {}
+    assert not out.exists()
+
+
 @pytest.mark.parametrize("overrides", [
     None,
     # loose enough that the empty (NULL) document survives

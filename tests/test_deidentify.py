@@ -29,7 +29,7 @@ def spans_key(rows):
 
 def run_engine(spark, docs):
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    result = deidentify_attributes(df, ORG_ROOT, SALT, num_partitions=4)
+    result = deidentify_attributes(df, ORG_ROOT, SALT)
     return [row.asDict(recursive=True) for row in result.collect()]
 
 

@@ -324,12 +324,14 @@ def test_justext_mode_stopword_density():
 
 def test_pipeline_compositions(spark):
     from deidcm_spark import pipeline
+    from deidcm_spark.ingest import documents_to_spans
+    from deidcm_spark.operators.deidentify import deidentify_attributes
 
     raw = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
     ex = pipeline.scrub_extract(raw, "9.9.9.9.9").collect()
     assert len(ex) == 50 and all(len(r["spans"]) >= 2 for r in ex)
-    de = pipeline.ingest_deidentify(raw, "9.9.9.9.9", num_partitions=4,
-                                    with_metrics=True).collect()
+    de = deidentify_attributes(documents_to_spans(raw), "9.9.9.9.9",
+                               with_metrics=True).collect()
     assert len(de) == 50
     assert all(r["spans"][-1]["text"].endswith("=YES") for r in de)
     assert all(r["n_pseudonymized"] > 0 for r in de)

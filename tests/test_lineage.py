@@ -43,10 +43,12 @@ def test_crash_and_resume_produces_single_shot_result(spark, tmp_path):
     assert s1["processed"] == 3
     assert committed_buckets(spark, out_crash, "r1") == {0, 1, 2}
 
-    # resume completes only the remaining buckets
+    # resume completes only the remaining buckets; the completing attempt
+    # reports the run's committed document total
     s2 = run_deid_job(spark, docs, out_crash, ORG_ROOT, SALT, N_BUCKETS, "r1")
     assert s2["committed_before"] == 3
     assert s2["processed"] == N_BUCKETS - 3
+    assert "docs" not in s1 and s2["docs"] == 150
 
     # single-shot reference run
     run_deid_job(spark, docs, out_clean, ORG_ROOT, SALT, N_BUCKETS, "rX")
@@ -164,22 +166,13 @@ def test_bucketed_crash_resume_and_guards(spark, tmp_path):
     # crash after 3 buckets, then resume — completion reconciles doc totals
     s1 = run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS,
                       max_buckets_this_attempt=3)
-    assert s1["processed"] == 3 and "reconciled_docs" not in s1
+    assert s1["processed"] == 3 and "docs" not in s1
     s2 = run_deid_job(spark, bucketed, out, ORG_ROOT, SALT, n_buckets=N_BUCKETS)
     assert s2["committed_before"] == 3 and s2["processed"] == N_BUCKETS - 3
-    assert s2["reconciled_docs"] == 100
+    assert s2["docs"] == 100
     assert _snapshot(read_output(spark, out)) == _snapshot(
         deidentify_attributes(docs, ORG_ROOT, SALT)
     )
-
-    # guard: a bucket column from a DIFFERENT salt fails the probe instead
-    # of being recomputed
-    from deidcm_spark.lineage import bucket_expr
-
-    wrong = docs.withColumn("bucket", bucket_expr("other_salt", N_BUCKETS))
-    with pytest.raises(ValueError, match="does not"):
-        run_deid_job(spark, wrong, str(tmp_path / "x2"), ORG_ROOT, SALT,
-                     n_buckets=N_BUCKETS)
 
 
 def test_lineage_read_fallback_only_on_path_not_found(spark, tmp_path):
@@ -295,30 +288,118 @@ def test_lineage_counters_equal_reaggregated_data(spark, tmp_path, job, case):
     out = str(tmp_path / case)
     docs = _inputs(spark, job, 120)
     if case == "shuffled":
-        _run(spark, job, docs, out)
+        s = _run(spark, job, docs, out)
     elif case == "bucketed":
         prepare = prepare_bucketed_corpus if job == "deid" else prepare_bucketed_raw_corpus
         prepare(docs, f"bt_counters_{job}", SALT, N_BUCKETS)
         s = _run(spark, job, spark.table(f"bt_counters_{job}"), out)
-        if job == "deid":
-            assert s["reconciled_docs"] == 120
     elif case == "resumed":
         _run(spark, job, docs, out, max_buckets_this_attempt=3)
-        _run(spark, job, docs, out)
+        s = _run(spark, job, docs, out)
     else:
         # the extraction job buckets the string-cast doc_id
         docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
         docs = docs.filter(bucket_expr(SALT, N_BUCKETS) != 3)  # bucket 3 empty
-        _run(spark, job, docs, out)
+        s = _run(spark, job, docs, out)
     got, want = _lineage_vs_data(out, "r1", N_BUCKETS, job)
     assert got == want
-    assert sum(v[0] for v in got.values()) == docs.count()
+    assert sum(v[0] for v in got.values()) == docs.count() == s["docs"]
     if case == "empty_bucket":
         assert got[3] == (0,) * len(_counters(job))
     if job == "extract":
         # the pages give both text and media spans to count
         assert sum(v[2] for v in got.values()) > 0
         assert sum(v[3] for v in got.values()) == docs.count()
+
+
+def _string_ids(docs):
+    return docs.withColumn("doc_id", F.col("doc_id").cast("string"))
+
+
+@pytest.mark.parametrize("job", JOBS)
+def test_stored_bucket_probe_guard(spark, tmp_path, job):
+    """A stored bucket column from a DIFFERENT salt fails the probe of the
+    first attempt, before any write, for both bucket-commit jobs (the
+    extraction job trusts a stored column as the deid job does)."""
+    from deidcm_spark.lineage import bucket_expr
+
+    wrong = _string_ids(_inputs(spark, job, 40)).withColumn(
+        "bucket", bucket_expr("other_salt", N_BUCKETS)
+    )
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="stored bucket column does not match"):
+        _run(spark, job, wrong, str(out))
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("job", JOBS)
+def test_stored_bucket_reconciliation_guard(spark, tmp_path, job):
+    """Mixed prepares: ~2% of the corpus was bucketed with 16 buckets
+    instead of 8, and stored AFTER 1 000 correctly bucketed rows, so the
+    1k-row probe passes.  The rows whose stored bucket lies outside
+    range(8) are never selected; the attempt that commits the last bucket
+    finds the committed total short of the source count and raises."""
+    from deidcm_spark.lineage import bucket_expr
+
+    stray = F.pmod(F.xxhash64("doc_id", F.lit("mix")), F.lit(50)) == 0
+    mixed = (
+        _string_ids(_inputs(spark, job, 1100))
+        .withColumn("_stray", stray)
+        .withColumn("bucket", F.when(F.col("_stray"), bucket_expr(SALT, 16))
+                    .otherwise(bucket_expr(SALT, N_BUCKETS)))
+    )
+    # one file, in order: every stray row after the first 1 000
+    path = str(tmp_path / "mixed")
+    mixed.orderBy("_stray").drop("_stray").coalesce(1).write.parquet(path)
+    stored = spark.read.parquet(path)
+    lost = stored.filter(f"bucket >= {N_BUCKETS}").count()
+    assert lost > 0 and stored.limit(1000).filter(f"bucket >= {N_BUCKETS}").count() == 0
+
+    out = str(tmp_path / "out")
+    s1 = _run(spark, job, stored, out, max_buckets_this_attempt=3)
+    assert s1["processed"] == 3  # no reconciliation before the last bucket
+    with pytest.raises(ValueError, match=f"committed {1100 - lost} documents "
+                                         "but the source has 1100"):
+        _run(spark, job, stored, out)
+
+
+@pytest.mark.parametrize("job", JOBS)
+def test_attempt_under_other_settings_raises(spark, tmp_path, job):
+    """The first attempt records the output's settings; a later attempt
+    into the same output under another salt, bucket count or input raises
+    before it writes anything, also once nothing is pending and also under
+    a new run_id (whose smaller bucket count would leave the old run's
+    higher bucket= partitions in data/).  The recorded settings resume the
+    run to completion."""
+    import os
+
+    from deidcm_spark.lineage import run_extract_job
+
+    for name in ("a", "b"):
+        _inputs(spark, job, 60).write.parquet(str(tmp_path / name))
+    src = spark.read.parquet(str(tmp_path / "a"))
+    out = str(tmp_path / "out")
+
+    def attempt(docs=src, salt=SALT, n_buckets=N_BUCKETS, run_id="r1", **kw):
+        if job == "deid":
+            return run_deid_job(spark, docs, out, ORG_ROOT, salt, n_buckets,
+                                run_id, **kw)
+        return run_extract_job(spark, docs, out, salt, n_buckets, run_id, **kw)
+
+    attempt(max_buckets_this_attempt=3)
+    data = sorted(os.listdir(f"{out}/data"))
+    other_input = spark.read.parquet(str(tmp_path / "b"))
+    for changed, kw in [("salt_sha256", {"salt": "other"}),
+                        ("n_buckets", {"n_buckets": 16}),
+                        ("n_buckets", {"n_buckets": 4, "run_id": "r2"}),
+                        ("input_files", {"docs": other_input})]:
+        with pytest.raises(ValueError, match=f"records other {changed} "):
+            attempt(**kw)
+    assert sorted(os.listdir(f"{out}/data")) == data
+    assert committed_buckets(spark, out, "r1") == {0, 1, 2}
+    assert attempt()["docs"] == 60
+    with pytest.raises(ValueError, match="records other salt_sha256 "):
+        attempt(salt="other")  # nothing pending
 
 
 @pytest.mark.parametrize("n_buckets", [0, -1])
@@ -580,7 +661,7 @@ def test_bucketed_reconciliation_reads_no_lineage_back(spark, tmp_path, monkeypa
                          n_buckets=N_BUCKETS)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert s["processed"] == N_BUCKETS and s["reconciled_docs"] == 200
+    assert s["processed"] == N_BUCKETS and s["docs"] == 200
     assert [p for p in reads if "_lineage" in str(p)] == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= 6, n_jobs

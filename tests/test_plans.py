@@ -39,13 +39,14 @@ def test_column_pruning_reaches_scan(spark):
     assert "ReadSchema: struct<l_orderkey:bigint>" in plan
 
 
-def test_deid_pipeline_single_exchange(spark):
+def test_deidentify_attributes_is_one_narrow_stage(spark):
+    """The deid operator is row-local: over an unpartitioned frame it plans
+    no exchange (the salted bucket repartition belongs to the bucket-commit
+    job) and exactly one vectorized Arrow kernel."""
     docs = corpus.synth_documents(spark, 50, seed=1)
-    out = deidentify_attributes(docs, "1.2.3", "s", num_partitions=4)
-    plan = _plan(out)
-    assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan  # vectorized arrow kernel, no per-span Python objects
-    assert "xxhash64" in plan
+    plan = _plan(deidentify_attributes(docs, "1.2.3", "s"))
+    assert plan.count("Exchange") == 0, plan
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_broadcast_join_for_small_dim(spark):

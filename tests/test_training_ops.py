@@ -292,6 +292,20 @@ def test_pack_sequences_empty_docs_emit_nothing(spark):
     ]
 
 
+@pytest.mark.parametrize("seq_len", [0, -2])
+def test_pack_sequences_rejects_seq_len_below_one(spark, docs, seq_len):
+    """seq_len 0 divided by zero at execution, a negative one packed
+    negative pieces; both are refused when the frame is built."""
+    with pytest.raises(ValueError, match="seq_len must be >= 1"):
+        textops.pack_sequences(docs, seq_len=seq_len)
+
+
+@pytest.mark.parametrize("capacity", [0, -2])
+def test_pack_shards_rejects_capacity_below_one(spark, docs, capacity):
+    with pytest.raises(ValueError, match="capacity_tokens must be >= 1"):
+        textops.pack_shards(docs, capacity_tokens=capacity)
+
+
 def test_pack_sequences_shuffled_order(spark):
     """order='shuffle': same pieces as the pure-Python re-derivation over
     the md5-keyed permutation; different seed -> different layout; same

@@ -44,7 +44,10 @@ def main() -> None:
     warm.agg(F.count("*")).collect()
 
     t0 = time.perf_counter()
-    out = deidentify_attributes(docs, "9.9.9.9.9", "scaling", num_partitions=n_partitions)
+    out = deidentify_attributes(
+        docs.repartition(n_partitions, F.xxhash64("doc_id", F.lit("scaling"))),
+        "9.9.9.9.9", "scaling",
+    )
     n_docs, n_spans = out.agg(
         F.count("*"), F.sum(F.size("spans"))
     ).collect()[0]
